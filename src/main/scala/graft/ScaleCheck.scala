@@ -138,7 +138,7 @@ object ScaleCheck {
         }.out.count()
       },
       // the ACTUAL out-of-process python path at corpus scale: one
-      // worker per partition, batched JSON-frame protocol — must scale
+      // worker per partition, batched frame protocol — must scale
       // with rows like the in-JVM script path above it
       t("xf_pyscript") {
         val out = org.apache.spark.sql.types.StructType(Seq(
@@ -151,25 +151,8 @@ object ScaleCheck {
           "def transform(record, emitter, context):\n" +
             "    emitter.emit({'doc_id': record['doc_id'], 'n': len(record['text'])})\n").out.count()
       },
-      // the same transform FORCED onto the JSON-frame protocol: the
-      // arrow-vs-json A/B that prices the wire codec (arrow is
-      // negotiated by default whenever pyarrow imports in the worker;
-      // this entry is the fallback's cost, the pair's ratio the
-      // protocol win)
-      t("xf_pyscript_json") {
-        val out = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.IntegerType)))
-        graft.transform.ProcessScriptTransform.python(
-          docs.select(col("doc_id"), col("text")), out,
-          "def transform(record, emitter, context):\n" +
-            "    emitter.emit({'doc_id': record['doc_id'], 'n': len(record['text'])})\n",
-          arrow = false).out.count()
-      },
       // the schema-driven BINARY/timestamp wire codec on that path:
-      // base64 + ISO-8601 conversion per record both directions
+      // side-bytes cells and epoch datetimes per record both directions
       t("xf_pybytes") {
         val out = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",

@@ -220,7 +220,7 @@ object Transforms {
     * language, ref Py4jPythonExecutor.java): the user script below is
     * reference-API-shaped (`transform(record, emitter, context)`,
     * `context.getArguments()`) and would run unchanged in the reference
-    * plugin. One python3 worker per partition, batched JSON frames —
+    * plugin. One python3 worker per partition, batched wire frames —
     * see [[graft.transform.ProcessScriptTransform]]. */
   def xfPyscript(spark: SparkSession, dir: String): DataFrame = {
     val out = StructType(Seq(
@@ -343,9 +343,9 @@ object Transforms {
     * the script receives real `bytes` and timezone-aware
     * `datetime.datetime` objects, slices/measures the bytes and does
     * datetime arithmetic, and emits bytes + timestamp + date back —
-    * every leg schema-driven through the base64/ISO-8601 wire codec
+    * every leg schema-driven through the side-bytes/epoch wire codec
     * ([[graft.transform.ProcessScriptTransform]] WireCodec + worker
-    * `_dec`/`_enc`), hash-verified against DuckDB's native BLOB and
+    * `_DEC`/`_ENC`), hash-verified against DuckDB's native BLOB and
     * TIMESTAMP arithmetic. */
   def xfPybytes(spark: SparkSession, dir: String): DataFrame = {
     val out = StructType(Seq(

@@ -1,12 +1,15 @@
 package graft.transform
 
-import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
+import java.io.{BufferedInputStream, BufferedOutputStream, BufferedReader, ByteArrayOutputStream,
+  DataInputStream, DataOutputStream, EOFException, InputStream, InputStreamReader, OutputStream}
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator, JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types._
 
 /** Out-of-process script execution — parity with the reference's Native
@@ -15,21 +18,37 @@ import org.apache.spark.sql.types._
   *
   * Re-expressed for Spark's execution model: each `mapPartitions` task
   * spawns one worker process (python3 running [[workerSource]], stdlib
-  * only) and speaks a BATCHED JSON-frame protocol over its stdin/stdout:
-  * records travel in [[BatchSize]]-record array frames and the worker's
-  * channel messages return in buffered array frames (flushed per input
-  * frame, and every [[WorkerFlushEvery]] messages inside one so a
-  * high-fan-out record can't buffer unboundedly). One json encode/parse
-  * and one pipe write per frame replaces the per-record line tax that
-  * dominated this path at corpus scale (measured 3-4x on the 2M-doc
-  * rehearsal); the script API stays strictly per-record. A dedicated
-  * writer thread streams frames in while the task thread reads frames
-  * out (the same two-thread shape Spark's own Python runner uses):
-  * neither side ever waits on a round trip, so throughput is
-  * pipeline-limited, and the bounded in-flight queue plus pipe
-  * backpressure bound memory — no deadlock however many rows a record
-  * emits. The worker count scales with partitions like any Spark stage;
-  * there is no driver round-trip.
+  * only) and speaks one length-prefixed frame format over its
+  * stdin/stdout, in both directions:
+  * {{{
+  * [type u8][json_len u32][UTF-8 JSON][n u32][n × len u32][side bytes]
+  * }}}
+  * (big-endian). Engine → worker: `I` init (script, arguments, lookups,
+  * wire descriptors), `R` a JSON array of [[BatchSize]] records, `E`
+  * end. Worker → engine: `B` a JSON array of channel messages
+  * (`["e", record]`, `["r", error]`, `["a", alert]`, `["f", msg]` for a
+  * record whose transform raised, `["dn", n]` for a run of n records
+  * that completed), then one `M` frame of metric counts. The worker
+  * flushes a `B` frame at the end of every input frame and whenever its
+  * buffer reaches [[WorkerFlushEvery]] messages or [[WorkerFlushBytes]]
+  * bytes, so a high-fan-out record can't buffer unboundedly; every
+  * frame carries its own side bytes. One json encode/parse and one pipe
+  * write per frame replaces a per-record line tax; the script API stays
+  * strictly per-record. A dedicated writer thread streams input frames
+  * straight from the rows into a Jackson generator while the task thread
+  * parses output frames with a streaming parser straight into output
+  * rows (the same two-thread shape Spark's own Python runner uses):
+  * neither side waits on a round trip, and the bounded in-flight queue
+  * plus pipe backpressure bound memory — no deadlock however many rows a
+  * record emits. The worker count scales with partitions like any Spark
+  * stage; there is no driver round-trip.
+  *
+  * The worker writes frames to a private duplicate of fd 1 and rebinds
+  * `sys.stdout` to stderr before it runs the script, so a script's
+  * `print()` lands in the executor log. Bytes written to fd 1 directly
+  * break the framing; the reader rejects an unknown type byte or an
+  * out-of-range length, and a stream that ends inside a frame reports
+  * `python worker died (exit=N)` naming the last record sent.
   *
   * Script contract matches the reference plugin, so a user's existing
   * script body runs unchanged:
@@ -47,85 +66,52 @@ import org.apache.spark.sql.types._
   * produces; logger output goes to the executor's stderr log and
   * per-level counts ride [[Metrics]] like the Scala path's ScriptLogger.
   *
-  * Value codec across the JSON boundary: null/boolean/integral/floating/
-  * string/array/map/struct (structs travel as JSON objects), plus the
-  * reference codec's BYTES and logical datetime types
-  * (ref: PythonObjectsEncoder.java:48,126,173): BINARY rides as base64,
-  * TIMESTAMP/DATE as ISO-8601 — schema-driven on BOTH sides of the pipe
-  * ([[WireCodec]] here, `_dec`/`_enc` in the worker), so the script sees
-  * real `bytes`/`datetime.datetime`/`datetime.date` objects and may emit
-  * them back, exactly like the reference. Union branches remain
-  * plain-typed on this path (the in-process path handles unions of any
-  * branch type natively).
+  * Value codec: null/boolean/integral/floating/string/array/map/struct
+  * travel as JSON (structs as objects), plus the reference codec's BYTES
+  * and logical datetime types (ref: PythonObjectsEncoder.java:48,126,173):
+  * a BINARY cell travels as an index into its frame's side bytes,
+  * TIMESTAMP as epoch micros, TIMESTAMP_NTZ as local micros and DATE as
+  * epoch days — schema-driven at any nesting depth on both sides of the
+  * pipe ([[WireCodec]] here, the worker's `_DEC`/`_ENC` converters
+  * compiled by `_mk`), so the script sees real `bytes`/`datetime.datetime`/
+  * `datetime.date` objects and may emit them back, exactly like the
+  * reference. The worker raises `TypeError` on the record's normal error
+  * path for any other value in such a field, except a `str`: scripts may
+  * emit base64 / ISO-8601 text pre-encoded, which the engine decodes.
+  * Union branches travel plain-typed on this path (the in-process path
+  * handles unions of any branch type natively).
   */
 object ProcessScriptTransform {
 
   /** Records per input frame. Sized so a frame of typical web documents
     * stays ~100s of KB (one pipe write, one json parse) while the
-    * in-flight queue (1024 records = 4 frames) still backpressures a
+    * in-flight queue (4 frames = 1024 records) still backpressures a
     * slow worker. */
   private[transform] val BatchSize = 256
 
-  /** Worker-side response-buffer cap: the emit buffer flushes as a
-    * frame whenever it reaches this many messages, bounding worker
-    * memory even when one record emits millions of rows. */
+  /** Worker-side response-buffer caps: the message buffer flushes as a
+    * frame whenever it reaches this many messages or bytes (JSON plus
+    * side bytes), bounding worker memory even when one record emits
+    * millions of rows. */
   private[transform] val WorkerFlushEvery = 4096
+  private[transform] val WorkerFlushBytes = 8 << 20
 
-  /** Records per ARROW frame. Arrow's per-frame overhead (IPC schema +
-    * stream setup + one pyarrow to_pylist/from_pylist call pair) is
-    * ~fixed per frame, so arrow frames run 16x larger than JSON frames
-    * — the pandas-UDF batch shape — putting that overhead at a fraction
-    * of a µs/record. Measured at 2M docs: 256-row arrow frames LOST to
-    * the JSON protocol (4.5 vs 2.5 s — framing overhead dominated);
-    * 4096-row frames is where the no-json-encode win shows. */
-  private[transform] val ArrowBatchSize = 4096
+  /** Upper bound on a frame's JSON length and on one side-bytes cell. A
+    * worker's frames stay near [[WorkerFlushBytes]] unless one message
+    * is that large; anything longer is stray output on the worker's
+    * stdout (text read as a length is ≥ 512 MiB), rejected before the
+    * reader waits for it. */
+  private[transform] val MaxFrameBytes = 256 << 20
 
-  /** Arrow negotiation is gated per PARTITION on input volume AND on
-    * schema shape, from paired ScaleCheck measurements on this class of
-    * host (r16, docgen corpus, 64 workers / 32 cores):
-    *
-    *  - CODEC-HEAVY schemas (binary/timestamp/date on either side —
-    *    [[WireCodec]] descriptor non-null): JSON pays base64 + ISO-8601
-    *    per cell in both directions, and arrow wins clearly at scale
-    *    (xf_pybytes-shape, 8M rows: arrow 13.2 s vs JSON 20.5 s). The
-    *    worker's `import pyarrow` is still a ~0.25 s (multi-second under
-    *    contention) fixed cost per worker, so tiny partitions must stay
-    *    on JSON: the task peeks the partition, buffering rows until
-    *    either threshold clears (→ offer arrow; buffered rows replay
-    *    first) or the input ends (→ JSON, no pyarrow import anywhere).
-    *    `graft.pyscript.arrowMinRows` (default 65536; ≤0 = always
-    *    offer) and `graft.pyscript.arrowMinBytes` (default 32m).
-    *
-    *  - PLAIN schemas (str/num only — JSON-native both ways): measured
-    *    marginal rates are EQUAL within noise (8→16M rows: arrow
-    *    ~2.7M rec/s vs JSON ~2.2-2.8M rec/s aggregate) while arrow
-    *    carries +2-5 s of fixed cost (imports + conversion setup), so
-    *    JSON dominates at every tested scale up to 250k rows/partition
-    *    — the earlier "3x at scale" reading did not reproduce under
-    *    paired A/B. Default: do not offer arrow (no peek, no import);
-    *    `graft.pyscript.arrowPlainMinRows` > 0 re-enables the same
-    *    peek gate at that row count for deployments whose profile
-    *    differs. */
-  private[transform] val ArrowMinRowsDefault = 65536
-  private[transform] val ArrowMinBytesDefault = 32L * 1024 * 1024
+  /** Frame type bytes. */
+  private val FInit = 'I'
+  private val FRecords = 'R'
+  private val FEnd = 'E'
+  private val FBatch = 'B'
+  private val FMetrics = 'M'
 
-  /** Cheap per-row payload estimate for the arrowMinBytes trigger —
-    * arrow-eligible schemas are flat scalars, so variable width lives
-    * only in string/binary cells (primitives count a flat word). */
-  private def approxRowBytes(r: Row, n: Int): Long = {
-    var b = 0L
-    var i = 0
-    while (i < n) {
-      r.get(i) match {
-        case null => ()
-        case s: String => b += s.length
-        case a: Array[Byte] => b += a.length
-        case _ => b += 8
-      }
-      i += 1
-    }
-    b
-  }
+  private val mapper = new ObjectMapper()
+  private[graft] val jsonFactory: JsonFactory = mapper.getFactory
 
   /** Configure-time script validation (ref: PythonEvaluator.java:224-243
     * compiles the script in configurePipeline so a typo fails the deploy,
@@ -140,10 +126,14 @@ object ProcessScriptTransform {
     * worker's normal per-record error channel instead). A `transform`
     * bound only inside an `if` block or other nested scope is rejected:
     * whether it exists would depend on executing the module. The whole check is bounded by a hard timeout as a
-    * second line of defense. Runs one driver-side python3 (~50 ms);
-    * throws IllegalArgumentException with the interpreter's message. */
+    * second line of defense. Runs one driver-side python3 (~50 ms) per
+    * distinct (script, pythonExec, env) — a success is remembered in a
+    * small bounded map, a failure never is; throws
+    * IllegalArgumentException with the interpreter's message. */
   def validate(script: String, pythonExec: String = "python3",
                env: Map[String, String] = Map.empty): Unit = {
+    val key = (script, pythonExec, env)
+    if (validated.containsKey(key)) return
     val checker =
       """import sys, ast
         |src = sys.stdin.read()
@@ -231,7 +221,16 @@ object ProcessScriptTransform {
     val err = errBytes.toString(StandardCharsets.UTF_8)
     if (proc.exitValue() != 0)
       throw new IllegalArgumentException(s"invalid transform script: $err")
+    validated.put(key, java.lang.Boolean.TRUE)
   }
+
+  /** Successful [[validate]] calls, least recently used evicted first. */
+  private val validated = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, String, Map[String, String]), java.lang.Boolean](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, String, Map[String, String]), java.lang.Boolean]): Boolean = size() > 64
+    })
 
   /** @param env extra environment variables for every spawned worker
     *   interpreter (and the configure-time validator) — the reference's
@@ -248,8 +247,7 @@ object ProcessScriptTransform {
              onError: ScriptTransform.ErrorPolicy = ScriptTransform.FailFast,
              pythonExec: String = "python3",
              parallelism: Int = 0,
-             env: Map[String, String] = Map.empty,
-             arrow: Boolean = true): TransformResult = {
+             env: Map[String, String] = Map.empty): TransformResult = {
     validate(script, pythonExec, env) // fail at configure time, not per task
     // torrent-broadcast once per executor (like the Scala path's
     // ScriptContext), not serialized into every task closure; no
@@ -272,65 +270,21 @@ object ProcessScriptTransform {
       StructField("_err", errSchema),
       StructField("_alert", MapType(StringType, StringType))))
     val worker = workerSource
-    val inFields = inSchema.fields
-    // wire-type descriptors: null (and zero per-record cost) unless the
-    // schema actually carries binary/datetime somewhere
+    val nIn = inSchema.length
+    // wire-type descriptors for the worker: null unless the schema
+    // carries binary/datetime somewhere (then the worker walks nothing)
     val inDesc = WireCodec.descriptor(inSchema)
     val outDesc = WireCodec.descriptor(outSchema)
-    // Arrow eligibility is decided here (flat scalar schemas only) and
-    // OFFERED in init; whether it is USED depends on (a) the partition
-    // clearing the size gate below and (b) the worker's negotiated
-    // answer (pyarrow importable) per partition
-    val sessConf = df.sparkSession.conf
-    // schema-shape split (see ArrowMinRowsDefault): arrow's measured win
-    // is the wire codec it removes — plain str/num schemas stay on JSON
-    // unless a deployment opts in
-    val codecHeavy = inDesc != null || outDesc != null
-    val arrowMinRows =
-      if (codecHeavy) sessConf.getOption("graft.pyscript.arrowMinRows")
-        .map(_.toInt).getOrElse(ArrowMinRowsDefault)
-      else sessConf.getOption("graft.pyscript.arrowPlainMinRows")
-        .map(_.toInt).getOrElse(Int.MaxValue)
-    val arrowMinBytes = sessConf.getOption("graft.pyscript.arrowMinBytes")
-      .map(_.toLong).getOrElse(ArrowMinBytesDefault)
-    val offerArrowStatic = arrow && arrowMinRows != Int.MaxValue &&
-      ArrowPipe.supported(inSchema) && ArrowPipe.supported(outSchema)
 
-    val tagged = in.mapPartitions { rows0 =>
-      if (!rows0.hasNext) Iterator.empty
+    val tagged = in.mapPartitions { rows =>
+      if (!rows.hasNext) Iterator.empty
       else {
-        // partition-size gate (see ArrowMinRowsDefault): peek-buffer the
-        // head of the partition; a partition that ends before either
-        // threshold speaks the JSON protocol and never pays the worker's
-        // pyarrow import. Buffered rows replay ahead of the live
-        // iterator, so record order and content are unchanged.
-        var offerArrow = offerArrowStatic
-        var rows: Iterator[Row] = rows0
-        if (offerArrowStatic && arrowMinRows > 0) {
-          val nf = inFields.length
-          val buf = new java.util.ArrayList[Row](
-            math.min(arrowMinRows, ArrowBatchSize))
-          var bytes = 0L
-          while (rows0.hasNext && buf.size < arrowMinRows &&
-              bytes < arrowMinBytes) {
-            val r = rows0.next()
-            buf.add(r)
-            bytes += approxRowBytes(r, nf)
-          }
-          offerArrow = buf.size >= arrowMinRows || bytes >= arrowMinBytes
-          rows = new Iterator[Row] {
-            private var i = 0
-            override def hasNext: Boolean = i < buf.size || rows0.hasNext
-            override def next(): Row =
-              if (i < buf.size) { val r = buf.get(i); i += 1; r }
-              else rows0.next()
-          }
-        }
-        val mapper = new ObjectMapper()
+        val inShape = new WireCodec.Struct(inSchema)
+        val outShape = new WireCodec.Struct(outSchema)
         val pb = new ProcessBuilder(pythonExec, "-c", worker)
         env.foreach { case (k, v) => pb.environment().put(k, v) }
         val proc = pb.start()
-        // stderr (script logger output, tracebacks) → executor log
+        // stderr (script print() and logger output, tracebacks) → executor log
         val drain = new Thread(() => {
           val r = new BufferedReader(new InputStreamReader(
             proc.getErrorStream, StandardCharsets.UTF_8))
@@ -339,139 +293,56 @@ object ProcessScriptTransform {
         }, "graft-pyscript-stderr")
         drain.setDaemon(true)
         drain.start()
-        val rawOut = proc.getOutputStream
-        val rawIn = proc.getInputStream
 
-        // init is written by the TASK thread (both modes) so arrow-mode
-        // negotiation can read the worker's one-line answer before any
-        // record framing begins
-        val init = new java.util.LinkedHashMap[String, Object]()
-        init.put("script", script)
-        init.put("arguments", JsonCodec.toJava(arguments))
-        init.put("lookups", JsonCodec.toJava(
-          if (bcLookups == null) Map.empty[String, Map[String, Any]]
-          else bcLookups.value))
-        if (inDesc != null) init.put("in_types", inDesc)
-        if (outDesc != null) init.put("out_types", outDesc)
-        if (offerArrow) {
-          init.put("arrow", java.lang.Integer.valueOf(1))
-          val oa = new java.util.ArrayList[Object]()
-          outSchema.fields.foreach { f =>
-            val e = new java.util.ArrayList[Object]()
-            e.add(f.name); e.add(ArrowPipe.kind(f.dataType).get)
-            oa.add(e)
-          }
-          init.put("out_arrow", oa)
-        }
-        rawOut.write((mapper.writeValueAsString(init) + "\n")
-          .getBytes(StandardCharsets.UTF_8))
-        rawOut.flush()
-        // negotiation: the worker answers {"t":"proto","arrow":bool} on
-        // ONE text line iff arrow was offered. Read it byte-wise —
-        // nothing may buffer past the '\n', the framed binary protocol
-        // starts right after it when accepted.
-        val arrowMode = offerArrow && {
-          val sb = new java.lang.StringBuilder()
-          var b = rawIn.read()
-          while (b != -1 && b != '\n') { sb.append(b.toChar); b = rawIn.read() }
-          if (b == -1) false
-          else {
-            val m = mapper.readValue(sb.toString,
-              classOf[java.util.Map[String, Object]])
-            "proto" == m.get("t") &&
-              java.lang.Boolean.TRUE.equals(m.get("arrow"))
-          }
-        }
-        // legacy text-protocol streams (unused in arrow mode)
-        val stdin = if (arrowMode) null else new BufferedWriter(
-          new OutputStreamWriter(rawOut, StandardCharsets.UTF_8))
-        val stdout = if (arrowMode) null else new BufferedReader(
-          new InputStreamReader(rawIn, StandardCharsets.UTF_8))
-
-        // records the writer has sent whose completion marker ("d"/"f")
-        // the reader has not yet seen — bounded, so a slow worker
-        // backpressures the writer instead of buffering the partition.
-        // Text mode tracks individual record maps; arrow mode tracks
-        // whole Row BATCHES (one queue op per frame instead of per
-        // record, and no per-record Map materialization — the reader
-        // walks a cursor and converts a Row to a map only when a record
-        // actually fails).
-        val pending = new java.util.concurrent.LinkedBlockingQueue[Map[String, Any]](1024)
-        val pendingBatches =
+        // Row batches the writer has sent whose records' completion
+        // ("dn"/"f") the reader has not yet seen — bounded, so a slow
+        // worker backpressures the writer instead of buffering the
+        // partition. The reader walks a cursor over them and touches a
+        // Row again only when its record fails.
+        val pending =
           new java.util.concurrent.LinkedBlockingQueue[java.util.ArrayList[Row]](4)
+        val lastSent = new java.util.concurrent.atomic.AtomicReference[Row]()
         val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
         val tc = TaskContext.get()
         val writer = new Thread(() => {
           try {
             if (tc != null) org.apache.spark.graft.TaskContextBridge.set(tc)
-            if (arrowMode) {
-              // Arrow framing: one IPC-stream payload per BatchSize
-              // records — no per-record (or per-frame) json encode at
-              // all. `pending` still gains each record BEFORE its frame
-              // is written, so "f"/"dn" markers name records exactly as
-              // in the text protocol.
-              val allocator = new org.apache.arrow.memory.RootAllocator()
-              val root = org.apache.arrow.vector.VectorSchemaRoot.create(
-                ArrowPipe.schemaFor(inSchema), allocator)
-              try {
-                var batch = new java.util.ArrayList[Row](ArrowBatchSize)
-                def writeBatchFrame(): Unit = {
-                  // the reader takes OWNERSHIP of the batch list (its
-                  // pending cursor walks it), so a fresh list replaces
-                  // it instead of clear(); the 4-batch queue bound is
-                  // the in-flight backpressure
-                  pendingBatches.put(batch) // BEFORE the write
-                  val payload = ArrowPipe.writeBatchRows(batch, inSchema, root)
-                  ArrowPipe.writeFrame(rawOut, 'A'.toByte, payload)
-                  rawOut.flush()
-                  batch = new java.util.ArrayList[Row](ArrowBatchSize)
-                }
-                while (rows.hasNext) {
-                  batch.add(rows.next())
-                  if (batch.size >= ArrowBatchSize) writeBatchFrame()
-                }
-                if (!batch.isEmpty) writeBatchFrame()
-                ArrowPipe.writeFrame(rawOut, 'J'.toByte,
-                  "{\"t\":\"end\"}".getBytes(StandardCharsets.UTF_8))
-                rawOut.flush()
-              } finally {
-                try { root.close(); allocator.close() }
-                catch { case _: Throwable => () }
+            val out = new FrameOut(proc.getOutputStream)
+            val init = new java.util.LinkedHashMap[String, Object]()
+            init.put("script", script)
+            init.put("arguments", JsonCodec.toJava(arguments))
+            init.put("lookups", JsonCodec.toJava(
+              if (bcLookups == null) Map.empty[String, Map[String, Any]]
+              else bcLookups.value))
+            if (inDesc != null) init.put("in_types", inDesc)
+            if (outDesc != null) init.put("out_types", outDesc)
+            out.json.write(mapper.writeValueAsBytes(init))
+            out.send(FInit)
+            var batch = new java.util.ArrayList[Row](BatchSize)
+            def sendBatch(): Unit = {
+              // the reader takes ownership of the list (its cursor walks
+              // it), so a fresh list replaces it; BEFORE the write, so
+              // the reader always finds the records its markers name
+              pending.put(batch)
+              val g = jsonFactory.createGenerator(out.json)
+              g.writeStartArray()
+              var i = 0
+              while (i < batch.size) {
+                WireCodec.writeStruct(g, batch.get(i), inShape, out.side)
+                i += 1
               }
-            } else {
-              // records travel in BatchSize-array frames: ONE json encode
-              // + one pipe write per frame (the per-record line tax was
-              // the measured bottleneck of this path at corpus scale).
-              // Each record still enters `pending` individually BEFORE its
-              // frame is written, so the reader's per-record "d"/"f"
-              // markers keep naming failing records exactly as before.
-              val batch = new java.util.ArrayList[Object](BatchSize)
-              def writeFrame(): Unit = {
-                val m = new java.util.LinkedHashMap[String, Object]()
-                m.put("t", "rb")
-                m.put("d", batch)
-                stdin.write(mapper.writeValueAsString(m)); stdin.write("\n")
-                // flush per frame (cheap amortized over BatchSize records):
-                // a frame held in the BufferedWriter while the writer
-                // blocks on pending.put would idle the worker
-                stdin.flush()
-                batch.clear()
-              }
-              while (rows.hasNext) {
-                val record = SchemaCodec.rowToMap(rows.next(), inSchema)
-                pending.put(record) // BEFORE the write: reader must find it
-                val wire =
-                  if (inDesc == null) record
-                  else WireCodec.mapToWire(record, inSchema)
-                batch.add(JsonCodec.toJava(wire))
-                if (batch.size >= BatchSize) writeFrame()
-              }
-              if (!batch.isEmpty) writeFrame()
-              val end = new java.util.LinkedHashMap[String, Object]()
-              end.put("t", "end")
-              stdin.write(mapper.writeValueAsString(end)); stdin.write("\n")
-              stdin.flush()
+              g.writeEndArray()
+              g.close()
+              lastSent.set(batch.get(batch.size - 1))
+              out.send(FRecords)
+              batch = new java.util.ArrayList[Row](BatchSize)
             }
+            while (rows.hasNext) {
+              batch.add(rows.next())
+              if (batch.size >= BatchSize) sendBatch()
+            }
+            if (!batch.isEmpty) sendBatch()
+            out.send(FEnd)
           } catch {
             case t: Throwable =>
               writerError.set(t)
@@ -484,157 +355,142 @@ object ProcessScriptTransform {
         })
         writer.start()
 
-        def errRow(code: Int, msg: String, bad: Map[String, Any]): Row = {
-          val values = new Array[Any](inFields.length + 2)
+        def errRow(code: Int, msg: String, bad: Row): Row = {
+          val values = new Array[Any](nIn + 2)
           values(0) = code
           values(1) = msg
-          var i = 0
-          while (i < inFields.length) {
-            values(i + 2) = SchemaCodec.encode(
-              bad.getOrElse(inFields(i).name, null), inFields(i).dataType)
-            i += 1
+          if (bad != null) {
+            var i = 0
+            while (i < nIn) { values(i + 2) = bad.get(i); i += 1 }
           }
-          Row("err", null,
-            new org.apache.spark.sql.catalyst.expressions.GenericRow(values), null)
+          Row("err", null, new GenericRow(values), null)
         }
 
-        // responses arrive in record order (the worker is sequential);
-        // "d"/"f" markers advance the pending queue so "f" can name the
-        // record that failed
+        // messages arrive in record order (the worker is sequential);
+        // "dn"/"f" advance the pending cursor so "f" can name the record
+        // that failed
         new Iterator[Row] {
+          private val frames = new FrameIn(proc.getInputStream)
+          private var p: JsonParser = null // inside the current B frame's array
           private var nextRow: Row = null
           private var finished = false
+          private def lastRecord: String = {
+            val r = lastSent.get()
+            if (r == null) "none" else r.toString.take(256)
+          }
           private def fail(why: String): Nothing = {
+            // a writer that failed on its own (not on the pipe a dying
+            // worker broke) is the root cause
             val cause = writerError.get()
-            if (cause != null) throw new IllegalStateException(
-              s"python worker input stream failed: $cause", cause)
-            throw new IllegalStateException(why)
+            if (cause != null && !cause.isInstanceOf[java.io.IOException])
+              throw new IllegalStateException(
+                s"python worker input stream failed: $cause", cause)
+            throw new IllegalStateException(s"$why; last record sent: $lastRecord", cause)
           }
-          // decoded output rows of the current arrow frame (arrow mode)
-          private val rowQ = new java.util.ArrayDeque[Array[Any]]()
-          // reader-side allocator for incoming IPC payloads (arrow mode)
-          private lazy val readAllocator = {
-            val a = new org.apache.arrow.memory.RootAllocator()
-            Option(tc).foreach(_.addTaskCompletionListener[Unit] { _ =>
-              try a.close() catch { case _: Throwable => () }
-            })
-            a
+          private def died(): Nothing = {
+            val exit =
+              if (proc.waitFor(5, java.util.concurrent.TimeUnit.SECONDS))
+                proc.exitValue().toString
+              else "alive"
+            fail(s"python worker died (exit=$exit)")
           }
-          // arrow-mode pending cursor over the writer's Row batches:
-          // advance n positions, return the LAST row touched (null only
-          // on a protocol violation — markers never outrun frames)
           private var curBatch: java.util.ArrayList[Row] = null
           private var curIdx = 0
+          /** Advance the pending cursor n records; the last Row passed
+            * (null only if the worker names records it was never sent). */
           private def pendingAdvance(n0: Int): Row = {
             var last: Row = null
             var n = n0
             while (n > 0) {
               if (curBatch == null || curIdx >= curBatch.size()) {
-                curBatch = pendingBatches.poll(); curIdx = 0
+                curBatch = pending.poll(); curIdx = 0
                 if (curBatch == null) return null
               }
               last = curBatch.get(curIdx); curIdx += 1; n -= 1
             }
             last
           }
-          // messages of the current response frame not yet dispatched
-          private val frameQ = new java.util.ArrayDeque[java.util.Map[String, Object]]()
-          /** Refill rowQ/frameQ from the next top-level frame (arrow
-            * mode) or line (text mode); top-level non-"bb" messages
-            * enqueue as singletons. */
-          private def readTop(): Unit = {
-            if (arrowMode) {
-              val fr = ArrowPipe.readFrame(rawIn)
-              if (fr == null) fail(
-                s"python worker died (exit=${if (proc.isAlive) "alive" else proc.exitValue()})")
-              if (fr._1 == 'A'.toByte) {
-                val rows = ArrowPipe.readBatch(fr._2, outSchema, readAllocator)
-                var i = 0
-                while (i < rows.size()) { rowQ.add(rows.get(i)); i += 1 }
-              } else {
-                val top = mapper.readValue(fr._2,
-                  classOf[java.util.Map[String, Object]])
-                if (top.get("t").asInstanceOf[String] == "bb")
-                  top.get("d").asInstanceOf[java.util.List[Object]].forEach(
-                    m => frameQ.add(m.asInstanceOf[java.util.Map[String, Object]]))
-                else frameQ.add(top)
+          private def readFrame(): Unit = {
+            val ok =
+              try frames.next()
+              catch {
+                case _: EOFException => died()
+                case e: FrameError => fail(s"python worker protocol error: ${e.getMessage}")
               }
-            } else {
-              val line = stdout.readLine()
-              if (line == null) fail(
-                s"python worker died (exit=${if (proc.isAlive) "alive" else proc.exitValue()})")
-              val top = mapper.readValue(line, classOf[java.util.Map[String, Object]])
-              if (top.get("t").asInstanceOf[String] == "bb")
-                top.get("d").asInstanceOf[java.util.List[Object]].forEach(
-                  m => frameQ.add(m.asInstanceOf[java.util.Map[String, Object]]))
-              else frameQ.add(top) // "m" metrics (and any future top-level frame)
+            if (!ok) died()
+            val q = jsonFactory.createParser(frames.json)
+            if (frames.tpe == FBatch) {
+              if (q.nextToken() != JsonToken.START_ARRAY)
+                fail("python worker protocol error: a B frame must hold a JSON array")
+              p = q
+            } else { // FMetrics: end of stream
+              if (q.nextToken() == JsonToken.START_OBJECT)
+                while (q.nextToken() == JsonToken.FIELD_NAME) {
+                  val k = q.currentName()
+                  q.nextToken()
+                  metrics.count(k, q.getLongValue)
+                }
+              q.close()
+              proc.waitFor()
+              finished = true
             }
+          }
+          private def message(): Unit = {
+            val side = frames.side
+            p.nextToken()
+            val tag = p.getText
+            p.nextToken()
+            tag match {
+              case "e" =>
+                if (p.currentToken() != JsonToken.START_OBJECT)
+                  throw new IllegalArgumentException(
+                    s"emit expects a dict record, got ${WireCodec.readAny(p)}")
+                nextRow = Row("out", WireCodec.readStruct(p, outShape, side), null, null)
+              case "r" =>
+                var code: Any = 0
+                var msg = ""
+                var bad: Row = null
+                if (p.currentToken() == JsonToken.START_OBJECT)
+                  while (p.nextToken() == JsonToken.FIELD_NAME) {
+                    val k = p.currentName()
+                    p.nextToken()
+                    k match {
+                      case "errorCode" => code = WireCodec.readAny(p)
+                      case "errorMsg" => msg = String.valueOf(WireCodec.readAny(p))
+                      case "invalidRecord" if p.currentToken() == JsonToken.START_OBJECT =>
+                        bad = WireCodec.readStruct(p, inShape, side)
+                      case _ => p.skipChildren()
+                    }
+                  }
+                nextRow = errRow(code.asInstanceOf[Number].intValue(), msg, bad)
+              case "a" =>
+                nextRow = Row("alert", null, null,
+                  WireCodec.readAny(p).asInstanceOf[Map[String, Any]]
+                    .map { case (k, v) => k -> String.valueOf(v) })
+              case "dn" =>
+                pendingAdvance(p.getIntValue)
+              case "f" =>
+                // a failing record's "f" stands in for its done marker
+                val bad = pendingAdvance(1)
+                val err = p.getText
+                onError match {
+                  case ScriptTransform.FailFast =>
+                    throw new RuntimeException(s"python transform failed: $err")
+                  case ScriptTransform.RouteToErrors(code) =>
+                    nextRow = errRow(code, err, bad)
+                }
+              case other => fail(s"python worker protocol error: unknown message '$other'")
+            }
+            if (p.nextToken() != JsonToken.END_ARRAY)
+              fail(s"python worker protocol error: trailing values in a '$tag' message")
           }
           private def advance(): Unit = {
             while (nextRow == null && !finished) {
-              if (!rowQ.isEmpty) {
-                nextRow = Row("out",
-                  new org.apache.spark.sql.catalyst.expressions.GenericRow(
-                    rowQ.poll()), null, null)
-              } else if (frameQ.isEmpty) {
-                readTop()
-              } else {
-                val msg = frameQ.poll()
-                msg.get("t").asInstanceOf[String] match {
-                case "e" =>
-                  val raw = JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
-                  nextRow = Row("out", SchemaCodec.mapToRow(
-                    if (outDesc == null) raw
-                    else WireCodec.mapFromWire(raw, outSchema),
-                    outSchema), null, null)
-                case "r" =>
-                  val e = JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
-                  val badRaw = e.getOrElse("invalidRecord", Map.empty[String, Any])
-                    .asInstanceOf[Map[String, Any]]
-                  nextRow = errRow(
-                    e.getOrElse("errorCode", 0).asInstanceOf[Number].intValue(),
-                    String.valueOf(e.getOrElse("errorMsg", "")),
-                    if (inDesc == null) badRaw
-                    else WireCodec.mapFromWire(badRaw, inSchema))
-                case "a" =>
-                  nextRow = Row("alert", null, null,
-                    JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
-                      .map { case (k, v) => k -> String.valueOf(v) })
-                case "d" =>
-                  if (arrowMode) pendingAdvance(1) else pending.poll()
-                case "dn" =>
-                  // run-length done marker (arrow mode): n consecutive
-                  // successes advance pending in one message
-                  val n = msg.get("n").asInstanceOf[Number].intValue()
-                  if (arrowMode) pendingAdvance(n)
-                  else { var i = n; while (i > 0) { pending.poll(); i -= 1 } }
-                case "f" =>
-                  // "f" REPLACES the "d" done-marker for the failing record
-                  // (map conversion only here — the hot path never pays it)
-                  val bad =
-                    if (arrowMode) {
-                      val r = pendingAdvance(1)
-                      if (r == null) null else SchemaCodec.rowToMap(r, inSchema)
-                    } else pending.poll()
-                  val err = String.valueOf(msg.get("m"))
-                  onError match {
-                    case ScriptTransform.FailFast =>
-                      throw new RuntimeException(s"python transform failed: $err")
-                    case ScriptTransform.RouteToErrors(code) =>
-                      nextRow = errRow(code, err,
-                        if (bad == null) Map.empty else bad)
-                  }
-                case "m" =>
-                  // end-of-stream: fold worker-side metric counts into the
-                  // stage accumulators, reap the process
-                  val counts = JsonCodec.toScala(msg.get("c"))
-                    .asInstanceOf[Map[String, Any]]
-                  counts.foreach { case (k, v) =>
-                    metrics.count(k, v.asInstanceOf[Number].longValue()) }
-                  proc.waitFor()
-                  finished = true
-                case other => fail(s"unknown worker message '$other'")
-                }
+              if (p == null) readFrame()
+              else p.nextToken() match {
+                case JsonToken.START_ARRAY => message()
+                case JsonToken.END_ARRAY => p.close(); p = null
+                case t => fail(s"python worker protocol error: unexpected $t in a B frame")
               }
             }
           }
@@ -651,72 +507,241 @@ object ProcessScriptTransform {
     TransformResult(tagged.toDF(), outSchema, errSchema)
   }
 
+  /** A frame the worker sent that the format cannot hold. */
+  private final class FrameError(msg: String) extends Exception(msg)
+
+  /** Writes frames to the worker: fill [[json]] and [[side]], then [[send]]. */
+  private final class FrameOut(raw: OutputStream) {
+    private val out = new DataOutputStream(new BufferedOutputStream(raw, 1 << 16))
+    val json = new ByteArrayOutputStream(1 << 16)
+    val side = new java.util.ArrayList[Array[Byte]]()
+    def send(tpe: Char): Unit = {
+      out.writeByte(tpe)
+      out.writeInt(json.size())
+      json.writeTo(out)
+      val n = side.size()
+      out.writeInt(n)
+      var i = 0
+      while (i < n) { out.writeInt(side.get(i).length); i += 1 }
+      i = 0
+      while (i < n) { out.write(side.get(i)); i += 1 }
+      // flush per frame (cheap amortized over BatchSize records): a frame
+      // held in the buffer while the writer blocks on `pending` would
+      // idle the worker
+      out.flush()
+      json.reset()
+      side.clear()
+    }
+  }
+
+  /** Reads the worker's frames; [[next]] is false at a clean end of
+    * stream, and throws EOFException when the stream ends inside a frame
+    * and [[FrameError]] on a type byte or length the format cannot hold. */
+  private final class FrameIn(raw: InputStream) {
+    private val in = new DataInputStream(new BufferedInputStream(raw, 1 << 16))
+    var tpe: Char = 0
+    var json: Array[Byte] = null
+    var side: Array[Array[Byte]] = null
+    private def length(what: String, max: Int): Int = {
+      val n = in.readInt()
+      if (n < 0 || n > max) throw new FrameError(s"$what $n out of range [0, $max]")
+      n
+    }
+    // readNBytes grows its buffer as bytes arrive, so a bogus length
+    // never allocates more than the stream actually holds
+    private def bytes(n: Int): Array[Byte] = {
+      val b = in.readNBytes(n)
+      if (b.length < n) throw new EOFException()
+      b
+    }
+    def next(): Boolean = {
+      val t = in.read()
+      if (t < 0) return false
+      if (t != FBatch && t != FMetrics)
+        throw new FrameError(f"unknown frame type 0x$t%02x (stray bytes on the worker's stdout?)")
+      tpe = t.toChar
+      val jl = length("frame JSON length", MaxFrameBytes)
+      json = bytes(jl)
+      // every side cell is named by an index in the JSON
+      val n = length("side-bytes count", jl)
+      val lens = new Array[Int](n)
+      var i = 0
+      while (i < n) { lens(i) = length("side-bytes length", MaxFrameBytes); i += 1 }
+      side = new Array[Array[Byte]](n)
+      i = 0
+      while (i < n) { side(i) = bytes(lens(i)); i += 1 }
+      true
+    }
+  }
+
   /** The worker harness, Python stdlib only. Mirrors the reference's
     * script surface (ref: PythonEvaluator.java:261-287): `transform`
     * entry point, emitter with three channels, context with
     * getArguments/getLogger/getMetrics (attribute access works too). */
   private[transform] val workerSource: String =
-    """import sys, json, base64, datetime
+    """import sys, os, json, struct, datetime
       |
-      |# channel messages buffer and leave as ARRAY FRAMES ({"t":"bb",
-      |# "d":[...]}): one json.dumps + one pipe write per frame instead of
-      |# per message. Flushed at the end of every input frame (bounded
-      |# reader latency) and whenever the buffer hits the cap (bounded
-      |# memory however many rows one record emits).
-      |_buf = []
+      |# frames, both directions: [type u8][json_len u32][UTF-8 JSON]
+      |# [n u32][n x len u32][side bytes], big-endian. In: I(nit),
+      |# R(ecords), E(nd); out: B(atch of channel messages), M(etrics).
+      |# Frames leave through a private duplicate of fd 1; sys.stdout is
+      |# rebound to stderr before the script runs, so print() lands in the
+      |# executor log instead of the frame stream.
+      |_rin = sys.stdin.buffer
+      |_wout = os.fdopen(os.dup(1), "wb")
+      |sys.stdout = sys.stderr
+      |_H = struct.Struct(">BI")
+      |_U32 = struct.Struct(">I")
+      |
+      |def _read_exact(n):
+      |    b = _rin.read(n)
+      |    if len(b) != n:
+      |        raise EOFError("input ended inside a frame")
+      |    return b
+      |
+      |def _read_frame():
+      |    h = _rin.read(5)
+      |    if len(h) < 5:
+      |        return None, None, None
+      |    t, jl = _H.unpack(h)
+      |    j = _read_exact(jl)
+      |    n = _U32.unpack(_read_exact(4))[0]
+      |    side = []
+      |    if n:
+      |        lens = struct.unpack(">%dI" % n, _read_exact(4 * n))
+      |        blob = _read_exact(sum(lens))
+      |        o = 0
+      |        for ln in lens:
+      |            side.append(blob[o:o + ln])
+      |            o += ln
+      |    return t, j, side
+      |
+      |def _frame(t, j, side):
+      |    _wout.write(_H.pack(t, len(j)))
+      |    _wout.write(j)
+      |    _wout.write(struct.pack(">%dI" % (len(side) + 1), len(side), *[len(b) for b in side]))
+      |    _wout.writelines(side)
+      |    _wout.flush()
+      |
+      |# channel messages buffer as JSON text and leave as one B frame:
+      |# flushed at the end of every input frame (bounded reader latency)
+      |# and whenever the buffer hits a cap (bounded memory however many
+      |# rows one record emits). Each frame carries its own side bytes.
+      |_parts = []
+      |_oside = []
+      |_nbytes = 0
+      |_drun = 0  # records completed since the last "dn" marker
       |_FLUSH_EVERY = %FLUSH_EVERY%
+      |_FLUSH_BYTES = %FLUSH_BYTES%
+      |_dumps = json.dumps
       |
       |def _flushbuf():
-      |    if _buf:
-      |        sys.stdout.write(json.dumps({"t": "bb", "d": _buf}))
-      |        sys.stdout.write("\n")
-      |        sys.stdout.flush()
-      |        del _buf[:]
+      |    global _nbytes, _drun
+      |    if _drun:
+      |        _parts.append('["dn",%d]' % _drun)
+      |        _drun = 0
+      |    if _parts:
+      |        _frame(66, ("[" + ",".join(_parts) + "]").encode(), _oside)
+      |        del _parts[:]
+      |        del _oside[:]
+      |        _nbytes = 0
       |
-      |def _w(obj):
-      |    _buf.append(obj)
-      |    if len(_buf) >= _FLUSH_EVERY:
+      |def _w(s):
+      |    global _nbytes
+      |    _parts.append(s)
+      |    _nbytes += len(s)
+      |    if len(_parts) >= _FLUSH_EVERY or _nbytes >= _FLUSH_BYTES:
       |        _flushbuf()
       |
-      |def _dec(v, t):
-      |    # wire -> script types, driven by the schema descriptor: base64
-      |    # str -> bytes, ISO str -> datetime/date (the reference codec's
-      |    # BYTES and logical types, PythonObjectsEncoder-equivalent)
-      |    if v is None or t is None:
-      |        return v
-      |    k = t["k"]
-      |    if k == "bin": return base64.b64decode(v)
-      |    if k == "ts" or k == "ntz": return datetime.datetime.fromisoformat(v)
-      |    if k == "date": return datetime.date.fromisoformat(v)
-      |    if k == "arr": return [_dec(x, t["e"]) for x in v]
-      |    if k == "map": return {kk: _dec(x, t["v"]) for kk, x in v.items()}
-      |    if k == "struct":
-      |        f = t["f"]
-      |        return {kk: _dec(x, f[kk]) if kk in f else x for kk, x in v.items()}
-      |    return v
+      |def _fail(msg):
+      |    # "f" stands in for the failing record's done marker, so the
+      |    # run before it must be reported first
+      |    global _drun
+      |    if _drun:
+      |        _parts.append('["dn",%d]' % _drun)
+      |        _drun = 0
+      |    _w(_dumps(["f", msg]))
       |
-      |def _enc(v, t):
-      |    # script -> wire types: bytes -> base64 str, datetime -> ISO str
-      |    # (strings pass through untouched, so scripts may also emit
-      |    # pre-encoded values)
-      |    if v is None or t is None:
+      |# BINARY travels as an index into the frame's side bytes, TIMESTAMP
+      |# as epoch micros, TIMESTAMP_NTZ as local micros, DATE as epoch days
+      |_td = datetime.timedelta
+      |_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+      |_EPOCH_NTZ = datetime.datetime(1970, 1, 1)
+      |_US = _td(microseconds=1)
+      |_DAY0 = 719163  # date(1970, 1, 1).toordinal()
+      |_DAY_US = 86400000000
+      |_side_in = []
+      |
+      |def _enc_bin(v):
+      |    global _nbytes
+      |    if isinstance(v, (bytes, bytearray, memoryview)):
+      |        v = bytes(v)
+      |        _oside.append(v)
+      |        _nbytes += len(v)
+      |        return len(_oside) - 1
+      |    if isinstance(v, str):
+      |        return v  # pre-encoded base64
+      |    raise TypeError("BINARY field needs bytes or str, got %s" % type(v).__name__)
+      |
+      |def _enc_ts(v):
+      |    if isinstance(v, datetime.datetime):
+      |        if v.tzinfo is None:
+      |            v = v.replace(tzinfo=datetime.timezone.utc)  # naive = UTC
+      |        return (v - _EPOCH) // _US
+      |    if isinstance(v, datetime.date):
+      |        return (v.toordinal() - _DAY0) * _DAY_US
+      |    if isinstance(v, str):
+      |        return v  # pre-encoded ISO-8601
+      |    raise TypeError("TIMESTAMP field needs datetime, date or str, got %s" % type(v).__name__)
+      |
+      |def _enc_ntz(v):
+      |    if isinstance(v, datetime.datetime):
+      |        return (v.replace(tzinfo=None) - _EPOCH_NTZ) // _US  # wall clock
+      |    if isinstance(v, datetime.date):
+      |        return (v.toordinal() - _DAY0) * _DAY_US
+      |    if isinstance(v, str):
       |        return v
+      |    raise TypeError("TIMESTAMP_NTZ field needs datetime, date or str, got %s" % type(v).__name__)
+      |
+      |def _enc_date(v):
+      |    if isinstance(v, datetime.datetime):
+      |        v = v.date()
+      |    if isinstance(v, datetime.date):
+      |        return v.toordinal() - _DAY0
+      |    if isinstance(v, str):
+      |        return v
+      |    raise TypeError("DATE field needs date, datetime or str, got %s" % type(v).__name__)
+      |
+      |_DEC = {"bin": lambda v: _side_in[v],
+      |        "ts": lambda v: _EPOCH + _td(microseconds=v),
+      |        "ntz": lambda v: _EPOCH_NTZ + _td(microseconds=v),
+      |        "date": lambda v: datetime.date.fromordinal(v + _DAY0)}
+      |_ENC = {"bin": _enc_bin, "ts": _enc_ts, "ntz": _enc_ntz, "date": _enc_date}
+      |
+      |def _mk(t, leaf, copy):
+      |    # compile a schema descriptor into a converter that touches only
+      |    # the fields that need it; `copy` leaves the script's dicts intact
+      |    if t is None:
+      |        return None
       |    k = t["k"]
-      |    if k == "bin":
-      |        if isinstance(v, (bytes, bytearray, memoryview)):
-      |            return base64.b64encode(bytes(v)).decode("ascii")
+      |    if k in leaf:
+      |        return leaf[k]
+      |    if k == "arr":
+      |        e = _mk(t["e"], leaf, copy)
+      |        return lambda v: [None if x is None else e(x) for x in v]
+      |    if k == "map":
+      |        e = _mk(t["v"], leaf, copy)
+      |        return lambda v: {kk: None if x is None else e(x) for kk, x in v.items()}
+      |    fs = [(n, _mk(ft, leaf, copy)) for n, ft in t["f"].items()]
+      |    def conv(v):
+      |        if copy:
+      |            v = dict(v)
+      |        for n, c in fs:
+      |            x = v.get(n)
+      |            if x is not None:
+      |                v[n] = c(x)
       |        return v
-      |    if k == "ts" or k == "ntz":
-      |        return v.isoformat() if isinstance(v, datetime.datetime) else v
-      |    if k == "date":
-      |        if isinstance(v, datetime.datetime): return v.date().isoformat()
-      |        return v.isoformat() if isinstance(v, datetime.date) else v
-      |    if k == "arr": return [_enc(x, t["e"]) for x in v]
-      |    if k == "map": return {kk: _enc(x, t["v"]) for kk, x in v.items()}
-      |    if k == "struct":
-      |        f = t["f"]
-      |        return {kk: _enc(x, f[kk]) if kk in f else x for kk, x in v.items()}
-      |    return v
+      |    return conv
       |
       |_counts = {}
       |
@@ -734,16 +759,27 @@ object ProcessScriptTransform {
       |    def warn(self, msg): self._log("warn", msg)
       |    def error(self, msg): self._log("error", msg)
       |
+      |def _msg(tag, v, enc):
+      |    # encode one message now, so a value that cannot travel fails the
+      |    # record that emitted it; its side bytes go with it
+      |    m = len(_oside)
+      |    try:
+      |        _w('["%s",%s]' % (tag, _dumps(v if enc is None else enc(v))))
+      |    except BaseException:
+      |        del _oside[m:]
+      |        raise
+      |
       |class _Emitter(object):
       |    def emit(self, record):
-      |        _w({"t": "e", "d": _enc(record, _out_types)})
+      |        _msg("e", record, _enc_out)
       |    def emitError(self, err):
-      |        if _in_types is not None and isinstance(err, dict) \
+      |        if _enc_in is not None and isinstance(err, dict) \
       |                and isinstance(err.get("invalidRecord"), dict):
       |            err = dict(err)
-      |            err["invalidRecord"] = _enc(err["invalidRecord"], _in_types)
-      |        _w({"t": "r", "d": err})
-      |    def emitAlert(self, payload): _w({"t": "a", "d": payload})
+      |            err["invalidRecord"] = _enc_in(err["invalidRecord"])
+      |        _msg("r", err, None)
+      |    def emitAlert(self, payload):
+      |        _msg("a", payload, None)
       |
       |class _Context(object):
       |    def __init__(self, args, lookups):
@@ -759,179 +795,59 @@ object ProcessScriptTransform {
       |        d = self.lookups.get(dataset)
       |        return None if d is None else d.get(str(key))
       |
-      |# read init from the BYTE layer: the text wrapper may buffer past
-      |# the newline, and in arrow mode the bytes after it are binary
-      |# frames that must stay readable from sys.stdin.buffer
-      |_init = json.loads(sys.stdin.buffer.readline())
-      |_in_types = _init.get("in_types")
-      |_out_types = _init.get("out_types")
+      |def _loop(transform, em, ctx, dec):
+      |    global _side_in, _drun
+      |    loads = json.loads
+      |    while True:
+      |        t, j, side = _read_frame()
+      |        if t != 82:  # "E" (or the end of input) ends the records
+      |            break
+      |        _side_in = side
+      |        for rec in loads(j):
+      |            try:
+      |                transform(rec if dec is None else dec(rec), em, ctx)
+      |                _drun += 1
+      |            except Exception as e:
+      |                import traceback
+      |                traceback.print_exc(file=sys.stderr)
+      |                _fail("%s: %s" % (type(e).__name__, e))
+      |        _flushbuf()  # frame boundary: bound reader latency
+      |
+      |_t, _j, _ = _read_frame()
+      |if _t != 73:
+      |    sys.exit("graft worker: expected an init frame")
+      |_init = json.loads(_j)
+      |_dec_in = _mk(_init.get("in_types"), _DEC, False)
+      |_enc_in = _mk(_init.get("in_types"), _ENC, True)
+      |_enc_out = _mk(_init.get("out_types"), _ENC, True)
       |_ns = {}
       |exec(_init["script"], _ns)
-      |_transform = _ns["transform"]
-      |_ctx = _Context(_init.get("arguments", {}), _init.get("lookups", {}))
-      |_em = _Emitter()
-      |
-      |# Arrow negotiation: when the engine OFFERS arrow (flat scalar
-      |# schema), answer with one json line; accepted -> both directions
-      |# switch to framed binary (1 type byte 'J'/'A' + 4-byte big-endian
-      |# length + payload) and record payloads travel as Arrow IPC
-      |# streams — no per-record json encode/parse on either side. The
-      |# script contract is unchanged: pyarrow's to_pylist hands the
-      |# transform real int/float/str/bytes/datetime values (no base64).
-      |if _init.get("arrow"):
-      |    _arrow = False
-      |    try:
-      |        import pyarrow as _pa
-      |        _arrow = True
-      |    except Exception:
-      |        _arrow = False
-      |    sys.stdout.write(json.dumps({"t": "proto", "arrow": _arrow}))
-      |    sys.stdout.write("\n")
-      |    sys.stdout.flush()
-      |    if _arrow:
-      |        _counts["proto.arrow"] = 1  # observability: negotiated mode
-      |        _KIND = {"bool": _pa.bool_(), "i8": _pa.int8(),
-      |                 "i16": _pa.int16(), "i32": _pa.int32(),
-      |                 "i64": _pa.int64(), "f32": _pa.float32(),
-      |                 "f64": _pa.float64(), "str": _pa.string(),
-      |                 "bin": _pa.binary(),
-      |                 "ts": _pa.timestamp("us", tz="UTC"),
-      |                 "ntz": _pa.timestamp("us"), "date": _pa.date32()}
-      |        _out_pa = _pa.schema(
-      |            [(n, _KIND[k]) for n, k in _init["out_arrow"]])
-      |        _ebuf = []      # emitted records awaiting batch conversion
-      |        _drun = [0]     # run length of consecutive "d" markers
-      |        _bin_in = sys.stdin.buffer
-      |        _bin_out = sys.stdout.buffer
-      |        def _write_frame(t, payload):
-      |            _bin_out.write(t)
-      |            _bin_out.write(len(payload).to_bytes(4, "big"))
-      |            _bin_out.write(payload)
-      |        def _ctl(msg):
-      |            # order-sensitive control messages materialize the
-      |            # pending "d" run first, so "f"/"dn" sequence still
-      |            # names records positionally
-      |            if _drun[0]:
-      |                _buf.append({"t": "dn", "n": _drun[0]}); _drun[0] = 0
-      |            _buf.append(msg)
-      |        def _flush_arrow():
-      |            if _ebuf:
-      |                try:
-      |                    _b = _pa.RecordBatch.from_pylist(_ebuf, schema=_out_pa)
-      |                    _sink = _pa.BufferOutputStream()
-      |                    _wr = _pa.ipc.new_stream(_sink, _out_pa)
-      |                    _wr.write_batch(_b); _wr.close()
-      |                    _write_frame(b"A", _sink.getvalue().to_pybytes())
-      |                except Exception:
-      |                    # fallback: unconvertible emits degrade to json
-      |                    # messages (schema-driven _enc), never diverge
-      |                    for _r in _ebuf:
-      |                        _ctl({"t": "e", "d": _enc(_r, _out_types)})
-      |            del _ebuf[:]
-      |            if _drun[0]:
-      |                _buf.append({"t": "dn", "n": _drun[0]}); _drun[0] = 0
-      |            if _buf:
-      |                _write_frame(b"J", json.dumps(
-      |                    {"t": "bb", "d": _buf}).encode("utf-8"))
-      |                del _buf[:]
-      |            _bin_out.flush()
-      |        class _AEmitter(object):
-      |            def emit(self, record):
-      |                _ebuf.append(record)
-      |                if len(_ebuf) >= _FLUSH_EVERY:
-      |                    _flush_arrow()
-      |            def emitError(self, err):
-      |                if _in_types is not None and isinstance(err, dict) \
-      |                        and isinstance(err.get("invalidRecord"), dict):
-      |                    err = dict(err)
-      |                    err["invalidRecord"] = _enc(err["invalidRecord"], _in_types)
-      |                _ctl({"t": "r", "d": err})
-      |            def emitAlert(self, payload): _ctl({"t": "a", "d": payload})
-      |        _em = _AEmitter()
-      |        while True:
-      |            _h = _bin_in.read(5)
-      |            if len(_h) < 5:
-      |                break
-      |            _payload = _bin_in.read(int.from_bytes(_h[1:5], "big"))
-      |            if _h[0:1] == b"J":
-      |                if json.loads(_payload).get("t") == "end":
-      |                    break
-      |                continue
-      |            for _rec in _pa.ipc.open_stream(_payload).read_all().to_pylist():
-      |                try:
-      |                    _transform(_rec, _em, _ctx)
-      |                    _drun[0] += 1
-      |                except Exception as _e:
-      |                    import traceback
-      |                    traceback.print_exc(file=sys.stderr)
-      |                    _ctl({"t": "f", "m": "%s: %s" % (type(_e).__name__, _e)})
-      |            _flush_arrow()  # frame boundary: bound reader latency
-      |        _flush_arrow()
-      |        _write_frame(b"J", json.dumps({"t": "m", "c": _counts}).encode("utf-8"))
-      |        _bin_out.flush()
-      |        sys.exit(0)
-      |
-      |for _line in sys.stdin:
-      |    _msg = json.loads(_line)
-      |    if _msg["t"] == "end":
-      |        break
-      |    # "rb": a record-batch frame — the per-record script contract
-      |    # is unchanged; only the wire granularity is batched
-      |    for _rec in _msg["d"]:
-      |        try:
-      |            _transform(_dec(_rec, _in_types), _em, _ctx)
-      |            _w({"t": "d"})
-      |        except Exception as _e:
-      |            import traceback
-      |            traceback.print_exc(file=sys.stderr)
-      |            _w({"t": "f", "m": "%s: %s" % (type(_e).__name__, _e)})
-      |    _flushbuf()  # frame boundary: bound reader latency
-      |
+      |_loop(_ns["transform"], _Emitter(),
+      |      _Context(_init.get("arguments", {}), _init.get("lookups", {})), _dec_in)
       |_flushbuf()
-      |sys.stdout.write(json.dumps({"t": "m", "c": _counts}))
-      |sys.stdout.write("\n")
-      |sys.stdout.flush()
+      |_frame(77, _dumps(_counts).encode(), ())
       |""".stripMargin
       .replace("%FLUSH_EVERY%", WorkerFlushEvery.toString)
+      .replace("%FLUSH_BYTES%", WorkerFlushBytes.toString)
 }
 
-/** Schema-driven wire conversion for types JSON cannot carry natively —
-  * the process-path twin of the reference's typed codec
-  * (ref: PythonObjectsEncoder.java:48 BYTES, :126 logical types, :173
-  * decode): BINARY ↔ base64, TIMESTAMP ↔ ISO-8601 UTC micros,
-  * TIMESTAMP_NTZ ↔ ISO-8601 local micros, DATE ↔ ISO date. A compact
-  * type descriptor (only subtrees that actually need conversion) ships
-  * to the worker once at init, so schemas with no such columns pay
-  * nothing and the worker never walks plain values. */
+/** Schema-driven wire codec of the python worker frames — the
+  * process-path twin of the reference's typed codec (ref:
+  * PythonObjectsEncoder.java:48 BYTES, :126 logical types, :173 decode).
+  * Rows stream into a Jackson generator and frames parse back straight
+  * into rows: BINARY ↔ index into the frame's side bytes, TIMESTAMP ↔
+  * epoch micros, TIMESTAMP_NTZ ↔ local micros, DATE ↔ epoch days; every
+  * other value is plain JSON. Reading also accepts the pre-encoded text
+  * forms a script may emit (base64, ISO-8601). A compact descriptor of
+  * the convertible leaves ships to the worker once at init, so schemas
+  * with no such columns cost the worker nothing per record. */
 private[graft] object WireCodec {
   import java.time.{Instant, LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
-  import java.time.format.DateTimeFormatter
-
-  // micros always written, offset spelled +00:00 (python
-  // datetime.fromisoformat-safe on every 3.x)
-  private val TsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-
-  // memoized per DataType so the per-record hot path pays a hash lookup,
-  // not a type-tree walk (None = nothing below needs conversion)
-  private val descCache =
-    new java.util.concurrent.ConcurrentHashMap[DataType, Option[Object]]()
+  import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
   /** JSON-shaped descriptor of the convertible leaves under `dt`;
     * null when nothing below needs conversion (the common case). */
-  def descriptor(dt: DataType): Object = {
-    // plain get/put, NOT computeIfAbsent: the builder recurses into
-    // nested types (would deadlock/fail as a recursive map update);
-    // racing builders compute identical values, so last-put-wins is fine
-    val cached = descCache.get(dt)
-    if (cached != null) cached.orNull
-    else {
-      val built = Option(descriptorUncached(dt))
-      descCache.put(dt, built)
-      built.orNull
-    }
-  }
-
-  private def descriptorUncached(dt: DataType): Object = dt match {
+  def descriptor(dt: DataType): Object = dt match {
     case BinaryType => leaf("bin")
     case TimestampType => leaf("ts")
     case TimestampNTZType => leaf("ntz")
@@ -960,80 +876,226 @@ private[graft] object WireCodec {
     m
   }
 
-  /** Decoded record map → JSON-safe map under the input schema. Walks
-    * the schema's fields (hash lookups into the record), converting only
-    * where needed; keys outside the schema pass through untouched. */
-  def mapToWire(m: Map[String, Any], schema: StructType): Map[String, Any] =
-    convertMap(m, schema, toWire)
-
-  def toWire(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (b: Array[Byte], BinaryType) =>
-      java.util.Base64.getEncoder.encodeToString(b)
-    case (t: java.sql.Timestamp, TimestampType) =>
-      LocalDateTime.ofInstant(t.toInstant, ZoneOffset.UTC).format(TsFmt) + "+00:00"
-    case (i: Instant, TimestampType) =>
-      LocalDateTime.ofInstant(i, ZoneOffset.UTC).format(TsFmt) + "+00:00"
-    case (l: LocalDateTime, TimestampNTZType) => l.format(TsFmt)
-    case (d: java.sql.Date, DateType) => d.toLocalDate.toString
-    case (d: LocalDate, DateType) => d.toString
-    // recursion gated on the memoized descriptor: a collection with no
-    // convertible leaves below passes through by reference, unwalked
-    case (s: scala.collection.Seq[_], ArrayType(et, _)) =>
-      if (descriptor(et) == null) s else s.map(toWire(_, et))
-    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
-      if (descriptor(vt) == null) m else m.map { case (k, x) => k -> toWire(x, vt) }
-    case (m: scala.collection.Map[_, _], st: StructType) =>
-      if (descriptor(st) == null) m
-      else mapToWire(m.asInstanceOf[Map[String, Any]], st)
-    case (other, _) => other
+  /** A data type compiled once per task for the per-value walk. */
+  sealed abstract class Shape
+  final class Leaf(val dt: DataType) extends Shape
+  final class Arr(val elem: Shape) extends Shape
+  final class MapOf(val keyType: DataType, val value: Shape) extends Shape
+  final class Struct(st: StructType) extends Shape {
+    val names: Array[String] = st.fieldNames
+    /** per field: the union type (plain-typed branch values) or null */
+    val unions: Array[StructType] = st.fields.map(f =>
+      if (SchemaCodec.isUnionField(f)) f.dataType.asInstanceOf[StructType] else null)
+    /** per field: the enum symbols or null */
+    val enums: Array[Array[String]] = st.fields.map(f =>
+      if (SchemaCodec.isEnumField(f)) SchemaCodec.enumSymbols(f) else null)
+    val shapes: Array[Shape] = st.fields.map(f => shape(f.dataType))
+    private val index = new java.util.HashMap[String, Integer]()
+    names.indices.foreach(i => index.put(names(i), i))
+    def indexOf(name: String): Int = { val i = index.get(name); if (i == null) -1 else i }
   }
 
-  /** JSON-parsed map → decoded record map under the declared schema
-    * (what [[SchemaCodec.mapToRow]] expects). */
-  def mapFromWire(m: Map[String, Any], schema: StructType): Map[String, Any] =
-    convertMap(m, schema, fromWire)
+  private def shape(dt: DataType): Shape = dt match {
+    case st: StructType => new Struct(st)
+    case ArrayType(et, _) => new Arr(shape(et))
+    case MapType(kt, vt, _) => new MapOf(kt, shape(vt))
+    case other => new Leaf(other)
+  }
 
-  private def convertMap(m: Map[String, Any], schema: StructType,
-                         conv: (Any, DataType) => Any): Map[String, Any] = {
-    var out = m
-    schema.fields.foreach { f =>
-      // only fields with convertible leaves are touched (memoized check);
-      // plain columns — however large — pass through by reference
-      if (!SchemaCodec.isUnionField(f) && descriptor(f.dataType) != null)
-        m.get(f.name) match {
-          case Some(v) =>
-            val w = conv(v, f.dataType)
-            if (w.asInstanceOf[AnyRef] ne v.asInstanceOf[AnyRef])
-              out = out.updated(f.name, w)
-          case None =>
-        }
+  // ---- write: external Row values → JSON + side bytes -------------------
+
+  def writeStruct(g: JsonGenerator, row: Row, s: Struct,
+                  side: java.util.ArrayList[Array[Byte]]): Unit = {
+    g.writeStartObject()
+    var i = 0
+    while (i < s.names.length) {
+      g.writeFieldName(s.names(i))
+      val v = row.get(i)
+      if (v == null) g.writeNull()
+      else if (s.unions(i) != null)
+        writePlain(g, SchemaCodec.fromUnion(v.asInstanceOf[Row], s.unions(i)))
+      else if (s.enums(i) != null)
+        g.writeString(SchemaCodec.checkEnum(v, s.enums(i), "decode").asInstanceOf[String])
+      else write(g, v, s.shapes(i), side)
+      i += 1
     }
-    out
+    g.writeEndObject()
   }
 
-  def fromWire(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s: String, BinaryType) => java.util.Base64.getDecoder.decode(s)
-    case (s: String, TimestampType) =>
-      // aware ISO from the worker (or a naive string = assume UTC)
+  private def write(g: JsonGenerator, v: Any, s: Shape,
+                    side: java.util.ArrayList[Array[Byte]]): Unit =
+    if (v == null) g.writeNull()
+    else s match {
+      case l: Leaf => writeLeaf(g, v, l.dt, side)
+      case a: Arr =>
+        g.writeStartArray()
+        v.asInstanceOf[scala.collection.Seq[Any]].foreach(write(g, _, a.elem, side))
+        g.writeEndArray()
+      case m: MapOf =>
+        g.writeStartObject()
+        v.asInstanceOf[scala.collection.Map[Any, Any]].foreach { case (k, x) =>
+          g.writeFieldName(String.valueOf(k)); write(g, x, m.value, side) }
+        g.writeEndObject()
+      case st: Struct => writeStruct(g, v.asInstanceOf[Row], st, side)
+    }
+
+  private def writeLeaf(g: JsonGenerator, v: Any, dt: DataType,
+                        side: java.util.ArrayList[Array[Byte]]): Unit = dt match {
+    case _: StringType => g.writeString(v.asInstanceOf[String])
+    case LongType | IntegerType | ShortType | ByteType =>
+      g.writeNumber(v.asInstanceOf[Number].longValue())
+    case DoubleType => g.writeNumber(v.asInstanceOf[Double])
+    case FloatType => g.writeNumber(v.asInstanceOf[Float])
+    case BooleanType => g.writeBoolean(v.asInstanceOf[Boolean])
+    case _: DecimalType => g.writeNumber(v.asInstanceOf[java.math.BigDecimal])
+    case BinaryType =>
+      side.add(v.asInstanceOf[Array[Byte]])
+      g.writeNumber(side.size() - 1)
+    case TimestampType => g.writeNumber(v match {
+      case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+      case i: Instant => DateTimeUtils.instantToMicros(i)
+    })
+    case TimestampNTZType =>
+      g.writeNumber(DateTimeUtils.localDateTimeToMicros(v.asInstanceOf[LocalDateTime]))
+    case DateType => g.writeNumber(v match {
+      case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
+      case d: LocalDate => DateTimeUtils.localDateToDays(d)
+    })
+    case other => throw new IllegalArgumentException(
+      s"${other.simpleString} values cannot cross the python wire")
+  }
+
+  /** Union branch values travel plain-typed: no side bytes or epoch
+    * numbers, which the worker would not decode. */
+  private def writePlain(g: JsonGenerator, v: Any): Unit = v match {
+    case null => g.writeNull()
+    case s: String => g.writeString(s)
+    case b: java.lang.Boolean => g.writeBoolean(b)
+    case d: java.lang.Double => g.writeNumber(d.doubleValue())
+    case f: java.lang.Float => g.writeNumber(f.floatValue())
+    case d: java.math.BigDecimal => g.writeNumber(d)
+    case n: Number => g.writeNumber(n.longValue())
+    case b: Array[Byte] => g.writeBinary(b)
+    case m: scala.collection.Map[_, _] =>
+      g.writeStartObject()
+      m.foreach { case (k, x) => g.writeFieldName(String.valueOf(k)); writePlain(g, x) }
+      g.writeEndObject()
+    case s: scala.collection.Seq[_] =>
+      g.writeStartArray(); s.foreach(writePlain(g, _)); g.writeEndArray()
+    case other => g.writeString(other.toString)
+  }
+
+  // ---- read: JSON + side bytes → external Row values ---------------------
+
+  /** The object at the parser's START_OBJECT as a Row of `s`; unknown
+    * keys are skipped, absent fields are null. Values coerce like
+    * [[SchemaCodec.mapToRow]]. */
+  def readStruct(p: JsonParser, s: Struct, side: Array[Array[Byte]]): Row = {
+    val n = s.names.length
+    val values = new Array[Any](n)
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val i = s.indexOf(p.currentName())
+      p.nextToken()
+      if (i < 0) p.skipChildren()
+      else values(i) =
+        if (s.unions(i) != null) SchemaCodec.toUnion(readAny(p), s.unions(i))
+        else if (s.enums(i) != null) SchemaCodec.checkEnum(readAny(p), s.enums(i), "encode")
+        else read(p, s.shapes(i), side)
+    }
+    var i = 0
+    while (i < n) { // an absent union is an all-null branch struct, as in mapToRow
+      if (values(i) == null && s.unions(i) != null)
+        values(i) = SchemaCodec.toUnion(null, s.unions(i))
+      i += 1
+    }
+    new GenericRow(values)
+  }
+
+  private def read(p: JsonParser, s: Shape, side: Array[Array[Byte]]): Any = {
+    val t = p.currentToken()
+    if (t == JsonToken.VALUE_NULL) null
+    else s match {
+      case l: Leaf => readLeaf(p, t, l.dt, side)
+      case a: Arr if t == JsonToken.START_ARRAY =>
+        val b = Vector.newBuilder[Any]
+        while (p.nextToken() != JsonToken.END_ARRAY) b += read(p, a.elem, side)
+        b.result()
+      case m: MapOf if t == JsonToken.START_OBJECT =>
+        val b = Map.newBuilder[Any, Any]
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val k = SchemaCodec.encode(p.currentName(), m.keyType)
+          p.nextToken()
+          b += k -> read(p, m.value, side)
+        }
+        b.result()
+      case st: Struct if t == JsonToken.START_OBJECT => readStruct(p, st, side)
+      case _ => readAny(p) // a shape mismatch passes through, as before
+    }
+  }
+
+  private def readLeaf(p: JsonParser, t: JsonToken, dt: DataType,
+                       side: Array[Array[Byte]]): Any = (t, dt) match {
+    case (JsonToken.VALUE_STRING, _: StringType) => p.getText
+    case (JsonToken.VALUE_NUMBER_INT, LongType) => p.getLongValue
+    case (JsonToken.VALUE_NUMBER_FLOAT, DoubleType) => p.getDoubleValue
+    case (JsonToken.VALUE_NUMBER_INT, BinaryType) =>
+      val i = p.getIntValue
+      if (i < 0 || i >= side.length) throw new IllegalStateException(
+        s"python worker protocol error: side-bytes index $i of ${side.length}")
+      side(i)
+    case (JsonToken.VALUE_NUMBER_INT, TimestampType) =>
+      DateTimeUtils.toJavaTimestamp(p.getLongValue)
+    case (JsonToken.VALUE_NUMBER_INT, TimestampNTZType) =>
+      DateTimeUtils.microsToLocalDateTime(p.getLongValue)
+    case (JsonToken.VALUE_NUMBER_INT, DateType) =>
+      DateTimeUtils.toJavaDate(p.getIntValue)
+    case (JsonToken.VALUE_STRING, BinaryType | TimestampType | TimestampNTZType | DateType) =>
+      fromText(p.getText, dt)
+    case _ => SchemaCodec.encode(readAny(p), dt)
+  }
+
+  /** The pre-encoded text forms a script may emit. */
+  private def fromText(s: String, dt: DataType): Any = dt match {
+    case BinaryType => java.util.Base64.getDecoder.decode(s)
+    case TimestampType =>
+      // aware ISO (or a naive string = assume UTC)
       try java.sql.Timestamp.from(OffsetDateTime.parse(s).toInstant)
       catch { case _: java.time.format.DateTimeParseException =>
         java.sql.Timestamp.from(LocalDateTime.parse(s).toInstant(ZoneOffset.UTC)) }
-    case (s: String, TimestampNTZType) => LocalDateTime.parse(s)
-    case (s: String, DateType) => java.sql.Date.valueOf(LocalDate.parse(s))
-    case (s: scala.collection.Seq[_], ArrayType(et, _)) =>
-      if (descriptor(et) == null) s else s.map(fromWire(_, et))
-    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
-      if (descriptor(vt) == null) m else m.map { case (k, x) => k -> fromWire(x, vt) }
-    case (m: scala.collection.Map[_, _], st: StructType) =>
-      if (descriptor(st) == null) m
-      else mapFromWire(m.asInstanceOf[Map[String, Any]], st)
-    case (other, _) => other
+    case TimestampNTZType => LocalDateTime.parse(s)
+    case DateType => java.sql.Date.valueOf(LocalDate.parse(s))
+  }
+
+  /** Any JSON value as the plain Scala value a script-side map holds:
+    * objects → Map, arrays → List, integers → Int/Long, floats → Double. */
+  def readAny(p: JsonParser): Any = p.currentToken() match {
+    case JsonToken.VALUE_NULL => null
+    case JsonToken.VALUE_STRING => p.getText
+    case JsonToken.VALUE_TRUE => true
+    case JsonToken.VALUE_FALSE => false
+    case JsonToken.VALUE_NUMBER_INT => p.getNumberType match {
+      case JsonParser.NumberType.INT => p.getIntValue
+      case JsonParser.NumberType.LONG => p.getLongValue
+      case _ => p.getBigIntegerValue.longValueExact()
+    }
+    case JsonToken.VALUE_NUMBER_FLOAT => p.getDoubleValue
+    case JsonToken.START_ARRAY =>
+      val b = List.newBuilder[Any]
+      while (p.nextToken() != JsonToken.END_ARRAY) b += readAny(p)
+      b.result()
+    case JsonToken.START_OBJECT =>
+      val b = Map.newBuilder[String, Any]
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val k = p.currentName()
+        p.nextToken()
+        b += k -> readAny(p)
+      }
+      b.result()
+    case t => throw new IllegalStateException(s"unexpected JSON token $t")
   }
 }
 
-/** Scala ↔ java.util JSON-shape conversion for the process boundary. */
+/** Scala → java.util JSON-shape conversion for the worker's init frame. */
 private[graft] object JsonCodec {
   def toJava(v: Any): Object = v match {
     case null => null

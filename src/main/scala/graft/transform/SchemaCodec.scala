@@ -64,7 +64,7 @@ object SchemaCodec {
   def enumSymbols(f: StructField): Array[String] =
     f.metadata.getStringArray(EnumMarker)
 
-  private def checkEnum(v: Any, symbols: Array[String], dir: String): Any =
+  private[transform] def checkEnum(v: Any, symbols: Array[String], dir: String): Any =
     v match {
       case null => null
       case s: String =>

@@ -143,15 +143,19 @@ class SchemaCodecPropSpec extends AnyFunSuite {
     } yield Map("id" -> id, "payload" -> p, "ts" -> ts, "day" -> d,
       "chunks" -> chunks, "times" -> times,
       "nested" -> Map("blob" -> blob, "when" -> when))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val shape = new WireCodec.Struct(wireSchema)
     forAll(genRec, n = 100) { m =>
-      // the full pipe: typed map → wire map → JSON → parsed map → typed map
-      val wire = WireCodec.mapToWire(m, wireSchema)
-      val json = mapper.writeValueAsString(graft.transform.JsonCodec.toJava(wire))
-      val parsed = graft.transform.JsonCodec.toScala(
-        mapper.readValue(json, classOf[java.util.Map[String, Object]]))
-        .asInstanceOf[Map[String, Any]]
-      val back = WireCodec.mapFromWire(parsed, wireSchema)
+      // the full pipe: typed row → frame JSON + side bytes → typed row
+      val json = new java.io.ByteArrayOutputStream()
+      val side = new java.util.ArrayList[Array[Byte]]()
+      val g = graft.transform.ProcessScriptTransform.jsonFactory.createGenerator(json)
+      WireCodec.writeStruct(g, SchemaCodec.mapToRow(m, wireSchema), shape, side)
+      g.close()
+      val p = graft.transform.ProcessScriptTransform.jsonFactory
+        .createParser(json.toByteArray)
+      p.nextToken()
+      val back = SchemaCodec.rowToMap(
+        WireCodec.readStruct(p, shape, side.toArray(new Array[Array[Byte]](0))), wireSchema)
       assert(back("payload").asInstanceOf[Array[Byte]].toSeq ===
         m("payload").asInstanceOf[Array[Byte]].toSeq)
       assert(back("ts") === m("ts"))

@@ -420,12 +420,13 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r3.getAs[Timestamp]("ts") === Timestamp.valueOf("1969-12-31 23:59:59.5"))
   }
 
-  test("python arrow tier: negotiated on, bit-equal to the JSON protocol") {
+  test("python frame wire: binary and datetime cells equal the in-JVM path") {
     import java.sql.{Date, Timestamp}
-    // flat scalar schema with every arrow-eligible wire family: the
-    // arrow offer must be accepted (pyarrow present here — proven by
-    // the worker's proto.arrow metric) and the results must match the
-    // JSON-frame protocol exactly, channels included
+    // every cell family of the frame wire — float, binary side bytes
+    // (empty included), epoch-micros timestamps before and after 1970,
+    // epoch-day dates — through all three channels, checked against
+    // literal values and, channel by channel, against the in-JVM
+    // closure running the same logic
     val in = Seq(
       (1L, "keep", 1.5f, Array[Byte](9, 8), Timestamp.valueOf("2026-01-02 03:04:05.000001"),
         Date.valueOf("2026-01-02")),
@@ -454,35 +455,51 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         |                      "ts": record["ts"], "day": record["day"],
         |                      "tag": "x%d" % record["id"]})
         |""".stripMargin
-    val m = Metrics(spark, "seen", "proto.arrow")
-    // the partition-size gate would route a 3-row input to JSON; pin the
-    // threshold to 1 row so this spec exercises the arrow protocol itself
-    spark.conf.set("graft.pyscript.arrowMinRows", "1")
-    val arrow = try ProcessScriptTransform.python(in, out, script,
-        metrics = m, onError = ScriptTransform.RouteToErrors(3)).cached()
-      finally spark.conf.unset("graft.pyscript.arrowMinRows")
-    val json = ProcessScriptTransform.python(in, out, script,
-      onError = ScriptTransform.RouteToErrors(3), arrow = false).cached()
+    val m = Metrics(spark, "seen")
+    val py = ProcessScriptTransform.python(in, out, script,
+      metrics = m, onError = ScriptTransform.RouteToErrors(3)).cached()
+    val jvm = ScriptTransform(in, out, onError = ScriptTransform.RouteToErrors(3)) {
+      (r, em, ctx) =>
+        ctx.metrics.count("seen")
+        if (r("status") == "bad") {
+          em.emitError(3, "bad", r)
+          em.emitAlert(Map("id" -> r("id").toString))
+        } else {
+          val p = r("payload").asInstanceOf[Array[Byte]]
+          em.emit(Map("id" -> r("id"), "f2" -> r("f").asInstanceOf[Float] * 2.0,
+            "echo" -> (p ++ p), "ts" -> r("ts"), "day" -> r("day"),
+            "tag" -> s"x${r("id")}"))
+        }
+    }.cached()
     def key(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(_.toSeq.map {
         case b: Array[Byte] => b.toSeq
         case v => v
       }).toSet
-    assert(key(arrow.out.collect()) === key(json.out.collect()))
-    assert(key(arrow.errors.collect()) === key(json.errors.collect()))
-    assert(arrow.alerts.count() === json.alerts.count())
+    assert(key(py.out.collect()) === key(jvm.out.collect()))
+    assert(key(py.errors.collect()) === key(jvm.errors.collect()))
+    assert(key(py.alerts.collect()) === key(jvm.alerts.collect()))
     assert(m.value("seen") === 3)
-    // proves the arrow protocol actually engaged (workers counted it)
-    assert(m.value("proto.arrow") >= 1,
-      "arrow offer was not accepted by any worker")
     // and the values themselves are right (not merely path-consistent)
-    val r1 = arrow.out.orderBy("id").collect()(0)
+    val r1 = py.out.orderBy("id").collect()(0)
     assert(r1.getAs[Double]("f2") === 3.0)
     assert(r1.getAs[Array[Byte]]("echo").toSeq === Seq[Byte](9, 8, 9, 8))
     assert(r1.getAs[Timestamp]("ts") ===
       Timestamp.valueOf("2026-01-02 03:04:05.000001"))
     assert(r1.getAs[Date]("day") === Date.valueOf("2026-01-02"))
     assert(r1.getAs[String]("tag") === "x1")
+    val r3 = py.out.orderBy("id").collect()(1)
+    assert(r3.getAs[Double]("f2") === -7.0)
+    assert(r3.getAs[Array[Byte]]("echo").length === 0)
+    val e = py.errors.collect()
+    assert(e.length === 1)
+    assert(e(0).getAs[Int]("errorCode") === 3)
+    assert(e(0).getAs[String]("errorMsg") === "bad")
+    assert(e(0).getAs[Float]("f") === 2.5f)
+    assert(e(0).getAs[Array[Byte]]("payload").toSeq === Seq[Byte](7))
+    assert(e(0).getAs[Timestamp]("ts") === Timestamp.valueOf("1969-12-31 23:59:59.5"))
+    assert(e(0).getAs[Date]("day") === Date.valueOf("1969-12-31"))
+    assert(py.alerts.collect()(0).getAs[Map[String, String]]("payload") === Map("id" -> "2"))
   }
 
   test("script InternalRow fast path: bit-equal to the Row-encoder path, all channels") {
@@ -546,65 +563,157 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fast._1.length === 2 && fast._2.length === 1 && fast._3.length === 1)
   }
 
-  test("python arrow gate: small partitions speak JSON, big ones arrow, same rows") {
-    // the per-partition size gate (graft.pyscript.arrowMinRows/.arrowMinBytes):
-    // a partition that ends before the threshold never offers arrow — no
-    // pyarrow import for tiny inputs — while a partition past it does, and
-    // the peek-buffer replay keeps the output identical either way
+  test("python frame boundaries: multi-frame input, 5000-row fan-out, same rows") {
+    import java.sql.Timestamp
+    // one 600-row partition crosses three 256-record input frames, and
+    // record 7 emits 5000 rows with binary and timestamp cells — past
+    // the worker's 4096-message flush, so a mid-frame flush must carry
+    // its own side bytes. Every row must equal a run with one row per
+    // partition, which has no frame boundaries at all.
     val out = StructType(Seq(
-      StructField("id", LongType), StructField("n", IntegerType)))
+      StructField("id", LongType), StructField("k", IntegerType),
+      StructField("b", BinaryType), StructField("ts", TimestampType)))
     val script =
-      """def transform(record, emitter, context):
-        |    emitter.emit({"id": record["id"], "n": len(record["s"])})
+      """import datetime
+        |def transform(record, emitter, context):
+        |    n = 5000 if record["id"] == 7 else 1 + record["id"] % 3
+        |    for k in range(n):
+        |        emitter.emit({"id": record["id"], "k": k,
+        |                      "b": record["p"] + k.to_bytes(2, "big"),
+        |                      "ts": record["ts"] + datetime.timedelta(microseconds=k)})
         |""".stripMargin
-    val small = spark.range(0, 50, 1, 2).toDF("id")
-      .withColumn("s", concat(lit("v"), col("id")))
-    val mSmall = Metrics(spark, "proto.arrow")
-    val gotSmall = ProcessScriptTransform.python(small, out, script,
-      metrics = mSmall).out.collect()
-    assert(gotSmall.length === 50)
-    assert(mSmall.value("proto.arrow") === 0,
-      "a plain-schema input must not negotiate arrow by default")
-    // plain schemas opt in via arrowPlainMinRows; rows threshold cleared
-    // mid-partition: arrow engages, rows identical
-    spark.conf.set("graft.pyscript.arrowPlainMinRows", "10")
-    val mBig = Metrics(spark, "proto.arrow")
-    val gotBig = try ProcessScriptTransform.python(small, out, script,
-        metrics = mBig).out.collect()
-      finally spark.conf.unset("graft.pyscript.arrowPlainMinRows")
-    assert(mBig.value("proto.arrow") >= 1,
-      "a partition past the rows threshold must negotiate arrow")
-    def key(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toSeq).toSet
-    assert(key(gotBig) === key(gotSmall))
-    // bytes trigger: wide payloads clear the gate before the row count
-    spark.conf.set("graft.pyscript.arrowPlainMinRows", "10000")
-    spark.conf.set("graft.pyscript.arrowMinBytes", "1024")
-    val mBytes = Metrics(spark, "proto.arrow")
-    val wide = spark.range(0, 50, 1, 2).toDF("id")
-      .withColumn("s", concat(lit("w" * 200), col("id")))
-    val gotBytes = try ProcessScriptTransform.python(wide, out, script,
-        metrics = mBytes).out.collect()
-      finally {
-        spark.conf.unset("graft.pyscript.arrowMinBytes")
-        spark.conf.unset("graft.pyscript.arrowPlainMinRows")
+    def run(partitions: Int) = {
+      val in = spark.range(0, 600, 1, partitions).toDF("id")
+        .withColumn("p", col("id").cast("string").cast(BinaryType))
+        .withColumn("ts", expr("timestamp_micros(id * 1000003 - 5000000)"))
+      ProcessScriptTransform.python(in, out, script).out.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq.mkString(","),
+          r.getAs[Timestamp](3).toInstant.toString))
+        .sorted
+    }
+    val framed = run(1)
+    assert(framed.length === 5000 + (0 until 600).filter(_ != 7).map(1 + _ % 3).sum)
+    assert(framed.sameElements(run(600)), "framed rows differ from one-row partitions")
+    val last = framed.filter(r => r._1 == 7L && r._2 == 4999).head
+    assert(last._3 === ("7".getBytes("UTF-8") ++ Array[Byte](0x13, 0x87.toByte)).mkString(","))
+    assert(last._4 === java.time.Instant.EPOCH.plusNanos((7L * 1000003 - 5000000 + 4999) * 1000).toString)
+  }
+
+  test("python script print() does not corrupt the frame stream") {
+    // frames leave through a private duplicate of fd 1; print() goes to stderr
+    val df = (1L to 300L).toDF("id").repartition(1)
+    val out = StructType(Seq(StructField("id", LongType)))
+    val script =
+      """import sys
+        |def transform(record, emitter, context):
+        |    print("hello", record["id"])
+        |    sys.stdout.write("more\n")
+        |    emitter.emit({"id": record["id"]})
+        |""".stripMargin
+    val got = ProcessScriptTransform.python(df, out, script).out.collect().map(_.getLong(0))
+    assert(got.sorted.toSeq === (1L to 300L))
+  }
+
+  test("python worker: stray bytes on fd 1 and a truncated frame end in a bounded task error") {
+    val df = (1L to 50L).toDF("id").repartition(1)
+    val out = StructType(Seq(StructField("id", LongType)))
+    def failure(script: String): String = {
+      val t0 = System.nanoTime()
+      val e = intercept[org.apache.spark.SparkException] {
+        ProcessScriptTransform.python(df, out, script).out.collect()
       }
-    assert(mBytes.value("proto.arrow") >= 1,
-      "a partition past the bytes threshold must negotiate arrow")
-    assert(gotBytes.length === 50)
-    // codec-heavy small input (binary out): still JSON under the default
-    // 65536-row gate — the r16 break-even, not a blanket arrow-on
-    val outB = StructType(Seq(
-      StructField("id", LongType), StructField("b", BinaryType)))
-    val scriptB =
-      """def transform(record, emitter, context):
-        |    emitter.emit({"id": record["id"], "b": record["s"].encode()})
+      assert((System.nanoTime() - t0) < 60e9, "the failure must not wait on the worker")
+      e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
+    }
+    def writing(bytes: String): String =
+      s"""import os
+         |def transform(record, emitter, context):
+         |    if record["id"] == 3:
+         |        os.write(1, $bytes)
+         |    emitter.emit({"id": record["id"]})
+         |""".stripMargin
+    // an unknown type byte fails at once
+    val stray = failure(writing("b\"hello from a C extension\\n\""))
+    assert(stray.contains("unknown frame type 0x68"), stray)
+    // text that starts like a frame reads as a length of >= 512 MiB:
+    // rejected before the reader waits for (or allocates) it
+    val bogus = failure(writing("b\"Bad things happened\\n\""))
+    assert(bogus.contains("out of range"), bogus)
+    // a frame cut short by the worker's exit: died, naming the last record sent
+    val truncated = failure(
+      """import os
+        |def transform(record, emitter, context):
+        |    os.write(1, b'B\x00\x00\x00\x40[["e",')
+        |    os._exit(0)
+        |""".stripMargin)
+    assert(truncated.contains("python worker died (exit=0)"), truncated)
+    assert(truncated.contains("last record sent: [50]"), truncated)
+  }
+
+  test("python wire never reinterprets a stray value in a binary or datetime field") {
+    import java.sql.{Date, Timestamp}
+    // an int is neither a side-bytes index nor an epoch number when a
+    // script emits it: the worker raises TypeError on the record's
+    // normal error path
+    val df = (1L to 6L).toDF("id").repartition(1)
+    val out = StructType(Seq(StructField("id", LongType), StructField("b", BinaryType),
+      StructField("ts", TimestampType), StructField("day", DateType)))
+    val script =
+      """import datetime
+        |def transform(record, emitter, context):
+        |    i = record["id"]
+        |    emitter.emit({"id": i,
+        |        "b": 0 if i == 2 else b"ok",
+        |        "ts": 1700000000 if i == 4 else
+        |              datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc),
+        |        "day": 19000 if i == 6 else datetime.date(2026, 1, 2)})
         |""".stripMargin
-    val mCodec = Metrics(spark, "proto.arrow")
-    val gotCodec = ProcessScriptTransform.python(small, outB, scriptB,
-      metrics = mCodec).out.collect()
-    assert(gotCodec.length === 50)
-    assert(mCodec.value("proto.arrow") === 0,
-      "a 25-row codec-heavy partition must stay on JSON under the default gate")
+    val e = intercept[org.apache.spark.SparkException] {
+      ProcessScriptTransform.python(df, out, script).out.collect()
+    }
+    assert((e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse(""))
+      .contains("TypeError: BINARY field needs bytes or str, got int"))
+    val routed = ProcessScriptTransform.python(df, out, script,
+      onError = ScriptTransform.RouteToErrors(9)).cached()
+    val ok = routed.out.orderBy("id").collect()
+    assert(ok.map(_.getLong(0)).toSeq === Seq(1L, 3L, 5L))
+    ok.foreach { r =>
+      assert(r.getAs[Array[Byte]]("b").toSeq === "ok".getBytes("UTF-8").toSeq)
+      assert(r.getAs[Timestamp]("ts") ===
+        Timestamp.from(java.time.Instant.parse("2026-01-01T00:00:00Z")))
+      assert(r.getAs[Date]("day") === Date.valueOf("2026-01-02"))
+    }
+    val errs = routed.errors.orderBy("id").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Int]("errorCode"), r.getAs[String]("errorMsg")))
+    assert(errs.toSeq === Seq(
+      (2L, 9, "TypeError: BINARY field needs bytes or str, got int"),
+      (4L, 9, "TypeError: TIMESTAMP field needs datetime, date or str, got int"),
+      (6L, 9, "TypeError: DATE field needs date, datetime or str, got int")))
+  }
+
+  test("python validate: a success is memoized per (script, pythonExec, env), a failure is not") {
+    import java.nio.file.Files
+    // a pythonExec wrapper that counts its own invocations
+    val dir = Files.createTempDirectory("graft-pyexec")
+    val count = dir.resolve("count")
+    val wrapper = dir.resolve("python3-counting")
+    Files.write(wrapper,
+      s"""#!/bin/sh\necho x >> '$count'\nexec python3 "$$@"\n""".getBytes("UTF-8"))
+    assert(wrapper.toFile.setExecutable(true))
+    def spawns: Int = if (Files.exists(count)) Files.readAllLines(count).size else 0
+    val exec = wrapper.toString
+    // unique to this run, so no earlier call has validated it
+    val script = s"def transform(record, emitter, context):\n    emitter.emit(record)  # $dir\n"
+    ProcessScriptTransform.validate(script, exec)
+    assert(spawns === 1)
+    ProcessScriptTransform.validate(script, exec)
+    assert(spawns === 1, "a repeated validation must not spawn")
+    ProcessScriptTransform.validate(script, exec, Map("GRAFT_SPEC_ENV" -> "1"))
+    assert(spawns === 2, "a changed env must validate again")
+    val bad = s"def transform(record):\n    pass  # $dir\n"
+    intercept[IllegalArgumentException](ProcessScriptTransform.validate(bad, exec))
+    intercept[IllegalArgumentException](ProcessScriptTransform.validate(bad, exec))
+    assert(spawns === 4, "a failed validation must never be cached")
   }
 
   test("python scripts may emit pre-encoded wire values (base64 str / ISO str)") {
