@@ -43,12 +43,12 @@ import org.apache.spark.sql.types._
   * record emits. The worker count scales with partitions like any Spark
   * stage; there is no driver round-trip.
   *
-  * The worker writes frames to a private duplicate of fd 1 and rebinds
-  * `sys.stdout` to stderr before it runs the script, so a script's
-  * `print()` lands in the executor log. Bytes written to fd 1 directly
-  * break the framing; the reader rejects an unknown type byte or an
-  * out-of-range length, and a stream that ends inside a frame reports
-  * `python worker died (exit=N)` naming the last record sent.
+  * The worker writes frames to a private duplicate of fd 1 and points
+  * fd 1 and `sys.stdout` at stderr before it runs the script, so a
+  * script's `print()`, a subprocess's output or a C extension's `printf`
+  * lands in the executor log. The reader still rejects an unknown type
+  * byte or an out-of-range length, and a stream that ends inside a frame
+  * reports `python worker died (exit=N)` naming the last record sent.
   *
   * Script contract matches the reference plugin, so a user's existing
   * script body runs unchanged:
@@ -126,14 +126,10 @@ object ProcessScriptTransform {
     * worker's normal per-record error channel instead). A `transform`
     * bound only inside an `if` block or other nested scope is rejected:
     * whether it exists would depend on executing the module. The whole check is bounded by a hard timeout as a
-    * second line of defense. Runs one driver-side python3 (~50 ms) per
-    * distinct (script, pythonExec, env) — a success is remembered in a
-    * small bounded map, a failure never is; throws
-    * IllegalArgumentException with the interpreter's message. */
+    * second line of defense. Runs one driver-side python3 (~50 ms);
+    * throws IllegalArgumentException with the interpreter's message. */
   def validate(script: String, pythonExec: String = "python3",
                env: Map[String, String] = Map.empty): Unit = {
-    val key = (script, pythonExec, env)
-    if (validated.containsKey(key)) return
     val checker =
       """import sys, ast
         |src = sys.stdin.read()
@@ -221,16 +217,7 @@ object ProcessScriptTransform {
     val err = errBytes.toString(StandardCharsets.UTF_8)
     if (proc.exitValue() != 0)
       throw new IllegalArgumentException(s"invalid transform script: $err")
-    validated.put(key, java.lang.Boolean.TRUE)
   }
-
-  /** Successful [[validate]] calls, least recently used evicted first. */
-  private val validated = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, Map[String, String]), java.lang.Boolean](
-        16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (String, String, Map[String, String]), java.lang.Boolean]): Boolean = size() > 64
-    })
 
   /** @param env extra environment variables for every spawned worker
     *   interpreter (and the configure-time validator) — the reference's
@@ -584,11 +571,13 @@ object ProcessScriptTransform {
       |# frames, both directions: [type u8][json_len u32][UTF-8 JSON]
       |# [n u32][n x len u32][side bytes], big-endian. In: I(nit),
       |# R(ecords), E(nd); out: B(atch of channel messages), M(etrics).
-      |# Frames leave through a private duplicate of fd 1; sys.stdout is
-      |# rebound to stderr before the script runs, so print() lands in the
+      |# Frames leave through a private duplicate of fd 1; fd 1 and
+      |# sys.stdout are rebound to stderr before the script runs, so print(),
+      |# os.write(1, ...), subprocesses and C extensions land in the
       |# executor log instead of the frame stream.
       |_rin = sys.stdin.buffer
       |_wout = os.fdopen(os.dup(1), "wb")
+      |os.dup2(2, 1)
       |sys.stdout = sys.stderr
       |_H = struct.Struct(">BI")
       |_U32 = struct.Struct(">I")
@@ -1108,20 +1097,5 @@ private[graft] object JsonCodec {
       s.foreach(x => out.add(toJava(x)))
       out
     case other => other.asInstanceOf[Object]
-  }
-
-  def toScala(v: Any): Any = v match {
-    case null => null
-    case m: java.util.Map[_, _] =>
-      val b = Map.newBuilder[String, Any]
-      m.forEach((k, x) => b += String.valueOf(k) -> toScala(x))
-      b.result()
-    case l: java.util.List[_] =>
-      val b = Seq.newBuilder[Any]
-      l.forEach(x => b += toScala(x))
-      b.result()
-    case i: java.math.BigInteger => i.longValueExact()
-    case d: java.math.BigDecimal => d.doubleValue()
-    case other => other
   }
 }
