@@ -9,10 +9,14 @@ import org.apache.spark.sql.SparkSession
   * without computing its transforms). noop materializes every output
   * column — what a real consumer pays.
   *
-  * Per query: best-of-2 (first run pays per-plan codegen compile; min
-  * de-noises a busy host without hiding work — both runs are complete),
-  * plus total shuffle bytes written from the executed plan's SQL metrics —
-  * the scale-limiting quantity at 100 TB.
+  * Per query: best-of-2 (min de-noises a busy host without hiding work —
+  * both runs are complete), plus total shuffle bytes written from the
+  * executed plan's SQL metrics — the scale-limiting quantity at 100 TB.
+  * The first run compiles the classes its plan generates; the second
+  * reuses them from the session's codegen cache (sized by
+  * `GraftSession.CodegenCacheMaxEntries`), except where the second plan
+  * generates different code. The full artifact records the classes each
+  * second run compiled ("recompiles", non-zero entries only).
   *
   * Host-noise guard: a committed artifact must be trustworthy without a
   * re-measure (round 5's head artifact overstated the total 2x on a busy
@@ -57,6 +61,10 @@ object Bench {
     val base = read(repoRoot.resolve("bench_baseline.json").toFile)
     if (base.nonEmpty) base else read(repoRoot.resolve("bench_out.json").toFile)
   }
+
+  /** Generated classes compiled so far in this JVM (codegen cache misses). */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -138,7 +146,9 @@ object Bench {
       // external contention instead of relying on the 3x noisy flag
       val qla = loadavg
       val (t1, _, ok1) = runOnce(name)
+      val compiled0 = compiles
       val (t2, shuffle, ok2) = runOnce(name)
+      val recompiles = compiles - compiled0
       var best = math.min(t1, t2)
       var ok = ok1 && ok2
       // noise guard: noisyMult x the prior committed time AND >0.5 s gets
@@ -157,26 +167,28 @@ object Bench {
       // fused-serve broadcasts from this query's reps release their
       // executor blocks here instead of accumulating across the suite
       graft.operators.TextAnalysis.releaseFusedBroadcasts()
-      (name, best, shuffle, ok, noisy, qla)
+      (name, best, shuffle, ok, noisy, qla, recompiles)
     }
     // driver contract: "queries" maps name -> seconds (scalar). A failed
     // query reports -1 (unmistakable in any downstream comparison) and is
     // excluded from the total; names also land in "failed".
-    val qs = results.map { case (k, v, _, ok, _, _) => s""""$k":${if (ok) v else -1}""" }
+    val qs = results.map { case (k, v, _, ok, _, _, _) => s""""$k":${if (ok) v else -1}""" }
       .mkString("{", ",", "}")
-    val sh = results.map { case (k, _, s, _, _, _) => s""""$k":${s / 1048576}""" }
+    val sh = results.map { case (k, _, s, _, _, _, _) => s""""$k":${s / 1048576}""" }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, false, _, _) => s""""$k"""" }
+    val failed = results.collect { case (k, _, _, false, _, _, _) => s""""$k"""" }
       .mkString("[", ",", "]")
-    val noisyNames = results.collect { case (k, _, _, _, true, _) => s""""$k"""" }
+    val noisyNames = results.collect { case (k, _, _, _, true, _, _) => s""""$k"""" }
       .mkString("[", ",", "]")
     // per-query loadavg at measurement start (full artifact only — the
     // compact headline keeps its byte budget for the slow-query map)
-    val loads = results.map { case (k, _, _, _, _, la) =>
+    val loads = results.map { case (k, _, _, _, _, la, _) =>
       s""""$k":${math.rint(la * 100) / 100}""" }.mkString("{", ",", "}")
+    val recompiled = results.collect { case (k, _, _, _, _, _, n) if n > 0 => s""""$k":$n""" }
+      .mkString("{", ",", "}")
     val total = results.filter(_._4).map(_._2).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"shuffle_mb":$sh,"load":$loads,"failed":$failed,"noisy":$noisyNames,"loadavg":[$la0,$loadavg],"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"shuffle_mb":$sh,"load":$loads,"recompiles":$recompiled,"failed":$failed,"noisy":$noisyNames,"loadavg":[$la0,$loadavg],"sf":"$sfDir"}"""
     // persist the FULL line first — the authoritative per-query artifact.
     // Full runs only: a substring-filtered iteration run must not clobber
     // the committed clean artifact with a partial map (the round-6 stale-
@@ -186,9 +198,8 @@ object Bench {
         (line + "\n").getBytes("UTF-8"))
     // The capture tooling keeps only the LAST ~2000 chars of stdout (sbt
     // appends its own "[success] Total time" line after ours), so a
-    // 120+-query map printed raw arrives truncated and unparseable —
-    // every BENCH_r{N} artifact through r7 recorded parsed:null for this
-    // reason. Print the full line for humans, then LAST a compact
+    // 120+-query map printed raw arrives truncated and unparseable.
+    // Print the full line for humans, then LAST a compact
     // headline line sized to survive the window: totals + the heaviest
     // queries (time-sorted, 3-decimal) up to a byte budget, with the
     // full map's location and the count of omitted entries declared.
@@ -206,7 +217,7 @@ object Bench {
     val compactQs = new scala.collection.mutable.ArrayBuffer[String]
     var used = 0
     var full = false
-    okSorted.foreach { case (k, v, _, _, _, _) =>
+    okSorted.foreach { case (k, v, _, _, _, _, _) =>
       val ent = s""""$k":${math.rint(v * 1000) / 1000}"""
       if (!full && used + ent.length + 1 <= lineBudget) {
         compactQs += ent; used += ent.length + 1
@@ -227,7 +238,7 @@ object Bench {
     if (args.isEmpty) { // partial filtered runs must not shrink the baseline
       val quietStart = la0 >= 0 && la0 < 2.0
       val baseQs = results.flatMap {
-        case (k, v, _, ok, noisy, _) if ok =>
+        case (k, v, _, ok, noisy, _, _) if ok =>
           val p = prior.get(k).filter(_ > 0)
           // a query with NO positive prior is seeded only by a clean
           // measurement: quiet start and not noisy-flagged. A loaded or

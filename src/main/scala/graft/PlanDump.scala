@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Optimization-round evidence tool: writes the formatted physical plan of
-  * each named SparkEntry query (default: all) to <outDir>/<query>_<tag>.txt
-  * — the `plans/r15/<query>_before.txt` / `_after.txt` artifacts the
-  * optimization judge checks plan claims against.
+/** Plan evidence tool: writes the formatted physical plan of each named
+  * SparkEntry query (default: all) to <outDir>/<query>_<tag>.txt, e.g. a
+  * `<query>_before.txt` / `_after.txt` pair that a plan-change claim is
+  * checked against.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> [sfDir] [query ...]
   */

@@ -14,6 +14,27 @@ import org.apache.spark.sql.types.LongType
   * coalescing makes the initial number a ceiling, not a constant).
   */
 object GraftSession {
+  /** Entries in Spark's cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100).
+    *
+    * Graft plans the same pipelines again and again in one long-lived
+    * session (scheduled runs, incremental loops, `foreachBatch`
+    * micro-batches). A cache smaller than that working set makes every
+    * rerun compile most of its classes again with Janino, and the JIT then
+    * compiles the new bytecode too. Measured working sets:
+    *   - one `curationPipeline` + `ngramJaccard` pass: ~119 entries
+    *     (the key includes the class loader, and a local session compiles
+    *     each whole-stage class under two loaders); with the default,
+    *     67-99 of them were compiled again on every rerun;
+    *   - the 227-key `graft.Bench` suite: ~3 000 first-run compiles.
+    * The cache is Guava's size-bounded cache, which may evict before the
+    * limit is reached, so the bound sits well above one pipeline's set.
+    *
+    * Spark reads this static conf once per JVM, when `CodeGenerator` is
+    * first used, so only a session built before any query ran can set it.
+    */
+  val CodegenCacheMaxEntries = 1000
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -48,8 +69,15 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
 
-  /** Apply engine confs to an existing session (e.g. one the driver built). */
+  /** Apply engine confs to an existing session (e.g. one the driver built).
+    *
+    * Only runtime confs can be set here. Static confs, among them
+    * `spark.sql.codegen.cache.maxEntries` ([[CodegenCacheMaxEntries]]),
+    * are fixed when the session is built; a caller who builds its own
+    * session sets that one in its builder, or reruns of the same plans
+    * recompile their generated code. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

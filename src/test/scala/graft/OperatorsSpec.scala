@@ -18,6 +18,24 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  test("a rerun of the curation pipeline reuses its compiled generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Long = {
+      val before = compiles
+      val docs = Tables.documents(spark, dir)
+      TextAnalysis.curationPipeline(docs).write.format("noop").mode("overwrite").save()
+      Dedup.ngramJaccard(docs).write.format("noop").mode("overwrite").save()
+      compiles - before
+    }
+    val first = pass()
+    val rerun = pass()
+    // one pass needs ~115 cache entries; Spark's default cache (100
+    // entries) made every rerun compile most of them again
+    assert(rerun * 10 < first,
+      s"rerun compiled $rerun classes, the first run $first")
+  }
+
   test("minhash LSH finds every planted near-duplicate pair (J >= 0.9)") {
     // ground truth: the generator plants ~25 high-Jaccard pairs; the exact
     // ngram-Jaccard operator at threshold 0.9 defines the truth set
