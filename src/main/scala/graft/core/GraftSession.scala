@@ -71,7 +71,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
 
-  /** Apply engine confs to an existing session (e.g. one the driver built).
+  /** Apply engine confs to an existing session (e.g. one a host application built).
     *
     * Only runtime confs can be set here. Static confs, among them
     * `spark.sql.codegen.cache.maxEntries` ([[CodegenCacheMaxEntries]]),
