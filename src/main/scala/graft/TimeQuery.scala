@@ -12,7 +12,7 @@ object TimeQuery {
     val dir = args(0)
     val reps = args(1).toInt
     // -c key=value pairs become session confs BEFORE the queries plan —
-    // the A/B lever for per-operator conf gates (splitBytes, checkpoint)
+    // e.g. a graft.*.maxBroadcast* scale gate, to time both of its plans
     val (confArgs, names) = {
       val rest = args.drop(2)
       val confs = scala.collection.mutable.ArrayBuffer[(String, String)]()

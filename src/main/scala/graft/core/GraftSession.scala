@@ -35,6 +35,17 @@ object GraftSession {
     */
   val CodegenCacheMaxEntries = 1000
 
+  /** Runtime confs every Graft session carries: [[builder]] sets them at
+    * build time and [[tune]] on an existing session. */
+  private val RuntimeConfs = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // runtime bloom-filter join pruning: at cluster scale a selective
+    // dim filter prunes the fact scan before the shuffle
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -57,14 +68,8 @@ object GraftSession {
         fn("graft_int8_scale", classOf[Int8Scale])(c => Int8Scale(c.head))
         fn("graft_dot_int8", classOf[DotInt8])(c => DotInt8(c.head, c(1)))
       }
+      .config(RuntimeConfs.toMap)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // runtime bloom-filter join pruning: at cluster scale a selective
-      // dim filter prunes the fact scan before the shuffle
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // managed (bucketed) tables land in tmp, not the caller's cwd
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
@@ -79,13 +84,7 @@ object GraftSession {
     * session sets that one in its builder, or reruns of the same plans
     * recompile their generated code. */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    } catch { case _: Throwable => () }
+    RuntimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

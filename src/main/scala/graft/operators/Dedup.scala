@@ -145,17 +145,15 @@ object Dedup {
     * dominates the slim (doc_id, text) input shuffle at any scale, and
     * at deployment scale the scan already has more partitions than
     * cores, making this a no-op — the ScriptTransform/python()
-    * parallelism-floor argument. `graft.kernelFloor=false` disables.
-    * Applied ONLY where the alternating A/B won: the ngramJaccard
-    * shingle pass (on 2.44-3.00 s vs off 3.21-4.05 s). The same floor
+    * parallelism-floor argument. Applied ONLY where the alternating
+    * A/B won: the ngramJaccard shingle pass (on 2.44-3.00 s vs off 3.21-4.05 s). The same floor
     * on contamination/bandKeysKernel LOST ~30% (cheaper kernels — the
     * exchange cost exceeded the parallelization gain) and was
     * reverted. */
   private def kernelFloor(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    val on = spark.conf.getOption("graft.kernelFloor").forall(_.toBoolean)
-    if (on && docs.rdd.getNumPartitions < target) docs.repartition(target)
+    if (docs.rdd.getNumPartitions < target) docs.repartition(target)
     else docs
   }
 
@@ -1961,53 +1959,12 @@ object Dedup {
           b.select(col("doc_id"), col("text")).withColumn("_side", lit(1))),
       inA = col("_side") === 0, inB = col("_side") === 1)
 
-  /** dd_overlap can read its scan with a PER-OPERATOR split size
-    * (`graft.overlap.splitBytes`), scoped through a child session
-    * sharing the SparkContext so no global default moves. Rationale:
-    * the operator is one map-heavy kernel pass; at local[32] a
-    * replicated corpus arrives as ~cores-many splits (one wave), so a
-    * straggling split idles 31 threads — the r14 PLANS sweep measured
-    * 1.74 s at 8m vs 1.99 s at the 128m default on that host's x100
-    * tier. The r15 re-measure could NOT reproduce the win on this
-    * host (paired solo A/B 3.99 s at 8m vs 4.22 s at 128m — inside the
-    * noise band; suite-context 2.79-2.82 s either way), so per the r14
-    * verdict's own criterion ("a documented waiver ... if the option
-    * moves nothing on a quiet host") the DEFAULT stays at the session
-    * split size and the knob remains for deployments whose wave math
-    * differs. The operator's over-2x heavy ratio is the adjudicated
-    * kernel floor: the mandated-md5 occurrence-hash kernel alone is
-    * ~92% of DuckDB's whole in-process query (r14 Probe overlap-floor
-    * decomposition), and the remainder is the distribution exchange. */
-  /** Child sessions scoped to a non-default split size, cached per
-    * (parent, splitBytes): a newSession per invocation accumulated in
-    * the context's session registry under repeated bench reps /
-    * streaming reuse (r15 audit note). Sessions live for the parent
-    * context's life; the map is bounded by distinct splitBytes values. */
-  private val overlapSessions =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SparkSession]
-
-  def ddOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val parentSplit =
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    val splitBytes = spark.conf.getOption("graft.overlap.splitBytes")
-      .getOrElse(parentSplit)
-    val s2 =
-      if (splitBytes == parentSplit) spark // default: no child session at all
-      else overlapSessions.computeIfAbsent((spark, splitBytes), _ => {
-        val s = spark.newSession()
-        // child sessions inherit builder-time confs; copy the load-bearing
-        // runtime ones too in case the hosting session was tuned post-build
-        Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
-            "spark.sql.adaptive.skewJoin.enabled", "spark.sql.session.timeZone",
-            "spark.sql.legacy.parquet.nanosAsLong")
-          .foreach(k => spark.conf.getOption(k).foreach(s.conf.set(k, _)))
-        s.conf.set("spark.sql.files.maxPartitionBytes", splitBytes)
-        s
-      })
-    snapshotOverlap(Tables.documents(s2, dir),
+  /** dd_overlap: the even-id and odd-id halves of the corpus as the two
+    * snapshots of [[snapshotOverlap]]. */
+  def ddOverlap(spark: SparkSession, dir: String): DataFrame =
+    snapshotOverlap(Tables.documents(spark, dir),
       inA = pmod(col("doc_id"), lit(2)) === 0,
       inB = pmod(col("doc_id"), lit(2)) === 1)
-  }
 
   val ddOverlapSql: String = {
     val k = 16

@@ -337,11 +337,7 @@ object Similarity {
     // materialization is bounded at any corpus size (guide §3.3 — the
     // r15 no-action note rejected a CORPUS-sized checkpoint; this is the
     // bounded side).
-    val truth0 = bruteTopK(emb, isQ, k = 10)
-    val truth =
-      if (spark.conf.getOption("graft.recallEval.checkpoint")
-            .forall(_.toBoolean)) truth0.localCheckpoint(false)
-      else truth0
+    val truth = bruteTopK(emb, isQ, k = 10).localCheckpoint(false)
     recallEval(lshTopK(emb, isQ, k = 10), truth)
       .withColumn("method", lit("lsh1"))
       .unionByName(

@@ -920,8 +920,6 @@ object TextAnalysis {
     // exchange: the only corpus-side shuffle left is the top-k window.
     // Over either gate the shuffled-join plan below remains the
     // unbounded fallback (spec-pinned bit-equal).
-    val fuse = conf.getOption("graft.bm25.fusedServe")
-      .map(_.toBoolean).getOrElse(true)
     // overlap the fused build's independent driver jobs with the df
     // gate-count scan (§2.6): qt is under its OWN counted gate here, so
     // its collect is memory-safe regardless of the df gate's outcome;
@@ -929,14 +927,14 @@ object TextAnalysis {
     // rare unbounded-vocab fallback path
     var qtPre: scala.concurrent.Future[Array[org.apache.spark.sql.Row]] = null
     var stPre: scala.concurrent.Future[org.apache.spark.sql.Row] = null
-    if (fuse && nQt <= maxQt && nDfOverride.isEmpty) {
+    if (nQt <= maxQt && nDfOverride.isEmpty) {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
       qtPre = scala.concurrent.Future(qt.collect())
       stPre = scala.concurrent.Future(stats.first())
     }
     val nDf = nDfOverride.getOrElse(dfTab.count())
-    if (fuse && nQt <= maxQt && nDf <= maxDf)
+    if (nQt <= maxQt && nDf <= maxDf)
       return bm25FusedServe(docs, external, topk, qt, dfTab, stats,
         Option(qtPre), Option(stPre))
     val qtGated = if (nQt <= maxQt) broadcast(qt) else qt
@@ -3585,14 +3583,9 @@ object TextAnalysis {
                     charBudget: Long = 20000L, nShards: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
-    // r15 landed these checkpoints on a plan argument (32 scans -> 4)
-    // but could not prove the wall win under that round's host load;
-    // conf-gated so both paths stay measurable (the runningTotal
-    // pattern), default set by this round's quiet paired A/B
-    val ckpt = spark.conf.getOption("graft.curationIncr.checkpoint")
-      .map(_.toBoolean).getOrElse(true)
-    def cp(df: DataFrame): DataFrame =
-      if (ckpt) df.localCheckpoint(false) else df
+    // the three checkpoints below cut the plan from 32 scans to 4; a
+    // quiet alternating A/B measured 2.72-2.98 s with them vs 3.08-3.46 s
+    // without
     def keepMin(df: DataFrame): DataFrame = df
       .withColumn("_keep", min(col("doc_id")).over(Window.partitionBy(col("h"))))
       .filter(col("doc_id") === col("_keep")).drop("_keep")
@@ -3603,7 +3596,7 @@ object TextAnalysis {
     // scan+md5+keep-min pipeline re-executes per reference (32 parquet
     // scans in the r15 before-plan). Slim rows only; text never
     // materializes.
-    val hist = cp(keepMin(slim))
+    val hist = keepMin(slim).localCheckpoint(false)
     // the arriving batch: docs with id%10==2 re-keyed; id%20==2 keeps its
     // text verbatim (a content-dup of the snapshot), the rest append a
     // unique suffix (new content)
@@ -3620,8 +3613,8 @@ object TextAnalysis {
         .select(col("doc_id"), col("lang"), col("n_chars"))
     // each selection table is read twice (export+retract / mark+retract):
     // checkpoint both so the two-pass budget prefix sum runs once each
-    val selM = cp(budget(merged))
-    val selH = cp(budget(hist))
+    val selM = budget(merged).localCheckpoint(false)
+    val selH = budget(hist).localCheckpoint(false)
     val exported = Sampling.shuffleExport(selM, col("doc_id"), nShards)
     val marked = exported
       .join(selH.select(col("doc_id").as("_pid")),

@@ -58,28 +58,13 @@ object Analytics {
       buckets: Int = 4096): DataFrame = {
     val shift = 64 - (64 - java.lang.Long.numberOfLeadingZeros(
       math.max(buckets, 2).toLong - 1))
-    // The bucketed rows feed TWO subtrees (the histogram pass and the
-    // per-bucket window join), and Spark has no common-subexpression
-    // materialization beyond exchange reuse — the ENTIRE upstream
-    // pipeline executes twice per call (2^levels times under q_rfm's
-    // three nested rank passes: 36 parquet scans in the r15
-    // before-plan). Whether that matters is scale-dependent, so it is a
-    // conf, not a constant: an r15 paired A/B at sf0.1 measured the
-    // lazy-localCheckpoint variant SLOWER solo (q_rfm 2.44→3.06 s,
-    // q_gini 0.60→0.86 s — the materialization barrier + extra job cost
-    // more than recomputing a 10k-row aggregate), so the local default
-    // recomputes; at deployment scale the upstream is a full base-table
-    // pass and `graft.runningTotal.checkpoint=true` materializes the
-    // aggregate-sized input once instead of scanning the base twice per
-    // nesting level (guide §3.3: truncate the plan where a subtree fans
-    // out — when the subtree is the expensive side).
-    val ckpt = rows.sparkSession.conf
-      .getOption("graft.runningTotal.checkpoint").exists(_.toBoolean)
-    val bucketed0 = rows.withColumn("_rt_b",
+    // bucketed feeds two subtrees (the histogram and the window join),
+    // so its upstream runs twice; a lazy checkpoint measured slower at
+    // sf0.1 (q_rfm 2.44 -> 3.06 s), so it recomputes
+    val bucketed = rows.withColumn("_rt_b",
       shiftright(org.apache.spark.sql.graft.VectorExprs
         .sortableBits(v.cast(DoubleType)), shift))
       .withColumn("_rt_w", weight.cast(LongType))
-    val bucketed = if (ckpt) bucketed0.localCheckpoint(false) else bucketed0
     val hist = bucketed.groupBy(col("_rt_b"))
       .agg(sum(col("_rt_w")).as("_rt_cnt"))
     // realized buckets only: ≤`buckets` rows by construction — the

@@ -2,7 +2,7 @@ package graft.transform
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
@@ -155,9 +155,7 @@ object ScriptTransform {
     // closure actually reads (measured ~25% on wide-input transforms)
     val rowMapper = new SchemaCodec.RowMapper(inSchema)
 
-    // one record's worth of script execution: identical on both paths
-    // below — the paths differ ONLY in how the input Row is produced and
-    // how the emitted tagged Rows leave the task
+    // one record's worth of script execution
     def runRecord(row: Row, buf: ListBuffer[Row]): Unit = {
       val record = rowMapper(row)
       val emitter = new Emitter {
@@ -189,61 +187,44 @@ object ScriptTransform {
       }
     }
 
-    // InternalRow fast path (default; graft.script.internalRow=false is
-    // the dual-path pin): the Dataset mapPartitions boundary DESERIALIZES
-    // EVERY input column to an external Row before the closure sees it —
-    // an opaque closure defeats column pruning, so a script reading 5 of
-    // 16 lineitem columns paid 16 conversions per row. Here the task
-    // reads the compiled plan's InternalRows directly through a lazy Row
-    // view (per-field CatalystTypeConverters on ACCESS — the same
-    // external values the encoder produced, converter-for-converter),
-    // and emitted tagged rows convert once to catalyst on the way out
-    // instead of through the encoder. The record view is valid for the
-    // duration of the transform call, same as the reference contract —
-    // the underlying (reused) UnsafeRow advances when the call returns.
-    val internal = df.sparkSession.conf
-      .getOption("graft.script.internalRow").forall(_.toBoolean)
-    val tagged: DataFrame =
-      if (internal) {
-        val inDts = inFields.map(_.dataType)
-        val taggedS = taggedSchema
-        val rdd = df1.queryExecution.toRdd.mapPartitions { irs =>
-          val convs = inDts.map(
-            org.apache.spark.sql.catalyst.CatalystTypeConverters
-              .createToScalaConverter)
-          val toCat = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(taggedS)
-          val view = new Object {
-            // one reusable lazy view per task — the script contract scopes
-            // a record to its transform call
-            var ir: org.apache.spark.sql.catalyst.InternalRow = null
-            val row: Row = new Row {
-              override def length: Int = inDts.length
-              override def get(i: Int): Any =
-                if (ir.isNullAt(i)) null else convs(i)(ir.get(i, inDts(i)))
-              override def isNullAt(i: Int): Boolean = ir.isNullAt(i)
-              override def copy(): Row = Row.fromSeq((0 until length).map(get))
-            }
-          }
-          irs.flatMap { ir0 =>
-            view.ir = ir0
-            val buf = new ListBuffer[Row]
-            runRecord(view.row, buf)
-            buf.result().map(r =>
-              toCat(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
-          }
+    // The task reads the compiled plan's InternalRows directly through a
+    // lazy Row view (per-field CatalystTypeConverters on ACCESS — the same
+    // external values a Row encoder produces, converter-for-converter), so
+    // an opaque closure reading 5 of 16 lineitem columns pays 5
+    // conversions per row, not 16; emitted tagged rows convert once to
+    // catalyst on the way out. A Dataset mapPartitions with a Row encoder
+    // measured 3-8% slower. The record view is valid for the duration of
+    // the transform call, same as the reference contract — the underlying
+    // (reused) UnsafeRow advances when the call returns.
+    val inDts = inFields.map(_.dataType)
+    val rdd = df1.queryExecution.toRdd.mapPartitions { irs =>
+      val convs = inDts.map(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter)
+      val toCat = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(taggedSchema)
+      val view = new Object {
+        // one reusable lazy view per task — the script contract scopes
+        // a record to its transform call
+        var ir: org.apache.spark.sql.catalyst.InternalRow = null
+        val row: Row = new Row {
+          override def length: Int = inDts.length
+          override def get(i: Int): Any =
+            if (ir.isNullAt(i)) null else convs(i)(ir.get(i, inDts(i)))
+          override def isNullAt(i: Int): Boolean = ir.isNullAt(i)
+          override def copy(): Row = Row.fromSeq((0 until length).map(get))
         }
-        org.apache.spark.sql.graft.InternalRowDF(
-          df1.sparkSession, taggedSchema, rdd)
-      } else {
-        df1.mapPartitions { rows =>
-          rows.flatMap { row =>
-            val buf = new ListBuffer[Row]
-            runRecord(row, buf)
-            buf.result()
-          }
-        }(Encoders.row(taggedSchema)).toDF()
       }
+      irs.flatMap { ir0 =>
+        view.ir = ir0
+        val buf = new ListBuffer[Row]
+        runRecord(view.row, buf)
+        buf.result().map(r =>
+          toCat(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+      }
+    }
+    val tagged = org.apache.spark.sql.graft.InternalRowDF(
+      df1.sparkSession, taggedSchema, rdd)
 
     TransformResult(tagged, outSchema, errSchema)
   }

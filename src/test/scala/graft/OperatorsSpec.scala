@@ -2813,25 +2813,27 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bm25 fused serve: bit-equal to the declarative join fallback, both paths") {
     import spark.implicits._
-    // fused kernel (default, under both gates) vs fusedServe=false
-    // declarative plan vs over-the-gate shuffled-join plan: same term
-    // histogram, same th-keyed df probe, same IEEE fp expression order,
-    // same integer sums — all three must agree to the bit on the real
-    // corpus (derived queries) and on an external table with duplicate
-    // (q_id, term) rows (multiplicity must score twice, like the join)
+    // fused kernel (under both gates) vs the declarative join with the
+    // vocab over its gate (qt broadcast, df shuffled) vs the query terms
+    // over theirs (qt shuffled): same term histogram, same th-keyed df
+    // probe, same IEEE fp expression order, same integer sums — all three
+    // must agree to the bit on the real corpus (derived queries) and on
+    // an external table with duplicate (q_id, term) rows (multiplicity
+    // must score twice, like the join)
+    def withConf[T](k: String, v: String)(f: => T): T = {
+      spark.conf.set(k, v)
+      try f finally spark.conf.unset(k)
+    }
     val corpus = Tables.documents(spark, dir)
     def run(): Array[String] = TextAnalysis.bm25(corpus)
       .orderBy("q_id", "rank").collect().map(_.toString)
     val fused = run()
-    spark.conf.set("graft.bm25.fusedServe", "false")
-    val declarative = try run() finally spark.conf.unset("graft.bm25.fusedServe")
+    val declarative = withConf("graft.bm25.maxBroadcastVocab", "0")(run())
     assert(fused.sameElements(declarative),
-      "bm25 fused serve diverged from the declarative fallback")
-    spark.conf.set("graft.bm25.maxBroadcastQueryTerms", "0")
-    val shuffled = try run()
-      finally spark.conf.unset("graft.bm25.maxBroadcastQueryTerms")
+      "bm25 fused serve diverged from the df-shuffled declarative plan")
+    val shuffled = withConf("graft.bm25.maxBroadcastQueryTerms", "0")(run())
     assert(fused.sameElements(shuffled),
-      "bm25 fused serve diverged from the over-the-gate shuffled plan")
+      "bm25 fused serve diverged from the qt-shuffled declarative plan")
     // external path with a duplicated (q_id, term) row
     val docs = Seq(
       (1L, "alpha beta beta gamma"),
@@ -2844,8 +2846,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       TextAnalysis.bm25(docs, topk = 4, queries = Some(dupQ))
         .orderBy("q_id", "rank").collect().map(_.toString)
     val extFused = runExt()
-    spark.conf.set("graft.bm25.fusedServe", "false")
-    val extDecl = try runExt() finally spark.conf.unset("graft.bm25.fusedServe")
+    val extDecl = withConf("graft.bm25.maxBroadcastVocab", "0")(runExt())
     assert(extFused.sameElements(extDecl),
       "bm25 fused serve diverged on duplicate external query terms")
   }
@@ -3155,19 +3156,5 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (nPred + nLabel > 0)
         assert(r.getDouble(6) === 2.0 * tp / (nPred + nLabel).toDouble)
     }
-  }
-
-  test("runningTotal checkpoint conf path is bit-equal to the recompute default") {
-    // graft.runningTotal.checkpoint=true is the deployment-scale setting
-    // (materialize the aggregate-sized input once instead of recomputing
-    // the upstream per fan-out branch); the local default recomputes.
-    // Both must produce identical rows — q_rfm exercises three NESTED
-    // rank passes, the deepest fan-out of the machinery.
-    import graft.queries.Analytics
-    def rows() = Analytics.qRfm(spark, dir).collect().toSeq
-    val plain = rows()
-    spark.conf.set("graft.runningTotal.checkpoint", "true")
-    try assert(rows() === plain)
-    finally spark.conf.unset("graft.runningTotal.checkpoint")
   }
 }

@@ -98,50 +98,45 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"bm25 fused serve should shuffle only the top-k window:\n$p")
   }
 
-  test("bm25 fallback: query-term and df joins broadcast; no corpus-keyed join") {
-    // with the fused serve disabled, the declarative fallback must keep
-    // its shape: the corpus token stream filtered map-side by the
-    // broadcast (Q x qterms) query-term table and scored against the
-    // broadcast vocab-sized df table — a sort-merge join on either
-    // would put every token row through an exchange before the
-    // hit-bounded (q_id, doc_id) aggregate. (bm25() itself is a
-    // DeferredDF; the plan variant with forced-under overrides exposes
-    // the inner shape without running the gate counts.)
-    spark.conf.set("graft.bm25.fusedServe", "false")
-    val p = try plan(graft.operators.TextAnalysis.bm25Plan(
-        Tables.documents(spark, dir), 101, 3, 5, None, Some(0L), Some(0L)))
-      finally spark.conf.unset("graft.bm25.fusedServe")
+  test("bm25 fallback: query-term join broadcast with the vocab over its gate") {
+    // qt under its gate, df over: the declarative plan must still filter
+    // the corpus token stream map-side by the broadcast (Q x qterms)
+    // query-term table — a sort-merge join there would put every token
+    // row through an exchange before the hit-bounded (q_id, doc_id)
+    // aggregate. (bm25() itself is a DeferredDF; the plan variant with
+    // forced overrides exposes the inner shape without running the gate
+    // counts.)
+    val p = plan(graft.operators.TextAnalysis.bm25Plan(
+      Tables.documents(spark, dir), 101, 3, 5, None, Some(0L), Some(Long.MaxValue)))
     assert(p.contains("BroadcastHashJoin"),
-      s"bm25 lost its broadcast joins:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"bm25 grew a sort-merge join on the corpus side:\n$p")
+      s"bm25 lost its query-term broadcast join:\n$p")
   }
 
   test("bm25: query-term and vocab broadcasts gated on counted size, both paths") {
-    // UNDER the gates the qt and df joins carry broadcast hints; OVER
-    // them only the 1-row stats crossJoin keeps its hint — the forced
-    // hint on a corpus-proportional query set (|Q| = 3N/qmod) or an
-    // unbounded vocabulary must disappear so the join degrades to a
-    // shuffle instead of a driver OOM (AQE may still broadcast from
-    // RUNTIME sizes, which is safe)
+    // under both gates the plan is the fused kernel (its own spec above).
+    // qt UNDER and df OVER: the qt join and the 1-row stats crossJoin
+    // carry broadcast hints, the df join does not; BOTH OVER: only the
+    // stats hint remains — the forced hint on a corpus-proportional query
+    // set (|Q| = 3N/qmod) or an unbounded vocabulary must disappear so
+    // the join degrades to a shuffle instead of a driver OOM (AQE may
+    // still broadcast from RUNTIME sizes, which is safe)
     val docs = Tables.documents(spark, dir)
     def hints(p: String): Int =
       "strategy=broadcast".r.findAllIn(p).length
-    // the under-the-gate DECLARATIVE shape is the fusedServe=false
-    // fallback (under both gates the default plan is the fused kernel,
-    // asserted in its own spec above)
-    spark.conf.set("graft.bm25.fusedServe", "false")
-    val under = try graft.operators.TextAnalysis
-        .bm25Plan(docs, 101, 3, 5, None, Some(0L), Some(0L))
-        .queryExecution.optimizedPlan.toString
-      finally spark.conf.unset("graft.bm25.fusedServe")
-    assert(hints(under) >= 3, s"qt/df/stats hints missing under the gate:\n$under")
+    val under = graft.operators.TextAnalysis
+      .bm25Plan(docs, 101, 3, 5, None, Some(0L), Some(Long.MaxValue))
+    val underP = under.queryExecution.optimizedPlan.toString
+    assert(hints(underP) == 2, s"expected only the qt and stats hints:\n$underP")
     val over = graft.operators.TextAnalysis.bm25Plan(docs, 101, 3, 5, None,
       Some(Long.MaxValue), Some(Long.MaxValue))
     val overP = over.queryExecution.optimizedPlan.toString
     assert(hints(overP) == 1,
       s"forced qt/df broadcast hints survive over the gate:\n$overP")
-    over.collect() // the shuffled path must also execute correctly
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val underRows = rows(under)
+    assert(underRows.nonEmpty)
+    assert(rows(over) === underRows, "bm25 over-gate rows differ from under-gate rows")
   }
 
   test("rrf vector leg: probe/query broadcasts gated on counted size, both paths") {
@@ -153,14 +148,19 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "strategy=broadcast".r.findAllIn(p).length
     val under = Similarity.lshMultiTopKGatedPlan(emb, isQ, k = 20,
         nQueriesOverride = Some(0L))
-      .queryExecution.optimizedPlan.toString
-    assert(hints(under) >= 2, s"probe/query hints missing under the gate:\n$under")
+    val underP = under.queryExecution.optimizedPlan.toString
+    assert(hints(underP) >= 2, s"probe/query hints missing under the gate:\n$underP")
     val over = Similarity.lshMultiTopKGatedPlan(emb, isQ, k = 20,
       nQueriesOverride = Some(Long.MaxValue))
     val overP = over.queryExecution.optimizedPlan.toString
     assert(hints(overP) == 0,
       s"forced probe/query broadcast hints survive over the gate:\n$overP")
-    over.collect() // the shuffled candidate join must also execute
+    // the shuffled candidate join returns the broadcast path's rows
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val underRows = rows(under)
+    assert(underRows.nonEmpty)
+    assert(rows(over) === underRows, "rrf vector leg over-gate rows differ")
   }
 
   test("q1: scan reads only the columns the query needs") {
@@ -916,8 +916,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // UNDER the gate the dup-touched id prune carries a broadcast hint;
     // the hint shows in the optimized logical join (robust against the
     // planner also choosing broadcast from size estimates at this sf)
-    val hinted = Dedup.substrDedupPlan(docs, 8, 50, Some(0L))
-      .queryExecution.optimizedPlan.toString
+    val under = Dedup.substrDedupPlan(docs, 8, 50, Some(0L))
+    val hinted = under.queryExecution.optimizedPlan.toString
     assert(hinted.contains("strategy=broadcast"),
       s"no broadcast hint under the gate:\n$hinted")
     // OVER the gate the hint is absent — the prune plans as a plain
@@ -928,7 +928,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!over.queryExecution.optimizedPlan.toString
         .contains("strategy=broadcast"),
       "forced broadcast hint survives over the involved-set gate")
-    over.collect() // the shuffled path must also execute correctly
+    // the shuffled semi-join keeps exactly the broadcast path's rows
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val underRows = rows(under)
+    assert(underRows.nonEmpty)
+    assert(rows(over) === underRows, "substr dedup over-gate rows differ")
   }
 
   test("span dedup: split() never evaluates inside a block HOF lambda") {

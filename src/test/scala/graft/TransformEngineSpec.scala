@@ -504,12 +504,11 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(py.alerts.collect()(0).getAs[Map[String, String]]("payload") === Map("id" -> "2"))
   }
 
-  test("script InternalRow fast path: bit-equal to the Row-encoder path, all channels") {
+  test("script transform: every codec family on all three channels") {
     import java.sql.{Date, Timestamp}
-    // the r15-deferred direct-InternalRow emitter, pinned against the
-    // encoder path on a schema exercising every codec family: scalars,
-    // string, binary, timestamp/date, nested struct/array/map, union,
-    // enum — plus the error and alert channels under RouteToErrors
+    // literal expected rows on a schema exercising every codec family:
+    // scalars, string, binary, timestamp/date, nested struct/array/map,
+    // union, enum — plus the error and alert channels under RouteToErrors
     val in = Seq(
       (1L, "ok", 2.5, Array[Byte](1, 2), Timestamp.valueOf("2026-01-02 03:04:05.000001"),
         Date.valueOf("2026-01-02"), Seq(1.0, 2.0), Map("k" -> 3.0)),
@@ -531,38 +530,42 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("a", LongType),
       SchemaCodec.enumField("flag", Seq("LOW", "HIGH")),
       SchemaCodec.unionField("u", Seq(LongType, StringType))))
-    def run(): (Array[String], Array[String], Array[String]) = {
-      val res = ScriptTransform(in, out,
-          onError = ScriptTransform.RouteToErrors(9)) { (r, em, ctx) =>
-        if (r("status") == "bad")
-          throw new IllegalArgumentException("bad status")
-        val info = r("info").asInstanceOf[Map[String, Any]]
-        if (r("id").asInstanceOf[Long] == 3L)
-          em.emitAlert(Map("why" -> "id3"))
-        em.emit(Map(
-          "id" -> r("id"),
-          "x2" -> r("x").asInstanceOf[Double] * 2,
-          "echo" -> r("payload"),
-          "ts" -> r("ts"), "day" -> r("day"),
-          "arr_sum" -> r("arr").asInstanceOf[Seq[Double]].sum,
-          "mk" -> r("m").asInstanceOf[Map[String, Any]].getOrElse("k", -1.0),
-          "a" -> info("a"),
-          "flag" -> (if (r("x").asInstanceOf[Double] > 1) "HIGH" else 0),
-          "u" -> (if (r("id").asInstanceOf[Long] == 1L) "one" else 2L)))
-      }.cached()
-      def key(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toSeq.map {
-        case b: Array[Byte] => b.toSeq
-        case v => v
-      }.toString).sorted
-      (key(res.out.collect()), key(res.errors.collect()), key(res.alerts.collect()))
+    val res = ScriptTransform(in, out,
+        onError = ScriptTransform.RouteToErrors(9)) { (r, em, ctx) =>
+      if (r("status") == "bad")
+        throw new IllegalArgumentException("bad status")
+      val info = r("info").asInstanceOf[Map[String, Any]]
+      if (r("id").asInstanceOf[Long] == 3L)
+        em.emitAlert(Map("why" -> "id3"))
+      em.emit(Map(
+        "id" -> r("id"),
+        "x2" -> r("x").asInstanceOf[Double] * 2,
+        "echo" -> r("payload"),
+        "ts" -> r("ts"), "day" -> r("day"),
+        "arr_sum" -> r("arr").asInstanceOf[Seq[Double]].sum,
+        "mk" -> r("m").asInstanceOf[Map[String, Any]].getOrElse("k", -1.0),
+        "a" -> info("a"),
+        "flag" -> (if (r("x").asInstanceOf[Double] > 1) "HIGH" else 0),
+        "u" -> (if (r("id").asInstanceOf[Long] == 1L) "one" else 2L)))
+    }.cached()
+    // binary cells compare by content
+    def values(r: Row): Seq[Any] = r.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
     }
-    val fast = run()
-    spark.conf.set("graft.script.internalRow", "false")
-    val slow = try run() finally spark.conf.unset("graft.script.internalRow")
-    assert(fast._1.sameElements(slow._1), "out channel diverged")
-    assert(fast._2.sameElements(slow._2), "error channel diverged")
-    assert(fast._3.sameElements(slow._3), "alert channel diverged")
-    assert(fast._1.length === 2 && fast._2.length === 1 && fast._3.length === 1)
+    val outRows = res.out.orderBy("id").collect().map(values)
+    assert(outRows.toSeq === Seq(
+      Seq(1L, 5.0, Seq[Byte](1, 2), Timestamp.valueOf("2026-01-02 03:04:05.000001"),
+        Date.valueOf("2026-01-02"), 3.0, 3.0, 1L, "HIGH", Row(null, "one")),
+      Seq(3L, 1.0, Seq[Byte](9), Timestamp.valueOf("2026-08-17 00:00:00"),
+        Date.valueOf("2026-08-17"), 7.0, 1.0, 3L, "LOW", Row(2L, null))))
+    val errRows = res.errors.collect().map(values)
+    assert(errRows.toSeq === Seq(
+      Seq(9, "IllegalArgumentException: bad status", 2L, "bad", -1.0, Seq.empty[Byte],
+        Timestamp.valueOf("1969-12-31 23:59:59.5"), Date.valueOf("1969-12-31"),
+        Seq.empty[Double], Map.empty[String, Double], Row(2L, -1.0))))
+    assert(res.alerts.collect().map(_.getAs[Map[String, String]]("payload")).toSeq ===
+      Seq(Map("why" -> "id3")))
   }
 
   test("python frame boundaries: multi-frame input, 5000-row fan-out, same rows") {
