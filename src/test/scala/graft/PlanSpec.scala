@@ -23,6 +23,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
+  /** Collected rows, order-free: the two sides of a gate must match. */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   test("q6: range filters push down to the parquet scan") {
     val p = plan(Relational.q6Filter(spark, dir))
     assert(p.contains("PushedFilters:"))
@@ -132,11 +136,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val overP = over.queryExecution.optimizedPlan.toString
     assert(hints(overP) == 1,
       s"forced qt/df broadcast hints survive over the gate:\n$overP")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
-    val underRows = rows(under)
+    val underRows = sortedRows(under)
     assert(underRows.nonEmpty)
-    assert(rows(over) === underRows, "bm25 over-gate rows differ from under-gate rows")
+    assert(sortedRows(over) === underRows, "bm25 over-gate rows differ from under-gate rows")
   }
 
   test("rrf vector leg: probe/query broadcasts gated on counted size, both paths") {
@@ -156,11 +158,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hints(overP) == 0,
       s"forced probe/query broadcast hints survive over the gate:\n$overP")
     // the shuffled candidate join returns the broadcast path's rows
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
-    val underRows = rows(under)
+    val underRows = sortedRows(under)
     assert(underRows.nonEmpty)
-    assert(rows(over) === underRows, "rrf vector leg over-gate rows differ")
+    assert(sortedRows(over) === underRows, "rrf vector leg over-gate rows differ")
   }
 
   test("q1: scan reads only the columns the query needs") {
@@ -929,11 +929,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         .contains("strategy=broadcast"),
       "forced broadcast hint survives over the involved-set gate")
     // the shuffled semi-join keeps exactly the broadcast path's rows
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
-    val underRows = rows(under)
+    val underRows = sortedRows(under)
     assert(underRows.nonEmpty)
-    assert(rows(over) === underRows, "substr dedup over-gate rows differ")
+    assert(sortedRows(over) === underRows, "substr dedup over-gate rows differ")
   }
 
   test("span dedup: split() never evaluates inside a block HOF lambda") {
