@@ -834,7 +834,7 @@ object Dedup {
     * distinct shingle hashes the df cap removed from pair generation —
     * 0 means the result is exact, >0 quantifies exactly how much signal
     * the cap traded away. Telemetry is fully lazy: building the operator
-    * triggers ZERO Spark jobs (plan-only callers — Explain, PLANS.md
+    * triggers ZERO Spark jobs (plan-only callers — PlanDump, PLANS.md
     * regeneration, registry enumeration — pay nothing), and the pair
     * DataFrame additionally carries an in-plan `observe` metric
     * (`ngram_df_cap.dropped`) that a once-per-session listener turns into

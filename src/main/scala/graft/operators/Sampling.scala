@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructField, StructType}
 
-import graft.core.Tables
+import graft.core.{PrefixScan, Tables}
 import org.apache.spark.sql.graft.VectorExprs.md5Long
 
 /** Deterministic sampling for training-data curation.
@@ -108,72 +108,33 @@ object Sampling {
     * slots. The hash order makes budget increases SUPERSETS, like the
     * rate sampler.
     *
-    * Scale shape — a TWO-PHASE prefix sum, not one window per stratum. A
-    * single `Window.partitionBy(stratum)` running sum routes every row of
-    * a stratum through ONE task (rank top-k gets the WindowGroupLimit
-    * pushdown; running sums get nothing), and real mixtures are skewed —
-    * "en" is half the web, so at 100 TB that one reducer sorts tens of
-    * TB. Instead the per-stratum hash order is range-split by the leading
-    * `bucketChars` hex digits of the ordering hash itself (buckets are
-    * CONTIGUOUS ranges of the hash order, so the global order is the
-    * bucket order then the within-bucket order):
-    *   1. per-(stratum, bucket) token totals — a tiny map-side-combined
-    *      aggregate, <= strata x 16^bucketChars rows;
-    *   2. exclusive cumulative offsets across each stratum's buckets — a
-    *      window over that tiny table (<= 16^bucketChars rows per
-    *      partition, whatever the corpus size);
-    *   3. offsets join back (broadcast-sized side) and buckets whose
-    *      offset already exceeds the budget are PRUNED before any sort —
-    *      when budget << stratum mass, almost all of the corpus never
-    *      reaches a window;
-    *   4. the running sum windows over (stratum, bucket) — per-task
-    *      input bounded by 16^-bucketChars of the largest stratum —
-    *      and adds the bucket offset.
-    * Identical output to the single-window formulation (the oracle IS
-    * that formulation). Token counts must be non-negative (true of any
-    * token/char/byte count) — the bucket prune relies on the running sum
-    * being monotone. */
+    * Scale shape: a [[PrefixScan]] running sum per stratum, bucketed by
+    * the leading `bucketChars` hex digits of the ordering hash, not one
+    * `Window.partitionBy(stratum)` running sum — that routes every row of
+    * a stratum through ONE task (running sums get no WindowGroupLimit
+    * pushdown), and real mixtures are skewed: "en" is half the web. The
+    * prune drops buckets whose offset already exceeds the budget before
+    * any sort, so when budget << stratum mass almost all of the corpus
+    * never reaches a window; it relies on non-negative token counts
+    * (true of any token/char/byte count). Identical output to the
+    * single-window formulation (the oracle IS that formulation).
+    * Reproducibility requires (key, tieBreak*) unique per row — pass
+    * e.g. the epoch column when feeding epochWeighted output, else which
+    * duplicate survives at the budget boundary is partition-order-
+    * dependent. Same-key rows share the hash, so they land in the same
+    * bucket and the split never reorders them. */
   def tokenBudget(df: DataFrame, stratum: Column, key: Column,
                   tokens: Column, budget: Long,
                   tieBreak: Seq[Column] = Nil,
-                  bucketChars: Int = 4): DataFrame = {
-    val tagged = df
-      .withColumn("_h", hashKey(key, "budget"))
-      .withColumn("_bkt",
-        conv(substring(col("_h"), 1, bucketChars), 16, 10).cast("long"))
-    // phase 1+2: per-bucket totals, then exclusive running offsets over
-    // each stratum's bucket list (tiny: strata x occupied buckets)
-    val wOff = Window.partitionBy(col("_s")).orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged.groupBy(stratum.as("_s"), col("_bkt").as("_b"))
-      .agg(sum(tokens).as("_bsum"))
-      .withColumn("_off", coalesce(sum(col("_bsum")).over(wOff), lit(0L)))
-      .select(col("_s"), col("_b"), col("_off"))
-    // ROWS, not the default RANGE frame: with duplicate (hash, key)
-    // ordering values (e.g. repeated keys from epochWeighted) RANGE sums
-    // all peers at once — every copy would see the combined total and
-    // all of them drop together, instead of taking rows until the
-    // budget trips. Reproducibility requires (key, tieBreak*) unique per
-    // row — pass e.g. the epoch column when feeding epochWeighted output,
-    // else which duplicate survives at the budget boundary is
-    // partition-order-dependent. Same-key rows share `_h`, so they land
-    // in the same bucket and the split never reorders them.
-    val wIn = Window.partitionBy(stratum, col("_bkt"))
-      .orderBy(col("_h") +: key +: tieBreak: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      // <=> on the bucket too: a null key hashes to a null bucket, and a
-      // plain === would silently DROP such rows instead of budgeting them.
-      // broadcast() explicitly (like packSequences): the offsets side is
-      // <= strata x 16^bucketChars rows by construction, and relying on
-      // AQE sizing would let a stats misestimate shuffle the corpus on
-      // (stratum, bucket) instead
-      .join(broadcast(offsets), stratum <=> col("_s") && col("_bkt") <=> col("_b"))
-      .filter(col("_off") <= budget) // phase-3 prune (nonneg tokens)
-      .withColumn("_cum", col("_off") + sum(tokens).over(wIn))
+                  bucketChars: Int = 4): DataFrame =
+    PrefixScan.running(df.withColumn("_h", hashKey(key, "budget")),
+        Seq(stratum),
+        bucket = conv(substring(col("_h"), 1, bucketChars), 16, 10).cast("long"),
+        order = col("_h") +: key +: tieBreak,
+        aggs = Seq(PrefixScan.Sum(tokens, "_cum")),
+        prune = Some(_ <= budget))
       .filter(col("_cum") <= budget)
-      .drop("_h", "_bkt", "_s", "_b", "_off", "_cum")
-  }
+      .drop("_h", "_cum")
 
   /** q_token_budget: up to 20k chars per language, hash-ordered. */
   def qTokenBudget(spark: SparkSession, dir: String): DataFrame =
@@ -243,43 +204,22 @@ object Sampling {
     * sequence (`seq_off`); a document may straddle a boundary, exactly as
     * concat-and-chunk packing does.
     *
-    * Scale shape: the same TWO-PHASE prefix sum as [[tokenBudget]], but
-    * global instead of per-stratum. A naive global running sum is a
-    * single-reducer sort of the corpus — the worst plan Spark can produce.
-    * Here the hash order is range-split by the leading `bucketChars` hex
-    * digits of the ordering hash: per-bucket totals are a tiny map-side-
-    * combined aggregate (<= 16^bucketChars rows), the exclusive bucket
-    * offsets are a window over THAT tiny table (single partition by
-    * design — its size is the constant 16^bucketChars, not the corpus),
-    * offsets broadcast back, and the corpus-side running sum windows over
-    * `_bkt` so per-task input is ~16^-bucketChars of the corpus. Token
-    * counts must be non-negative. */
+    * Scale shape: a global, exclusive [[PrefixScan]] running sum over
+    * the (hash, key) order — a doc's start offset is the mass strictly
+    * before it — bucketed by the leading `bucketChars` hex digits of the
+    * ordering hash, so per-task input is ~16^-bucketChars of the corpus
+    * where a naive global running sum is a single-reducer sort. A null
+    * key hashes to the null bucket and stays on the tape. Token counts
+    * must be non-negative. */
   def packSequences(df: DataFrame, key: Column, tokens: Column, ctxLen: Long,
-                    bucketChars: Int = 4): DataFrame = {
-    val tagged = df
-      .withColumn("_h", hashKey(key, "pack"))
-      .withColumn("_bkt",
-        conv(substring(col("_h"), 1, bucketChars), 16, 10).cast("long"))
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = tagged.groupBy(col("_bkt").as("_b"))
-      .agg(sum(tokens).as("_bsum"))
-      .withColumn("_off", coalesce(sum(col("_bsum")).over(wOff), lit(0L)))
-      .select(col("_b"), col("_off"))
-    // exclusive within-bucket running sum: a doc's start offset is the
-    // mass strictly before it in the (hash, key) order
-    val wIn = Window.partitionBy(col("_bkt")).orderBy(col("_h"), key)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // <=> not ===: a null key hashes to a null bucket, and a plain equi
-    // join would silently DROP such rows from the tape instead of packing
-    // them (same invariant as tokenBudget's offsets join)
-    tagged.join(broadcast(offsets), col("_bkt") <=> col("_b"))
-      .withColumn("start_off",
-        col("_off") + coalesce(sum(tokens).over(wIn), lit(0L)))
+                    bucketChars: Int = 4): DataFrame =
+    PrefixScan.running(df.withColumn("_h", hashKey(key, "pack")), Nil,
+        bucket = conv(substring(col("_h"), 1, bucketChars), 16, 10).cast("long"),
+        order = Seq(col("_h"), key),
+        aggs = Seq(PrefixScan.Sum(tokens, "start_off")), exclusive = true)
       .withColumn("seq_id", expr(s"start_off DIV ${ctxLen}"))
       .withColumn("seq_off", pmod(col("start_off"), lit(ctxLen)))
-      .drop("_h", "_bkt", "_b", "_off")
-  }
+      .drop("_h")
 
   /** q_pack: pack the documents corpus into 2048-char training sequences. */
   def qPack(spark: SparkSession, dir: String): DataFrame =
@@ -361,8 +301,9 @@ object Sampling {
     * Phase 1 is the one imperative piece in the packing family and
     * genuinely needs it (mapPartitions over bucket-sorted slim rows,
     * per-bucket state reset — per-task input is one hash range, text
-    * never enters); phase 2 globalizes sequence ids with the same tiny
-    * bucket-table window + broadcast join as [[packSequences]]. Docs
+    * never enters); phase 2 globalizes sequence ids with the
+    * [[PrefixScan.offsets]] of the per-bucket sequence counts. A null key
+    * packs into the null bucket, as in [[packSequences]]. Docs
     * longer than the context are truncated to one full sequence
     * (`truncated` flag; next-fit assumes items ≤ bin). Padding is
     * explicit: pad of sequence s = ctxLen − Σ n_eff over its docs
@@ -389,29 +330,23 @@ object Sampling {
       .select(col("_bkt"), col("_k"), col("_n0"), col("_n"))
       .mapPartitions { rows =>
         // per-bucket next-fit fold; buckets are contiguous in the sorted
-        // partition, state resets on bucket change
-        var bkt = Long.MinValue
+        // partition, state resets on bucket change (null: the null-key
+        // bucket)
+        var bkt: Option[Any] = None
         var fill = 0L
         var seq = -1L
         rows.map { r =>
-          val b = r.getLong(0)
+          val b = r.get(0)
           val n = r.getLong(3)
-          if (b != bkt) { bkt = b; fill = 0L; seq = -1L }
+          if (!bkt.contains(b)) { bkt = Some(b); fill = 0L; seq = -1L }
           val fits = seq >= 0 && fill + n <= ctxLen
           val off = if (fits) fill else 0L
           if (fits) fill += n else { seq += 1; fill = n }
           Row(b, r.get(1), r.getLong(2), n, seq, off)
         }
       }(Encoders.row(scanSchema)).toDF()
-    val wB = Window.orderBy(col("_bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // bucket sequence counts: tiny (16^bucketChars rows), single-
-    // partition window BY DESIGN, broadcast back — packSequences' shape
-    val bases = packed.groupBy(col("_bkt"))
-      .agg((max(col("bseq")) + 1).as("_nseq"))
-      .withColumn("_base", coalesce(sum(col("_nseq")).over(wB), lit(0L)))
-      .select(col("_bkt"), col("_base"))
-    packed.join(broadcast(bases), Seq("_bkt"))
+    PrefixScan.offsets(packed, Nil, col("_bkt"),
+        Seq(PrefixScan.Sum(max(col("bseq")) + 1, "_base")))
       .select(col("_k"), col("_n0"), col("_n").as("n_eff"),
         (col("_n") < col("_n0")).as("truncated"),
         (col("_base") + col("bseq")).as("seq_id"), col("seq_off"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{PrefixScan, Tables}
 import org.apache.spark.sql.graft.VectorExprs.md5Long
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.E).
@@ -2919,18 +2919,15 @@ object TextAnalysis {
     * once at the end, identically both sides.
     *
     * Scale shape: per-value counts are one map-combined vocab shuffle;
-    * the cumulative-count prefix over the value order is the
-    * tokenBudget two-phase split — value-RANGE buckets over the known
-    * score domain, per-bucket totals (constant-size table), exclusive
-    * offsets via a window over that table (≤ nBuckets rows on one task
-    * by design), offsets broadcast back, per-bucket windows bounded by
-    * ~N/nBuckets distinct values. No global sort, no single-reducer
+    * the cumulative counts over the value order are a [[PrefixScan]]
+    * running sum bucketed by value RANGE over the known score domain
+    * (<= nBuckets offsets rows, per-bucket windows bounded by
+    * ~N/nBuckets distinct values). No global sort, no single-reducer
     * running sum. Integer bound: valid while n_a·n_b < 2^63 (samples up
     * to ~3×10⁹ rows each — drift monitors compare bounded samples; at
     * full-corpus scale feed it the per-value counts of a hash sample). */
   def ksStatistic(df: DataFrame, value: Column, isA: Column,
                   lo: Double, hi: Double, nBuckets: Int = 128): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perV = df.select(value.as("_v"), isA.as("_ia"))
       .groupBy(col("_v"))
       .agg(sum(when(col("_ia"), 1L).otherwise(0L)).as("_ca"),
@@ -2938,22 +2935,9 @@ object TextAnalysis {
     val bkt = least(greatest(
         floor((col("_v") - lit(lo)) / lit(hi - lo) * nBuckets), lit(0.0)),
       lit(nBuckets - 1.0)).cast(LongType)
-    val withB = perV.withColumn("_bkt", bkt)
-    // exclusive per-bucket offsets: designed single-partition window
-    // over the <= nBuckets-row totals table (the tokenBudget pattern)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withB.groupBy(col("_bkt").as("_b"))
-      .agg(sum(col("_ca")).as("_bca"), sum(col("_cb")).as("_bcb"))
-      .withColumn("_offa", coalesce(sum(col("_bca")).over(wOff), lit(0L)))
-      .withColumn("_offb", coalesce(sum(col("_bcb")).over(wOff), lit(0L)))
-      .select(col("_b"), col("_offa"), col("_offb"))
-    val wIn = Window.partitionBy(col("_bkt")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = withB
-      .join(broadcast(offsets), col("_bkt") === col("_b"))
-      .withColumn("_cuma", col("_offa") + sum(col("_ca")).over(wIn))
-      .withColumn("_cumb", col("_offb") + sum(col("_cb")).over(wIn))
+    val cum = PrefixScan.running(perV, Nil, bkt, Seq(col("_v")),
+      Seq(PrefixScan.Sum(col("_ca"), "_cuma"),
+        PrefixScan.Sum(col("_cb"), "_cumb")))
     // totals fold out of the per-value table — a second scan of `df`
     // would recompute the whole upstream chain (for tx_ks_drift that is
     // a full mlQuality scoring pass) just to count rows per side
@@ -3750,7 +3734,7 @@ object TextAnalysis {
     * .graft.DeferredDF]] — building it runs ZERO Spark jobs. The
     * train-half aggregation and the model collect happen at first
     * ACTION (driver-side, inside the deferred node's doExecute), so
-    * plan-only callers (Explain, PLANS.md, registry enumeration) pay
+    * plan-only callers (PlanDump, PLANS.md, registry enumeration) pay
     * nothing, and repeated executions reuse the memoized model. */
   def lmScore(docs: DataFrame, minCount: Long = 1): DataFrame =
     org.apache.spark.sql.graft.DeferredDF(docs.sparkSession,
@@ -4058,7 +4042,7 @@ object TextAnalysis {
     * bigram stream; Spark picks broadcast vs shuffle-hash per its size
     * stats, so "model too big" degrades to a shuffle join instead of an
     * OOM. Lazier too: nothing executes at construction time (the shape
-    * Explain/plan-snapshot callers should build). Costs one extra
+    * PlanDump/plan-snapshot callers should build). Costs one extra
     * per-doc re-aggregate over the serve half's exploded bigrams vs the
     * mapPartitions serve (3.0 s vs 1.35 s at x100) — that premium buys
     * the unbounded-model path. */
@@ -4189,7 +4173,7 @@ object TextAnalysis {
     // tokenize+explode+aggregate pipeline executes three times (10-scan
     // r15 before-plan). The checkpoint is vocab-sized (Heaps-bounded):
     // cheap to hold, corpus-expensive to recompute — the inverse of the
-    // withRunningTotal case where recompute won the A/B.
+    // PrefixScan input, where recompute won the A/B.
     val uni = docs.select(explode(w).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("u"))
       .localCheckpoint(false)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{PrefixScan, Tables}
 import Relational.{scaled, dsum, DecSum}
 
 /** Business-analytics query surface (SURVEY.md §2.B, round-11 batch):
@@ -21,62 +21,38 @@ import Relational.{scaled, dsum, DecSum}
   *
   * Scale signature: nothing here materializes an unbounded per-key
   * buffer or an unpartitioned corpus-sized window. Global order
-  * statistics (RFM quartiles, the Gini rank-weighted sum) run on the
-  * bucket-offset pattern of [[withRunningTotal]]: a fixed monotone
-  * bucketing of the value line, ONE tiny realized-bucket histogram
-  * whose prefix sum is the designed single-partition window, and
-  * per-bucket partitioned windows for the within-bucket remainder —
-  * the same two-pass shape as Relational.valueAtRanks, generalized to
-  * per-row ranks/offsets.
+  * statistics (RFM quartiles, the Gini rank-weighted sum) run on
+  * [[withRunningTotal]], a [[graft.core.PrefixScan]] over a fixed
+  * monotone bucketing of the value line.
   */
 object Analytics {
 
   // ---- distributed exact running totals ---------------------------------
 
   /** Appends `outCol` = INCLUSIVE running sum of `weight` over the
-    * total order (`v`, `tie`) — rank when weight == 1 — without a
-    * global single-partition window.
-    *
-    * Pass 1 buckets every row by the high bits of the order-preserving
-    * IEEE bit pattern of `v` (VectorExprs.sortableBits — a fixed
-    * monotone map of the whole double line, no data-dependent bounds),
-    * aggregates per-bucket weight sums (map-combined, ≤`buckets` rows),
-    * and prefix-sums that tiny table in the one designed
-    * single-partition window. Pass 2 joins the broadcast offsets back
-    * and adds a PER-BUCKET running sum (partitioned window, ~n/buckets
-    * rows per partition; Spark's window sort spills, so a hot bucket —
-    * many rows sharing one value — degrades to disk, not OOM).
+    * total order (`v`, `tie`) — rank when weight == 1 — as a
+    * [[PrefixScan]] running sum bucketed by the high bits of the
+    * order-preserving IEEE bit pattern of `v` (VectorExprs.sortableBits —
+    * a fixed monotone map of the whole double line, no data-dependent
+    * bounds). Spark's window sort spills, so a hot bucket (many rows
+    * sharing one value) degrades to disk, not OOM.
     *
     * `v` must be exactly representable as double (|v| < 2^53 for
     * integer metrics — callers here scale within that) and `tie` must
     * complete a total order for a deterministic result; ranks among
     * EQUAL `v` depend on `tie` but weight-sums over them commute, so
     * order-statistic consumers (quartile cuts, the Gini Σrank·x) are
-    * tie-stable either way. */
+    * tie-stable either way. A null `v` ranks first. */
   private[graft] def withRunningTotal(rows: DataFrame, v: Column,
       tie: Column, weight: Column, outCol: String,
       buckets: Int = 4096): DataFrame = {
     val shift = 64 - (64 - java.lang.Long.numberOfLeadingZeros(
       math.max(buckets, 2).toLong - 1))
-    // bucketed feeds two subtrees (the histogram and the window join),
-    // so its upstream runs twice; a lazy checkpoint measured slower at
-    // sf0.1 (q_rfm 2.44 -> 3.06 s), so it recomputes
-    val bucketed = rows.withColumn("_rt_b",
-      shiftright(org.apache.spark.sql.graft.VectorExprs
-        .sortableBits(v.cast(DoubleType)), shift))
-      .withColumn("_rt_w", weight.cast(LongType))
-    val hist = bucketed.groupBy(col("_rt_b"))
-      .agg(sum(col("_rt_w")).as("_rt_cnt"))
-    // realized buckets only: ≤`buckets` rows by construction — the
-    // bounded single-partition window of the valueAtRanks pattern
-    val off = hist.withColumn("_rt_lo",
-        sum(col("_rt_cnt")).over(Window.orderBy(col("_rt_b"))) - col("_rt_cnt"))
-      .select(col("_rt_b"), col("_rt_lo"))
-    val wb = Window.partitionBy(col("_rt_b")).orderBy(v, tie)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed.join(broadcast(off), "_rt_b")
-      .withColumn(outCol, col("_rt_lo") + sum(col("_rt_w")).over(wb))
-      .drop("_rt_b", "_rt_w", "_rt_lo")
+    PrefixScan.running(rows, Nil,
+      bucket = shiftright(org.apache.spark.sql.graft.VectorExprs
+        .sortableBits(v.cast(DoubleType)), shift),
+      order = Seq(v, tie),
+      aggs = Seq(PrefixScan.Sum(weight.cast(LongType), outCol)))
   }
 
   /** Rank 1..n over the total order (`v`, `tie`) — running count. */

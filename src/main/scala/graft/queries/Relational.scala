@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.core.{Skew, Tables}
+import graft.core.{PrefixScan, Skew, Tables}
 
 /** Relational / analytics query surface (SURVEY.md §2.B).
   *
@@ -1593,15 +1593,12 @@ object Relational {
     * event with lag > watermark is exactly the event
     * withWatermark would drop; this table says how many and how bad.
     *
-    * Scale shape: the running max over arrival order is the two-phase
-    * split again with max instead of sum — per-bucket maxima over
-    * contiguous event_id ranges (max is associative, so bucket order +
-    * within-bucket order compose), exclusive prefix max via a window
-    * over the tiny bucket table, broadcast back, within-bucket running
-    * max bounded by the bucket size. No global sort, no single-reducer
-    * window. Lags are exact epoch-micros integers. */
+    * Scale shape: the running max over arrival order is an exclusive
+    * [[PrefixScan]] running MAX, bucketed by the leading two hex digits of
+    * the arrival hash (contiguous ranges of the arrival order). No global
+    * sort, no single-reducer window. Lags are exact epoch-micros
+    * integers. */
   def stLateAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the generator's events arrive in perfect event-time order
     // (event_id order == ts order), which would make the audit
     // trivially all-zero — so ARRIVAL order is a deterministic md5
@@ -1612,22 +1609,13 @@ object Relational {
       .select(col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("_tm"))
       .withColumn("_h", md5(concat(col("event_id").cast("string"), lit(":arr"))))
-      .withColumn("_bkt", conv(substring(col("_h"), 1, 2), 16, 10).cast("long"))
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ev.groupBy(col("_bkt").as("_b")).agg(max(col("_tm")).as("_bm"))
-      .withColumn("_pmax", max(col("_bm")).over(wOff)) // null for 1st bucket
-      .select(col("_b"), col("_pmax"))
-    val wIn = Window.partitionBy(col("_bkt")).orderBy(col("_h"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val lagged = ev.join(broadcast(offsets), col("_bkt") === col("_b"))
-      .withColumn("_prevmax",
-        greatest(coalesce(max(col("_tm")).over(wIn), lit(Long.MinValue)),
-          coalesce(col("_pmax"), lit(Long.MinValue))))
-      // first arrival overall: no predecessor → lag 0 by definition
+    val lagged = PrefixScan.running(ev, Nil,
+        bucket = conv(substring(col("_h"), 1, 2), 16, 10).cast("long"),
+        order = Seq(col("_h"), col("event_id")),
+        aggs = Seq(PrefixScan.Max(col("_tm"), "_prevmax")), exclusive = true)
+      // first arrival overall: no predecessor (null) → lag 0 by definition
       .withColumn("lag_us",
-        greatest(when(col("_prevmax") === Long.MinValue, 0L)
-          .otherwise(col("_prevmax") - col("_tm")), lit(0L)))
+        greatest(coalesce(col("_prevmax") - col("_tm"), lit(0L)), lit(0L)))
     lagged.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("lag_us") > 3600L * 1000000L, 1L).otherwise(0L))
@@ -1637,10 +1625,7 @@ object Relational {
   }
 
   /** Oracle = the single running-max window over the same arrival
-    * permutation, which the two-phase split must reproduce bit-for-bit
-    * (the md5 bucket prefix is a contiguous range of the md5 order, so
-    * bucket order + within-bucket order composes — the tokenBudget
-    * invariant with max for sum). */
+    * permutation, which the two-phase split must reproduce bit-for-bit. */
   val stLateAuditSql: String =
     """WITH ev AS (
       |  SELECT event_id, event_type,
@@ -1685,10 +1670,8 @@ object Relational {
     * drift from the streaming twin's exact BigInt accumulation.
     *
     * Scale shape: running (n, Σv, Σv²) per type over (ts, event_id)
-    * order via the two-phase split (the stLateAudit/tokenBudget
-    * machinery) — per-(type, hour-bucket) partials, exclusive prefix
-    * over the tiny bucket table, broadcast back, within-bucket
-    * windows — never a per-type corpus-sized window partition. The
+    * order is an exclusive [[PrefixScan]] running sum bucketed by the
+    * hour — never a per-type corpus-sized window partition. The
     * streaming twin (EventStreams.anomalyState, flatMapGroupsWithState)
     * carries (n, Σv, Σv², count) per key — constant state — and the
     * spec asserts its final counts equal this batch result across
@@ -1698,35 +1681,14 @@ object Relational {
     val ev = ev0.select(col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("_tm"),
         floor(col("value") * lit(1000000.0) + lit(0.5)).cast(LongType).as("_v"))
-      .withColumn("_bkt", expr("_tm div 3600000000"))
-    val zero = lit(0L).cast(dec)
-    val parts = ev.groupBy(col("event_type").as("_g"), col("_bkt").as("_b"))
-      .agg(count(lit(1)).as("_pn"),
-        sum(col("_v").cast(dec)).as("_ps"),
-        sum(col("_v").cast(dec) * col("_v").cast(dec)).as("_ps2"))
-    val wOff = Window.partitionBy(col("_g")).orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = parts.select(col("_g"), col("_b"),
-      coalesce(sum(col("_pn")).over(wOff), lit(0L)).as("_on"),
-      coalesce(sum(col("_ps")).over(wOff), zero).as("_os"),
-      coalesce(sum(col("_ps2")).over(wOff), zero).as("_os2"))
-    val wIn = Window.partitionBy(col("event_type"), col("_bkt"))
-      .orderBy(col("_tm"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val run = ev
-      .join(broadcast(offs),
-        col("event_type") === col("_g") && col("_bkt") === col("_b"))
-      .withColumn("_rn", col("_on") + count(lit(1)).over(wIn))
-      .withColumn("_rs",
-        (col("_os") + coalesce(sum(col("_v").cast(dec)).over(wIn), zero))
-          .cast(dec))
-      .withColumn("_rs2",
-        (col("_os2") +
-          coalesce(sum(col("_v").cast(dec) * col("_v").cast(dec))
-            .over(wIn), zero))
-          .cast(dec))
-    val nD = col("_rn").cast(dec)
     val vD = col("_v").cast(dec)
+    val run = PrefixScan.running(ev, Seq(col("event_type")),
+      bucket = expr("_tm div 3600000000"),
+      order = Seq(col("_tm"), col("event_id")),
+      aggs = Seq(PrefixScan.Sum(lit(1L), "_rn"), PrefixScan.Sum(vD, "_rs"),
+        PrefixScan.Sum(vD * vD, "_rs2")),
+      exclusive = true)
+    val nD = col("_rn").cast(dec)
     val lhs = (nD * vD - col("_rs")).cast(dec)
     val anom = col("_rn") >= warmup.toLong &&
       (lhs * lhs).cast(dec) >

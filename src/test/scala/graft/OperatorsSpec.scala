@@ -942,6 +942,29 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     case _ => }
   }
 
+  test("next-fit packing keeps null-key rows in the null bucket") {
+    import spark.implicits._
+    import graft.operators.Sampling
+    // a null key hashes to the null bucket: the scan must read it and the
+    // bases join must be null-safe, or the task fails or the row vanishes
+    val docs = Seq((Some(1L), 10L), (None, 7L), (Some(3L), 5L))
+      .toDF("doc_id", "n_chars")
+    val out = Sampling.nextFitPack(docs, col("doc_id"), col("n_chars"), 16L)
+      .collect()
+    assert(out.length === 3, s"null-key row dropped: ${out.mkString(", ")}")
+    val seqs = out.map(r => (r.getLong(r.fieldIndex("seq_id")),
+      r.getLong(r.fieldIndex("seq_off")), r.getLong(r.fieldIndex("n_eff"))))
+    // sequence ids stay dense and no sequence overflows the context
+    val ids = seqs.map(_._1).toSet
+    assert(ids === (0L until ids.size).toSet, s"sequence ids not dense: $ids")
+    seqs.groupBy(_._1).foreach { case (id, rs) =>
+      assert(rs.map(r => r._2 + r._3).max <= 16L, s"sequence $id overflows") }
+    // the null bucket sorts first, so the null-key row opens sequence 0
+    val nullRow = out.find(_.isNullAt(0)).get
+    assert(nullRow.getLong(nullRow.fieldIndex("seq_id")) === 0L &&
+      nullRow.getLong(nullRow.fieldIndex("seq_off")) === 0L)
+  }
+
   test("mixture solver: rates solve the recipe, clamp at 1, selection matches the hash threshold") {
     import graft.operators.Sampling
     val docs = Tables.documents(spark, dir)
@@ -2574,21 +2597,57 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("withRunningTotal equals the single-window row_number / running sum") {
     import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.expressions.Window
+    import graft.core.PrefixScan
     val rnd = new scala.util.Random(11)
-    // negatives, ties, and zero — the sortableBits bucketing must order
-    // the whole double line; ties resolve by the tie column
+    // negatives, ties, zero and a null value — the sortableBits bucketing
+    // must order the whole double line, null first as the single window
+    // does; ties resolve by the tie column. A null stratum rides along for
+    // the per-stratum shapes below.
     val rows = (1 to 500).map(i =>
-      (i.toLong, math.round(rnd.nextGaussian() * 3).toDouble, rnd.nextInt(5) + 1L))
-    val df = rows.toDF("id", "v", "w")
-    val got = graft.queries.Analytics.withRunningTotal(df,
-        col("v"), col("id"), col("w"), "rt", buckets = 16)
-      .select("id", "rt").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = Window.orderBy(col("v"), col("id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val exp = df.withColumn("rt", sum(col("w")).over(w))
-      .select("id", "rt").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === exp, "bucket-offset running total diverged from the global window")
+      (i.toLong, Option(math.round(rnd.nextGaussian() * 3).toDouble),
+        rnd.nextInt(5) + 1L, Option(s"g${i % 3}"))) ++
+      Seq((501L, None, 2L, Some("g1")), (502L, Some(1.0), 3L, None))
+    val df = rows.toDF("id", "v", "w", "g")
+    def frame(part: Seq[Column], exclusive: Boolean) =
+      Window.partitionBy(part: _*).orderBy(col("v"), col("id"))
+        .rowsBetween(Window.unboundedPreceding,
+          if (exclusive) -1 else Window.currentRow)
+    // (id, got) multisets; the clue names the first rows either side lacks
+    def same(got: DataFrame, exp: DataFrame, what: String): Unit = {
+      def pairs(d: DataFrame) =
+        d.select(col("id"), col("got").cast("string")).collect()
+          .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq.sorted
+      val (g, e) = (pairs(got), pairs(exp))
+      assert(g.diff(e).isEmpty && e.diff(g).isEmpty, s"$what diverged from " +
+        s"the single window: got ${g.diff(e).take(5)}, want ${e.diff(g).take(5)}")
+    }
+    same(graft.queries.Analytics.withRunningTotal(df,
+        col("v"), col("id"), col("w"), "got", buckets = 16),
+      df.withColumn("got", sum(col("w")).over(frame(Nil, exclusive = false))),
+      "withRunningTotal")
+    // the helper's other shapes against the same single-window reference;
+    // duplicated rows tie on the whole order, so the ROWS frame must hand
+    // each copy its own total (a RANGE frame gives every peer the sum)
+    val bucket = floor(col("v") / 2).cast("long")
+    val order = Seq(col("v"), col("id"))
+    val dup = df.union(df.filter(pmod(col("id"), lit(7L)) === 0))
+    val shapes = Seq(
+      ("per-stratum inclusive sum", df, Seq(col("g")),
+        PrefixScan.Sum(col("w"), "got"), false,
+        sum(col("w")).over(frame(Seq(col("g")), exclusive = false))),
+      ("exclusive sum", df, Nil, PrefixScan.Sum(col("w"), "got"), true,
+        coalesce(sum(col("w")).over(frame(Nil, exclusive = true)), lit(0L))),
+      ("per-stratum exclusive max", df, Seq(col("g")),
+        PrefixScan.Max(col("w"), "got"), true,
+        max(col("w")).over(frame(Seq(col("g")), exclusive = true))),
+      ("duplicate order keys", dup, Nil, PrefixScan.Sum(col("w"), "got"),
+        false, sum(col("w")).over(frame(Nil, exclusive = false))))
+    shapes.foreach { case (name, in, by, agg, exclusive, reference) =>
+      same(PrefixScan.running(in, by, bucket, order, Seq(agg), exclusive),
+        in.withColumn("got", reference), name)
+    }
   }
 
   test("triangleCount: K4 plus a triangle-free path counts exactly 4") {

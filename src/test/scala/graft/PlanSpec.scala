@@ -721,7 +721,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lm score / ngram jaccard: construction and explain trigger zero Spark jobs") {
-    // plan-only callers (Explain, PLANS.md regeneration, registry
+    // plan-only callers (PlanDump, PLANS.md regeneration, registry
     // enumeration) must pay nothing: the lm model collect is deferred to
     // first action (DeferredDF) and the ngram telemetry count became an
     // on-demand thunk + in-plan observe metric
