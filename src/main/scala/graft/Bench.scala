@@ -68,10 +68,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.local()
     // the write action runs its own QueryExecution (the DataFrame's plan
     // object never executes) — capture it via listener to read metrics
     @volatile var captured: org.apache.spark.sql.execution.QueryExecution = null
@@ -133,7 +131,7 @@ object Bench {
     // (loadavg < 2) and clamps them to 2x per run — a loaded run can
     // only LOWER a baseline (legitimate permanent slowdowns still
     // converge over successive quiet rounds; noise never compounds).
-    val noisyMult = if (la0 > cpus.toInt / 8.0) 2.0 else 3.0
+    val noisyMult = if (la0 > cpus / 8.0) 2.0 else 3.0
     runOnce("q1_agg") // warm-up (reported failure is visible but untimed)
     // optional args = substring filters for a fast local iteration loop
     // (the driver passes none and times the full surface)

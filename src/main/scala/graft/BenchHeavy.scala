@@ -67,7 +67,7 @@ object BenchHeavy {
     * engine. 100x (500k docs) puts real work on both sides. Same
     * reasoning moved the two LINEAR lineitem queries here (60M rows):
     * at x10 their Spark time is the 2-column scan floor itself
-    * (QProfile: 0.27 s scan+count vs 0.84 s q1_agg total), so the x10
+    * (0.27 s scan+count vs 0.84 s q1_agg total), so the x10
     * ratio graded the JVM's fixed startup against DuckDB's in-process
     * scan, not the aggregation engines. The pair-shaped lineitem query
     * (q_unpivot's 6× row explosion) stays at x10 where its work already
@@ -88,7 +88,7 @@ object BenchHeavy {
     // joins (de-texted: 3.6 -> 2.8 s at x100)
     "dd_winnow", "tx_lm_score",
     // q_quantile_select moved here from x10 by the tier's own criterion:
-    // a stage profile (Probe stages, x10) put ~0.9 s of its ~1.8 s wall
+    // a stage profile at x10 put ~0.9 s of its ~1.8 s wall
     // in driver/AQE fixed latency (two jobs: the eager histogram
     // collect, then the probe pass) — under 50% work share, so the x10
     // ratio graded the two-job driver constant against DuckDB's
@@ -99,7 +99,8 @@ object BenchHeavy {
   /** q1_agg alone at 300x (180M rows): at x100 its Spark time is still
     * ~40% fixed floor (0.5 s scheduler+scan setup vs DuckDB's ~0.05 s
     * in-process start), so the x100 ratio graded the floor, not the
-    * aggregation engines — per-row work is within 1.5x (Q1Probe).
+    * aggregation engines — per-row work is within 1.5x (a split-long
+    * vs DECIMAL vs bare-scan decomposition, PLANS.md).
     * Fitting measured tiers (x100 1.2 s / x300 ~2.3 s Spark vs 0.55 /
     * 1.10 DuckDB) gives Spark a ~0.7 s fixed floor vs DuckDB's ~0.27 s:
     * at x300 the floor is STILL a third of Spark's wall. x600 (360M
@@ -126,8 +127,7 @@ object BenchHeavy {
       .split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Build the deterministic nReps-replica tier under `dir` (also used
-    * by Probe to rebuild a tier's data without running the suite). */
+  /** Build the deterministic nReps-replica tier under `dir`. */
   def buildReplicas(spark: org.apache.spark.sql.SparkSession,
                     srcDir: String, dir: String, nReps: Int,
                     tables: Set[String] = Set("documents", "lineitem"),
@@ -226,28 +226,37 @@ object BenchHeavy {
       }
   }
 
+  /** Replication factor of the x10 tiers; x100 and x600 multiply it. */
+  private val reps = 10
+
+  /** Build every tier's data under `outDir` (x10, x10g, x10u, x100,
+    * x600); a tier table already built is kept. */
+  def buildTiers(spark: org.apache.spark.sql.SparkSession,
+                 srcDir: String, outDir: String): Unit = {
+    buildReplicas(spark, srcDir, s"$outDir/x10", reps,
+      Set("documents", "lineitem", "embeddings"))
+    buildReplicas(spark, srcDir, s"$outDir/x10g", reps, Set("lineitem"),
+      offsetPartkey = true)
+    buildReplicas(spark, srcDir, s"$outDir/x10u", reps, Set("documents"),
+      rotateTokens = true)
+    buildReplicas(spark, srcDir, s"$outDir/x100", reps * 10)
+    buildReplicas(spark, srcDir, s"$outDir/x600", reps * 60, Set("lineitem"))
+  }
+
+  /** `BenchHeavy [outDir] [query,…]` builds the tiers and runs the suite;
+    * `BenchHeavy gen [outDir]` only builds the tiers. */
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = args.headOption.getOrElse("/tmp/graft_heavy")
-    val reps = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", 64)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val gen = args.headOption.contains("gen")
+    val outDir = args.lift(if (gen) 1 else 0).getOrElse("/tmp/graft_heavy")
+    val spark = graft.core.GraftSession.local(64)
+    buildTiers(spark, srcDir, outDir)
+    if (gen) { spark.stop(); return }
     val x10 = s"$outDir/x10"
     val x10g = s"$outDir/x10g"
     val x10u = s"$outDir/x10u"
     val x100 = s"$outDir/x100"
     val x600 = s"$outDir/x600"
-    buildReplicas(spark, srcDir, x10, reps,
-      Set("documents", "lineitem", "embeddings"))
-    buildReplicas(spark, srcDir, x10g, reps, Set("lineitem"),
-      offsetPartkey = true)
-    buildReplicas(spark, srcDir, x10u, reps, Set("documents"),
-      rotateTokens = true)
-    buildReplicas(spark, srcDir, x100, reps * 10)
-    buildReplicas(spark, srcDir, x600, reps * 60, Set("lineitem"))
     val dirFor: Map[String, String] =
       (heavyX10.map(_ -> x10) ++ heavyX10Graph.map(_ -> x10g) ++
         heavyX10U.map(_ -> x10u) ++

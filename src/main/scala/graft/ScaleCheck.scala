@@ -10,7 +10,8 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
   * work at 100x?", exercised against the DSv2 generator so no test data
   * is needed.
   *
-  * Usage: runMain graft.ScaleCheck [rows] [dupPct] [vocabMul] [ops] [docWords]
+  * Usage: runMain graft.ScaleCheck [-c key=value]… [rows] [dupPct] [vocabMul] [ops] [docWords]
+  *  - `-c key=value`: session confs for rehearsal A/Bs, as in graft.Profile.
   *  - ops: comma-separated op filter (default all), e.g.
   *    `dd_simhash_sigs,dd_simhash_pairs` for the 10M banding rehearsal.
   *  - dupPct > 0 plants corpus-scale duplicate clusters (web-dup-density
@@ -19,6 +20,7 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
   *    be a driver broadcast.
   *  - vocabMul widens the 30-word generator vocabulary (x vocabMul), the
   *    realistic-density setting for simhash candidate-count rehearsals.
+  * Each op's stages go to stderr, slowest first.
   */
 object ScaleCheck {
   /** Deterministic 64-dim embedding per doc: xxhash64(doc_id, dim)
@@ -47,69 +49,40 @@ object ScaleCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 100000L
-    val dupPct = if (args.length > 1) args(1).toInt else 0
-    val vocabMul = if (args.length > 2) args(2).toInt else 1
+    val cli = Profile.parseCli(args.toSeq)
+    val pos = cli.positional
+    val rows = if (pos.nonEmpty) pos(0).toLong else 100000L
+    val dupPct = if (pos.length > 1) pos(1).toInt else 0
+    val vocabMul = if (pos.length > 2) pos(2).toInt else 1
     val opsFilter: String => Boolean =
-      if (args.length > 3) args(3).split(",").toSet else (_ => true)
+      if (pos.length > 3) pos(3).split(",").toSet else (_ => true)
     // arg 5: avg words/doc (0 = the 20-80-word default) — the LONG-
     // document regime for the span-dedup block machinery, where a
     // quadratic blocks/doc term would dominate
-    val docWords = if (args.length > 4) args(4).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val docWords = if (pos.length > 4) pos(4).toInt else 0
+    val cpus = graft.core.GraftSession.cpus
     // spill-aware partition sizing: ~50 shingle-rows per doc means 32
     // partitions stop fitting in memory past ~1M docs. Scale the shuffle
     // partition count with the corpus (AQE coalesces the excess away on
     // small stages) — the same rule a cluster deployment applies.
-    val shufflePartitions = math.max(cpus.toInt, (rows / 25000L).toInt)
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", shufflePartitions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v": session confs for rehearsal A/Bs (the
-    // TimeQuery -c lever, env-shaped because ScaleCheck args are positional)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => ()
-      }
-    })
+    val spark = graft.core.GraftSession.local(
+      math.max(cpus, (rows / 25000L).toInt))
+    cli.confs.foreach { case (k, v) => spark.conf.set(k, v) }
     val docs = spark.read.format("docgen")
-      .option("rows", rows).option("partitions", cpus.toInt * 2)
+      .option("rows", rows).option("partitions", cpus * 2)
       .option("dupPct", dupPct).option("vocabMul", vocabMul)
       .option("docWords", docWords).load()
-    // SPARK_GRAFT_STAGES=1: per-op stage decomposition (the Probe
-    // `stages` listener, for docgen corpora where Probe can't point at
-    // a parquet dir) — attributes a scale-curve bend to its stage
-    val stageLog =
-      new scala.collection.mutable.ArrayBuffer[(Int, String, Long, Int)]()
-    if (sys.env.contains("SPARK_GRAFT_STAGES"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val i = sc.stageInfo
-            val ms = (for { s <- i.submissionTime; c <- i.completionTime }
-              yield c - s).getOrElse(-1L)
-            stageLog.synchronized {
-              stageLog += ((i.stageId, i.name.take(60), ms, i.numTasks))
-            }
-          }
-        })
+    // per-op stage table on stderr (stdout keeps the one JSON line):
+    // attributes a scale-curve bend to its stage
+    val stages = new graft.core.StageLog(spark.sparkContext)
     def t(name: String)(f: => Long): Option[(String, Double, Long)] =
       if (!opsFilter(name)) None else {
-        stageLog.synchronized(stageLog.clear())
+        stages.drain() // drop earlier ops' stages
         val t0 = System.nanoTime()
         val n = f
-        if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-          Thread.sleep(300)
-          stageLog.synchronized {
-            stageLog.sortBy(-_._3).take(14).foreach { case (id, nm, ms, tk) =>
-              System.err.println(f"[stage:$name] $id%5d ${ms}%7d ms tasks=$tk%5d  $nm")
-            }
-          }
-        }
-        Some((name, (System.nanoTime() - t0) / 1e9, n))
+        val sec = (System.nanoTime() - t0) / 1e9
+        stages.print(s"stage:$name", System.err)
+        Some((name, sec, n))
       }
     val base = Seq(
       t("tx_quality")(TextAnalysis.quality(docs).count()),
@@ -171,7 +144,7 @@ object ScaleCheck {
             "    emitter.emit({'doc_id': record['doc_id'],\n" +
             "                  'head': record['payload'][:8],\n" +
             "                  'shifted': record['ts'] + datetime.timedelta(hours=1)})\n",
-          parallelism = cpus.toInt).out.count()
+          parallelism = cpus).out.count()
       },
       t("dd_exact")(Dedup.exact(docs).count()),
       t("dd_simhash_sigs")(Dedup.simhash(docs).count()),

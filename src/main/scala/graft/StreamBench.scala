@@ -26,14 +26,12 @@ object StreamBench {
       else ("window", args)
     val rps = if (rest.length > 0) rest(0).toLong else 500000L
     val seconds = if (rest.length > 1) rest(1).toInt else 25
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.local()
     // rate source → the events shape the engine's streaming ops expect
     val events = spark.readStream.format("rate")
       .option("rowsPerSecond", rps)
-      .option("numPartitions", cpus.toInt)
+      .option("numPartitions", cpus)
       .load()
       .select(
         col("timestamp").as("ts"),

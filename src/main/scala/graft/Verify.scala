@@ -13,10 +13,7 @@ object Verify {
     val filters = args.drop(2)
     def selected(name: String): Boolean =
       filters.isEmpty || filters.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // run dumps 4 at a time: Spark schedules concurrent jobs fine, and the
     // many small queries here are latency- not throughput-bound

@@ -76,6 +76,19 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
 
+  /** Cores of the measurement mains' local session: `SPARK_GRAFT_CPUS`,
+    * else this host's processor count. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session every `main` runs on: [[builder]] at `local[`[[cpus]]`]`,
+    * logging at WARN. */
+  def local(shufflePartitions: Int = cpus): SparkSession = {
+    val spark = builder(s"local[$cpus]", shufflePartitions).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Apply engine confs to an existing session (e.g. one a host application built).
     *
     * Only runtime confs can be set here. Static confs, among them

@@ -834,8 +834,8 @@ object Dedup {
     * distinct shingle hashes the df cap removed from pair generation —
     * 0 means the result is exact, >0 quantifies exactly how much signal
     * the cap traded away. Telemetry is fully lazy: building the operator
-    * triggers ZERO Spark jobs (plan-only callers — PlanDump, PLANS.md
-    * regeneration, registry enumeration — pay nothing), and the pair
+    * triggers ZERO Spark jobs (plan-only callers — plan dumps, registry
+    * enumeration — pay nothing), and the pair
     * DataFrame additionally carries an in-plan `observe` metric
     * (`ngram_df_cap.dropped`) that a once-per-session listener turns into
     * the truncation warning whenever an action actually runs — the
@@ -1799,8 +1799,8 @@ object Dedup {
     import spark.implicits._
     // FUSED partial-dedup kernel. The explode → hash-aggregate
     // formulation paid Spark's generic UnsafeRow hash-agg probe per
-    // shingle OCCURRENCE — the overlap-floor decomposition (Probe
-    // overlap-floor, x100) attributes 1.85 s of the 3.2 s wall to that
+    // shingle OCCURRENCE — an overlap-floor decomposition (x100,
+    // one plan component added per step) attributes 1.85 s of the 3.2 s wall to that
     // probe alone (scan 0.40, +kernel 0.73, +groupBy 2.58). This kernel
     // runs the same per-partition dedup in a primitive open-addressing
     // long→byte table instead: per shingle, one MD5 (single-block fast
@@ -1916,7 +1916,7 @@ object Dedup {
     // subexpression elimination does not share across aggregate
     // functions — inlined, every grouped row paid 32 multiply-mods
     // instead of 16. (A fused mapPartitions fold over the grouped rows
-    // was A/B'd at x100 — Probe overlap-fold: 1.98 vs 1.81 s — the
+    // was A/B'd at x100 — 1.98 vs 1.81 s — the
     // object-boundary row conversion costs more than the 36-buffer
     // HashAggregate it replaces; the declarative form stays.)
     val g = part.groupBy(col("h")).agg(expr("bit_or(flags)").as("_f"))

@@ -2632,8 +2632,8 @@ object TextAnalysis {
     // more than once" — a primitive open-addressing bg→owner table
     // answers that per occurrence with one multiply-shift probe instead
     // of Spark's generic UnsafeRow hash-agg probe (the dominant cost of
-    // the explode → groupBy formulation; same decomposition as Probe
-    // overlap-floor). The table is HARD-bounded (2^21 slots): on fill it
+    // the explode → groupBy formulation; same decomposition as the
+    // dd_overlap kernel's in Dedup.snapshotOverlap). The table is HARD-bounded (2^21 slots): on fill it
     // drains and resets, and a mid-document split resumes via pending
     // state. Flush epochs keep semantics EXACT: a bigram split across
     // epochs emits two rows, and two rows (or an in-epoch repeat, owner
@@ -3734,7 +3734,7 @@ object TextAnalysis {
     * .graft.DeferredDF]] — building it runs ZERO Spark jobs. The
     * train-half aggregation and the model collect happen at first
     * ACTION (driver-side, inside the deferred node's doExecute), so
-    * plan-only callers (PlanDump, PLANS.md, registry enumeration) pay
+    * plan-only callers (plan dumps, registry enumeration) pay
     * nothing, and repeated executions reuse the memoized model. */
   def lmScore(docs: DataFrame, minCount: Long = 1): DataFrame =
     org.apache.spark.sql.graft.DeferredDF(docs.sparkSession,
@@ -3747,8 +3747,7 @@ object TextAnalysis {
       () => lmScoreEager(docs, minCount))
 
   /** The TRAIN half's partition-partial (k12, k1, cnt) stream — the
-    * fused count kernel, exposed so [[lmScoreEager]] and the Probe
-    * stage decomposition share one definition.
+    * fused count kernel [[lmScoreEager]] trains on.
     *
     * The BigramKeyPairs kernel emits (k1, k12) XXH64 key pairs
     * straight off the text bytes (no string materialization; keys
@@ -4042,7 +4041,7 @@ object TextAnalysis {
     * bigram stream; Spark picks broadcast vs shuffle-hash per its size
     * stats, so "model too big" degrades to a shuffle join instead of an
     * OOM. Lazier too: nothing executes at construction time (the shape
-    * PlanDump/plan-snapshot callers should build). Costs one extra
+    * plan-dump callers should build). Costs one extra
     * per-doc re-aggregate over the serve half's exploded bigrams vs the
     * mapPartitions serve (3.0 s vs 1.35 s at x100) — that premium buys
     * the unbounded-model path. */
@@ -4373,7 +4372,7 @@ object TextAnalysis {
   /** Heaps'-law vocabulary growth: how many NEW term types each
     * twentieth of the doc_id-ordered token stream introduces. Every
     * term's first global position = its document's token-stream offset
-    * (an exact distributed prefix sum over the PER-DOC count table via
+    * (an exact distributed prefix sum of per-doc token counts via
     * Analytics.withRunningTotal — the bucket-offset pattern, no
     * corpus-sized single-partition window) + its within-doc position;
     * positions bucket into 20 fixed vigintiles, so the output (and the
@@ -4381,13 +4380,14 @@ object TextAnalysis {
   def txVocabGrowth(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("_w"))
-    val counts = d.select(col("doc_id"), size(col("_w")).as("_n"))
-    val off = graft.queries.Analytics.withRunningTotal(counts,
+      .withColumn("_n", size(col("_w")))
+    val tot = d.agg(sum(col("_n").cast(LongType)).as("_tot"))
+    // the running total keeps each document's row, tokens included, so
+    // its offset needs no join back to the documents
+    val first = graft.queries.Analytics.withRunningTotal(d,
         col("doc_id").cast(DoubleType), col("doc_id"), col("_n"), "_rt")
-      .select(col("doc_id"), (col("_rt") - col("_n")).as("_off"))
-    val tot = counts.agg(sum(col("_n").cast(LongType)).as("_tot"))
-    val first = d.join(off, Seq("doc_id"))
-      .select(col("_off"), posexplode(col("_w")).as(Seq("_i", "term")))
+      .select((col("_rt") - col("_n")).as("_off"),
+        posexplode(col("_w")).as(Seq("_i", "term")))
       .groupBy(col("term"))
       .agg(min(col("_off") + col("_i") + 1).as("_fp"))
     first.crossJoin(broadcast(tot))

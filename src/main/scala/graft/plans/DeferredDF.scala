@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   * shape) must run driver-side Spark jobs — collect a model, count a
   * table — before their serving plan exists. Building those jobs at
   * DataFrame-CONSTRUCTION time makes plan-only callers (`.explain`,
-  * PLANS.md regeneration, registry enumeration) silently pay corpus
+  * plan dumps, registry enumeration) silently pay corpus
   * scans. `DeferredDF(spark, schema, thunk)` instead plants an opaque
   * logical leaf carrying the builder; the physical node's `doExecute`
   * — which Spark invokes only when an ACTION runs, on a driver thread
@@ -65,7 +65,7 @@ object DeferredDF {
     }
   }
 
-  /** Plan-evidence support (PlanDump): build and return the memoized
+  /** Plan-evidence support (`graft.Profile -p`): build and return the memoized
     * inner DataFrame of every Deferred node under `df`'s analyzed plan,
     * recursively — so before/after dumps show the REAL serving plan
     * instead of one opaque `DeferredPlan ... MemoBuilder` leaf. Calling

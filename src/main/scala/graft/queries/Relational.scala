@@ -34,7 +34,7 @@ object Relational {
     * The long accumulators keep the whole partial/final aggregate in
     * primitive codegen (measured 3.4× over a DECIMAL(38,0) per-row sum
     * on the x100 q1: 2.89 s → 0.85 s against a 0.47 s scan floor, see
-    * Q1Probe); the decimal recombine restores the never-overflows
+    * the q1 notes in PLANS.md); the decimal recombine restores the never-overflows
     * guarantee for the TOTAL. Per-accumulator overflow bound: |hi| <
     * 2^18 and |lo| < 2^19 per row, so a single group overflows a long
     * only past ~1.7e13 rows — ≥30× beyond 100 TB lineitem (~5e11 rows);
@@ -458,7 +458,7 @@ object Relational {
     // The probe's (group, bucket) semi-join key is a COMPOSITE with a
     // string — and a composite-string BHJ probe costs ~11x a long-key
     // probe (measured on the x100 corpus: 3.4 s vs 0.30 s for the same
-    // scan, QProfile3): every probe row pays an UnsafeRow key build +
+    // scan): every probe row pays an UnsafeRow key build +
     // byte-wise hash against a generic HashedRelation. The targets
     // table is tiny BY CONTRACT (#groups × #quantiles rows), so when it
     // fits `maxLiteralTargets` the pairs are planted as a LITERAL

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{GraftSession, Tables}
+import graft.core.{GraftSession, StageLog, Tables}
 import graft.operators.{Dedup, Similarity}
 import graft.queries.Relational
 
@@ -48,7 +48,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quantile probe: bounded targets plant as literals, not a corpus-side string join") {
     // the literal-fold path replaces the (string,long)-keyed broadcast
-    // probe (11x slower, QProfile3) with a codegen'd literal filter and
+    // probe (11x slower) with a codegen'd literal filter and
     // a LocalTableScan attach join; fallback (>1024 targets) is
     // spec-exercised in OperatorsSpec
     val p = plan(Relational.qQuantileSelect(spark, dir))
@@ -721,7 +721,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lm score / ngram jaccard: construction and explain trigger zero Spark jobs") {
-    // plan-only callers (PlanDump, PLANS.md regeneration, registry
+    // plan-only callers (`graft.Profile -p`, registry
     // enumeration) must pay nothing: the lm model collect is deferred to
     // first action (DeferredDF) and the ngram telemetry count became an
     // on-demand thunk + in-plan observe metric
@@ -753,6 +753,41 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val eagerRows = graft.operators.TextAnalysis
       .lmScoreEager(docs).count()
     assert(lazyRows === eagerRows && lazyRows > 0)
+  }
+
+  test("profile plan dump: a deferred query shows its inner serving plan") {
+    // tx_lm_score's outer plan is one opaque deferred leaf; the dump must
+    // carry the serve that runs, built through DeferredDF.innerFrames
+    val text = Profile.planText(spark, dir, "tx_lm_score")
+    val at = text.indexOf("== deferred inner plan 1 ==")
+    assert(at >= 0, s"no deferred inner plan section:\n$text")
+    assert(!text.contains("FAILED"), text)
+    assert(text.substring(at).contains("MapPartitions"),
+      s"inner plan lacks the mapPartitions serve:\n${text.substring(at)}")
+  }
+
+  test("stage log: a finished job's stages are held as soon as drain returns") {
+    // a listener ahead of the log on the same queue delays each delivery,
+    // so a drain that did not wait for the bus would come back short
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Thread.sleep(200)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    val log = new StageLog(spark.sparkContext)
+    try {
+      log.drain()
+      spark.sparkContext.parallelize(1 to 100, 4)
+        .map(i => (i % 3, i)).reduceByKey(_ + _, 2).collect()
+      val got = log.drain() // no sleep here: the drain waits for the bus
+      assert(got.map(_.tasks).sorted === Seq(2, 4), got)
+      assert(got.forall(_.ms >= 0), got)
+      assert(log.drain().isEmpty)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      spark.sparkContext.removeSparkListener(slow)
+    }
   }
 
   test("triangles: broadcast hints gated on edge count, both paths agree") {
