@@ -819,100 +819,92 @@ object Dedup {
       |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.4
       |ORDER BY vec_a, vec_b""".stripMargin
 
-  /** Word-3-gram Jaccard pair similarity via an inverted-index join on
-    * shared shingles: pairs are generated only where at least one shingle
-    * is shared (never the full cross product), counted per pair, then
-    * J = shared / (|A| + |B| - shared). At 100 TB the posting list of a
-    * degenerate (stopword-only) shingle bounds fan-in — production adds a
-    * document-frequency cap on shingles; the planted corpus needs none. */
+  /** Word-3-gram Jaccard pair similarity, exact: every pair of documents
+    * whose distinct hashed 3-gram sets A, B have
+    * J = |A ∩ B| / |A ∪ B| >= minJaccard (t), as (doc_a < doc_b, shared,
+    * jaccard). At t <= 0 that is every pair sharing at least one shingle.
+    *
+    * A prefix-filtered set-similarity join (AllPairs / PPJoin, in the
+    * MapReduce form of Vernica et al., SIGMOD 2010), never the cross
+    * product: shingles are ranked by the global key (df, hash), rarest
+    * first, and a document with n shingles is indexed only under its
+    * first p = n - ceil(t * n) + 1. A pair with J >= t shares at least
+    * ceil(t * n) shingles of each side, so its smallest shared shingle
+    * lies in both prefixes. Hot shingles (stopword runs, boilerplate) sort
+    * last and never form a posting list, so no df cap is needed.
+    *
+    * Three exchanges, all in the plan (construction runs no job, no
+    * driver collect, and the only buffer that grows with df is the
+    * window's, which spills):
+    *   1. on the shingle: df as a window count; a df = 1 shingle is never
+    *      shared and drops here;
+    *   2. on the document: its shared-able shingles sorted by (df, hash)
+    *      (the set A'), and the prefix part of them exploded;
+    *   3. on the shingle: the prefix self-join (a merge join) under
+    *      PPJoin's positional filter, which implies the length filter
+    *      min(n_a, n_b) / max(n_a, n_b) >= t. A pair meets once per
+    *      shared prefix shingle and is kept only at its smallest one, so
+    *      no dedup exchange follows; shared = |A'_a ∩ A'_b| is exact
+    *      because every shared shingle has df >= 2.
+    *
+    * `maxDocFreq` is ignored: the join is exact without a cap. It stays
+    * in the signature for existing callers. */
   def ngramJaccard(docs: DataFrame, minJaccard: Double = 0.5,
-                   maxDocFreq: Int = 1000): DataFrame =
-    ngramJaccardWithStats(docs, minJaccard, maxDocFreq)._1
-
-  /** [[ngramJaccard]] plus its truncation telemetry (no-silent-truncation
-    * rule): the second element, WHEN CALLED, returns the number of
-    * distinct shingle hashes the df cap removed from pair generation —
-    * 0 means the result is exact, >0 quantifies exactly how much signal
-    * the cap traded away. Telemetry is fully lazy: building the operator
-    * triggers ZERO Spark jobs (plan-only callers — plan dumps, registry
-    * enumeration — pay nothing), and the pair
-    * DataFrame additionally carries an in-plan `observe` metric
-    * (`ngram_df_cap.dropped`) that a once-per-session listener turns into
-    * the truncation warning whenever an action actually runs — the
-    * warning costs no extra job either. Calling the thunk runs one
-    * aggregation over the shingle table; the shingle table is a
-    * pure projection (array_distinct of the per-row kernel), so the
-    * thunk re-scans text once — no cache, no checkpoint. */
-  def ngramJaccardWithStats(docs: DataFrame, minJaccard: Double = 0.5,
-                            maxDocFreq: Int = 1000): (DataFrame, () => Long) = {
-    // join on a 60-bit hash of the shingle, not the string: the one
-    // remaining shuffle carries 8-byte keys instead of ~20-byte text,
-    // and the per-doc distinct runs on longs (cheap) not strings. Both
-    // engines use the same md5-derived hash, so results are identical
-    // by construction (within-doc 60-bit collisions: ~1e-15/doc).
-    // Within-doc shingle dedup is ROW-LOCAL (doc_id rides every row), so
-    // the corpus-wide distinct() exchange the previous shape paid is a
-    // per-row array_distinct PROJECTION — one full corpus shuffle gone —
-    // and the per-doc set size falls out as size(array), turning the
-    // sizes aggregate (another corpus-keyed exchange) into a projection
-    // too. Docs with <3 words produce a NULL shingle array (kernel
-    // contract) and are filtered exactly as they had no tall rows before.
-    val hs = kernelFloor(docs).select(col("doc_id"),
+                   maxDocFreq: Int = 1000): DataFrame = {
+    val t = lit(minJaccard)
+    // the verify filter's own arithmetic; the prefix and positional
+    // bounds below go through it so double rounding never drops a pair
+    def ratio(num: Column, den: Column): Column =
+      num.cast(DoubleType) / den.cast(DoubleType)
+    // join on a 60-bit hash of the shingle, not the string: 8-byte keys
+    // cross the exchanges. Both engines use the same md5-derived hash, so
+    // results are identical by construction (within-doc 60-bit
+    // collisions: ~1e-15/doc). Docs with <3 words produce a NULL shingle
+    // array (kernel contract) and drop here.
+    val tall = kernelFloor(docs).select(col("doc_id"),
         array_distinct(org.apache.spark.sql.graft.VectorExprs
-          .shingle3Md5Long(col("text"), 1, 15)).as("_hs"))
-      .filter(col("_hs").isNotNull)
-    val sizes = hs.select(col("doc_id"),
-      size(col("_hs")).cast(LongType).as("n"))
-    val tall = hs.select(col("doc_id"), explode(col("_hs")).as("s"))
-    // document-frequency cap: a shingle appearing in >maxDocFreq docs (a
-    // stopword run) contributes O(df^2) candidate pairs and no near-dup
-    // signal — drop it from pair *generation* (set sizes keep the full
-    // sets, so reported Jaccard is a lower bound for affected pairs; with
-    // sparse/natural corpora below the cap, results are exact — the test
-    // tables' max posting is ~25). Corpora dense enough that typical
-    // shingles exceed the cap need the LSH path (minhashLsh), not
-    // exact all-pairs Jaccard.
-    //
-    // Pair generation is the winnow single-exchange shape: ONE groupBy(s)
-    // collects each shingle's posting list through the CAP-BOUNDED sorted
-    // collect (buffer stops at cap+1 entries in update AND merge — a hot
-    // shingle can never materialize its full posting in an aggregation
-    // buffer) alongside the TRUE df, hot postings drop whole by the df
-    // predicate (the telemetry count reads the same grouped table), and
-    // each surviving bucket expands its C(df,2) pairs in-plan. Replaces
-    // the previous hot-side checkpoint + anti-join + s-keyed SELF-JOIN —
-    // two corpus-shingle exchanges and a join become one exchange
-    // (measured 5.7 → 4.4 s warm on the x10 tier).
-    val grouped = tall.groupBy(col("s"))
-      .agg(org.apache.spark.sql.graft.VectorExprs
-          .collectSortedCapped(col("doc_id"), maxDocFreq).as("ds"),
-        count(lit(1)).as("df"))
-    // telemetry: (a) on-demand exact count — one aggregation over the
-    // recomputed (projection-only) shingle table, run only when asked;
-    // (b) an in-plan observe metric so any ACTION on the pairs reports the
-    // cap's effect through the session listener with zero extra jobs
-    val dropped: () => Long =
-      () => grouped.filter(col("df") > maxDocFreq).count()
-    DfCapTelemetry.ensureListener(docs.sparkSession)
-    val observed = grouped.observe(
-      DfCapTelemetry.metricName + DfCapTelemetry.nextId(),
-      sum(when(col("df") > maxDocFreq, lit(1L)).otherwise(lit(0L)))
-        .as("dropped"),
-      max(lit(maxDocFreq)).as("cap"))
-    val out = observed.filter(col("df").between(2, maxDocFreq))
-      .select(explode(expr(
-        """flatten(transform(ds, (a, i) ->
-          |  transform(slice(ds, i + 2, size(ds)),
-          |    b -> struct(a AS doc_a, b AS doc_b))))""".stripMargin)).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.as("na"), col("doc_a") === col("na.doc_id"))
-      .join(sizes.as("nb"), col("doc_b") === col("nb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        (col("shared").cast(DoubleType) /
-          (col("na.n") + col("nb.n") - col("shared")).cast(DoubleType)).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-    (out, dropped)
+          .shingle3Md5Long(col("text"), 1, 15)).as("hs"))
+      .filter(col("hs").isNotNull)
+      .select(col("doc_id"), size(col("hs")).cast(LongType).as("n"),
+        explode(col("hs")).as("s"))
+    val multi = tall
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
+      .filter(col("df") >= 2)
+    // o = the fewest shared shingles with o / n >= t: ceil(t * n) is
+    // rounded, so its neighbours are tested in the verify arithmetic
+    val n = col("n")
+    val c = ceil(t * n)
+    val need = when(ratio(c - 1, n) >= t, c - 1)
+      .when(ratio(c, n) >= t, c).otherwise(c + 1)
+    val p = least(greatest(n - need + 1, lit(1L)), n)
+    // the n - size(set) df = 1 shingles sort first and fill that much of
+    // the prefix; the rest of it is the head of the sorted set
+    val prefix = multi.groupBy(col("doc_id"))
+      .agg(max(n).as("n"),
+        sort_array(collect_list(struct(col("df"), col("s")))).as("ds"))
+      .select(col("doc_id"), n, col("ds.s").as("set"))
+      .select(col("doc_id"), n, col("set"), posexplode(slice(col("set"), lit(1),
+        greatest(p - (n - size(col("set"))), lit(0L)).cast(IntegerType))).as(Seq("pos", "s")))
+    def ab(name: String) = (col(s"a.$name"), col(s"b.$name"))
+    val ((da, db), (na, nb), (sa, sb)) = (ab("doc_id"), ab("n"), ab("set"))
+    val shared = size(array_intersect(sa, sb)).cast(LongType)
+    val jaccard = ratio(shared, na + nb - shared)
+    // at the pair's smallest shared shingle s, nothing before s in either
+    // sorted set is shared, so the overlap is at most
+    // ub = min(shingles from s on in A'_a, in A'_b) (PPJoin's positional
+    // filter; it implies the length filter min(n) / max(n) >= t), and the
+    // verify ratio never exceeds ratio(ub, n_a + n_b - ub)
+    val ub = least(size(sa) - col("a.pos"), size(sb) - col("b.pos"))
+    // one join condition, cheapest conjunct first (a later filter would
+    // be pushed into the condition ahead of them). s is the pair's
+    // smallest shared shingle iff nothing before it in A'_a is in A'_b:
+    // that test keeps one row per pair. The merge join reads one
+    // exchange for both sides; a broadcast would build the prefix twice.
+    prefix.as("a").join(prefix.as("b").hint("merge"),
+        col("a.s") === col("b.s") && da < db && ratio(ub, na + nb - ub) >= t &&
+        !arrays_overlap(slice(sa, lit(1), col("a.pos")), sb) && jaccard >= t)
+      .select(da.as("doc_a"), db.as("doc_b"), shared.as("shared"),
+        jaccard.as("jaccard"))
   }
 
   /** Benchmark-contamination sweep: flag corpus documents whose distinct
@@ -1023,9 +1015,9 @@ object Dedup {
   /** Dedup-threshold calibration: the histogram of verified pair
     * similarities in 0.05-wide Jaccard bins — the table a curation team
     * reads to PICK its near-dup threshold (where does the pair mass sit;
-    * what does moving 0.9 → 0.85 sweep in). Same inverted-index pair
-    * machinery as [[ngramJaccard]]; the histogram adds one tiny
-    * aggregate over the verified pairs. */
+    * what does moving 0.9 → 0.85 sweep in). The pairs are
+    * [[ngramJaccard]]'s; the histogram adds one tiny aggregate over
+    * them. */
   def ddThresholdHist(spark: SparkSession, dir: String): DataFrame =
     ngramJaccard(Tables.documents(spark, dir), minJaccard = 0.5)
       .select(floor(col("jaccard") * 20).cast(LongType).as("bin"))
@@ -2143,45 +2135,4 @@ object Dedup {
     "dd_ngram_jaccard" -> ddNgramJaccardSql,
     "dd_threshold_hist" -> ddThresholdHistSql,
     "dd_embed_cosine" -> ddEmbedCosineSql)
-}
-
-/** Session-level listener that turns the `ngram_df_cap*` observe metric
-  * into the no-silent-truncation warning. Registered at most once per
-  * SparkSession; observing costs one CollectMetrics node in the plan and
-  * zero extra jobs — the metric rides along whatever action the caller
-  * runs, so even a caller that never asks for telemetry still gets the
-  * cap's effect surfaced in the log. */
-private[operators] object DfCapTelemetry {
-  val metricName = "ngram_df_cap_"
-  // observe names must be unique within one query; a counter (not a
-  // UUID) keeps plan snapshots deterministic across regenerations
-  private val ids = new java.util.concurrent.atomic.AtomicLong()
-  def nextId(): Long = ids.incrementAndGet()
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  def ensureListener(spark: SparkSession): Unit =
-    if (registered.add(spark)) {
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              if (name.startsWith(metricName) && !row.isNullAt(0)) {
-                val dropped = row.getLong(0)
-                if (dropped > 0) log.warn(
-                  s"ngramJaccard: df cap (${row.get(1)}) dropped $dropped " +
-                    "hot shingles from pair generation; Jaccard is a lower " +
-                    "bound for pairs that shared them — dense corpora " +
-                    "belong on the minhashLsh path")
-              }
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-    }
 }

@@ -60,22 +60,75 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(precision >= 0.9, s"simhash precision $precision")
   }
 
-  test("ngramJaccard df-cap telemetry: 0 dropped on the test corpus, >0 on a stopword flood") {
+  /** ngramJaccard's result against a driver-side all-pairs Jaccard over
+    * the same hashed shingle sets and the same double arithmetic; also
+    * checks that each pair comes out once. */
+  private def assertNgramExact(docs: org.apache.spark.sql.DataFrame,
+                               t: Double): Set[(Long, Long)] = {
+    import org.apache.spark.sql.graft.VectorExprs
+    val sets = docs.select(col("doc_id"),
+        array_distinct(VectorExprs.shingle3Md5Long(col("text"), 1, 15)).as("hs"))
+      .filter(col("hs").isNotNull).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toSet))
+    val brute = (for {
+      (a, sa) <- sets.iterator; (b, sb) <- sets.iterator if a < b
+      o = (sa & sb).size if o > 0
+      j = o.toDouble / (sa.size + sb.size - o).toDouble if j >= t
+    } yield (a, b, o.toLong, j)).toSet
+    val got = Dedup.ngramJaccard(docs, t).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    assert(got.length === got.toSet.size, s"t=$t: a pair came out twice")
+    assert(got.toSet === brute, s"t=$t: missing ${brute.diff(got.toSet)}, " +
+      s"extra ${got.toSet.diff(brute)}")
+    brute.map(r => (r._1, r._2))
+  }
+
+  test("ngramJaccard is exact past a hot shingle: a planted pair that needs it is found") {
     import spark.implicits._
-    // the natural test corpus sits under the default cap: result is exact
-    // and the telemetry must say so
-    val (_, droppedClean) =
-      Dedup.ngramJaccardWithStats(Tables.documents(spark, dir))
-    assert(droppedClean() === 0L,
-      s"df cap silently active on clean corpus: ${droppedClean()}")
-    // stopword flood: one shingle ("the of and ...") shared by every doc
-    // exceeds a df cap of 5 and must be counted as dropped, not silent
-    val flood = (0 until 20).map { i =>
-      (i.toLong, s"the of and to unique$i trailing words here")
-    }.toDF("doc_id", "text")
-    val (pairs, droppedFlood) = Dedup.ngramJaccardWithStats(flood, 0.1, maxDocFreq = 5)
-    assert(droppedFlood() > 0L, "flooded shingles not reported as dropped")
-    pairs.collect() // pair generation still runs on the pruned index
+    // 1,100 docs open with one boilerplate 3-gram (df 1,102: hot enough
+    // for any posting-list cap) and end in words of their own
+    val boiler = (0 until 1100).map(i => (i.toLong, s"lorem ipsum dolor u${i}a u${i}b"))
+    // each planted pair clears 0.5 only when the boilerplate shingle
+    // counts: 2/4 = 0.5 (exactly t) and 3/5 = 0.6, vs 1/4 and 2/5 without
+    val planted = Seq(
+      (5000L, "lorem ipsum dolor a b"), (5001L, "lorem ipsum dolor a c"),
+      (5002L, "lorem ipsum dolor m n o"), (5003L, "lorem ipsum dolor m n p"))
+    val pairs = assertNgramExact((boiler ++ planted).toDF("doc_id", "text"), 0.5)
+    assert(pairs === Set((5000L, 5001L), (5002L, 5003L)))
+  }
+
+  test("ngramJaccard equals brute force across thresholds, pairs at exactly t included") {
+    import spark.implicits._
+    val ts = Seq(0.1, 0.3, 0.5, 0.55, 2.0 / 3, 0.7, 0.9, 1.0)
+    // shared prefix of c words, own tails of x and y words:
+    // J = (c - 2) / (c - 2 + x + y), one pair at exactly each t. At 0.55
+    // a 100-shingle doc holds a 55-shingle one: 0.55 * 100 rounds to
+    // 55.00000000000001, so a prefix from ceil(t * n) alone misses it
+    val exactAt = Seq((3, 4, 5), (5, 3, 4), (4, 1, 1), (57, 45, 0), (4, 0, 1),
+      (9, 1, 2), (11, 0, 1), (6, 0, 0))
+    val planted = exactAt.zipWithIndex.flatMap { case ((c, x, y), k) =>
+      val head = (0 until c).map(i => s"e${k}c$i")
+      Seq((9000L + 2 * k, (head ++ (0 until x).map(i => s"e${k}x$i")).mkString(" ")),
+        (9001L + 2 * k, (head ++ (0 until y).map(i => s"e${k}y$i")).mkString(" ")))
+    }
+    for (seed <- Seq(7L, 11L)) {
+      // a 12-word vocabulary with a skew: common 3-grams, every df from
+      // 1 up, and near-duplicates made by editing one word of a doc
+      val rnd = new scala.util.Random(seed)
+      val vocab = (0 until 12).map(i => s"w$i")
+      def word() = vocab(math.min(rnd.nextInt(12), rnd.nextInt(12)))
+      val base = (0 until 120).map(_ => Seq.fill(4 + rnd.nextInt(14))(word()))
+      val edits = base.take(40).map(ws => ws.updated(rnd.nextInt(ws.size), word()))
+      val random = (base ++ edits).zipWithIndex
+        .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
+      val docs = (random ++ planted).toDF("doc_id", "text")
+      for (t <- ts) {
+        val pairs = assertNgramExact(docs, t)
+        val k = ts.indexOf(t)
+        assert(pairs.contains((9000L + 2 * k, 9001L + 2 * k)),
+          s"t=$t: the pair at exactly t was not found")
+      }
+    }
   }
 
   test("substrDedup drops only duplicated runs clearing the token threshold") {

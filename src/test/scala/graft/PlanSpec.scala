@@ -723,8 +723,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("lm score / ngram jaccard: construction and explain trigger zero Spark jobs") {
     // plan-only callers (`graft.Profile -p`, registry
     // enumeration) must pay nothing: the lm model collect is deferred to
-    // first action (DeferredDF) and the ngram telemetry count became an
-    // on-demand thunk + in-plan observe metric
+    // first action (DeferredDF) and the ngram join's df ranking is a
+    // window in the plan, not a collected or broadcast table
     val docs = Tables.documents(spark, dir)
     docs.count() // warm the parquet footer listing — the source's cost
     @volatile var jobs = 0
@@ -739,7 +739,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val lm = graft.operators.TextAnalysis.lmScore(docs).orderBy("doc_id")
       lm.queryExecution.explainString(
         org.apache.spark.sql.execution.SimpleMode)
-      val (nj, _) = Dedup.ngramJaccardWithStats(docs)
+      val nj = Dedup.ngramJaccard(docs)
       nj.queryExecution.explainString(
         org.apache.spark.sql.execution.SimpleMode)
       Thread.sleep(500) // let any stray job-start event land
