@@ -870,12 +870,19 @@ object Dedup {
     val multi = tall
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("df") >= 2)
-    // o = the fewest shared shingles with o / n >= t: ceil(t * n) is
-    // rounded, so its neighbours are tested in the verify arithmetic
+    // the fewest o with ok(o), where ok holds from about x on: ceil(x) is
+    // rounded, so its neighbours are tested in the verify arithmetic. x
+    // takes t clamped to [0, 1], so ceil never overflows and ok never
+    // divides by 0; the tests keep the real t, which keeps them exact.
+    def fewest(x: Column)(ok: Column => Column): Column = {
+      val c = ceil(x)
+      when(ok(c - 1), c - 1).when(ok(c), c).otherwise(c + 1)
+    }
+    val tc = least(greatest(t, lit(0.0)), lit(1.0))
+    // a pair with J >= t shares at least this many shingles of a side
+    // with n of them
     val n = col("n")
-    val c = ceil(t * n)
-    val need = when(ratio(c - 1, n) >= t, c - 1)
-      .when(ratio(c, n) >= t, c).otherwise(c + 1)
+    val need = fewest(tc * n)(o => ratio(o, n) >= t)
     val p = least(greatest(n - need + 1, lit(1L)), n)
     // the n - size(set) df = 1 shingles sort first and fill that much of
     // the prefix; the rest of it is the head of the sorted set
@@ -888,23 +895,29 @@ object Dedup {
     def ab(name: String) = (col(s"a.$name"), col(s"b.$name"))
     val ((da, db), (na, nb), (sa, sb)) = (ab("doc_id"), ab("n"), ab("set"))
     val shared = size(array_intersect(sa, sb)).cast(LongType)
-    val jaccard = ratio(shared, na + nb - shared)
+    // J >= t iff the overlap reaches the fewest o with o / (N - o) >= t,
+    // N = n_a + n_b: one intersection per tested row instead of the two
+    // in the ratio
+    val total = na + nb
+    val pairNeed = fewest(tc * total / (tc + 1))(o => ratio(o, total - o) >= t)
     // at the pair's smallest shared shingle s, nothing before s in either
     // sorted set is shared, so the overlap is at most
-    // ub = min(shingles from s on in A'_a, in A'_b) (PPJoin's positional
-    // filter; it implies the length filter min(n) / max(n) >= t), and the
-    // verify ratio never exceeds ratio(ub, n_a + n_b - ub)
+    // ub = min(shingles from s on in A'_a, in A'_b): PPJoin's positional
+    // filter, which implies the length filter min(n) / max(n) >= t
     val ub = least(size(sa) - col("a.pos"), size(sb) - col("b.pos"))
     // one join condition, cheapest conjunct first (a later filter would
     // be pushed into the condition ahead of them). s is the pair's
-    // smallest shared shingle iff nothing before it in A'_a is in A'_b:
-    // that test keeps one row per pair. The merge join reads one
-    // exchange for both sides; a broadcast would build the prefix twice.
+    // smallest shared shingle iff the parts of A'_a and A'_b before s are
+    // disjoint: that test keeps one row per pair. The merge join reads
+    // one exchange for both sides; a broadcast would build the prefix
+    // twice.
+    def before(set: Column, pos: Column) = slice(set, lit(1), pos)
     prefix.as("a").join(prefix.as("b").hint("merge"),
-        col("a.s") === col("b.s") && da < db && ratio(ub, na + nb - ub) >= t &&
-        !arrays_overlap(slice(sa, lit(1), col("a.pos")), sb) && jaccard >= t)
+        col("a.s") === col("b.s") && da < db && ub >= pairNeed &&
+        !arrays_overlap(before(sa, col("a.pos")), before(sb, col("b.pos"))) &&
+        shared >= pairNeed)
       .select(da.as("doc_a"), db.as("doc_b"), shared.as("shared"),
-        jaccard.as("jaccard"))
+        ratio(shared, total - shared).as("jaccard"))
   }
 
   /** Benchmark-contamination sweep: flag corpus documents whose distinct
