@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.transform.{ProcessScriptTransform, ScriptTransform}
 
 /** Scale rehearsal: run the heavy operators on a docgen corpus far larger
   * than the test scale factors and print one JSON line of timings. Not
@@ -97,13 +99,9 @@ object ScaleCheck {
       // Scala closure + row↔map codec over mapPartitions — must stay
       // linear like the declarative projections
       t("xf_script") {
-        val out = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_a",
-            org.apache.spark.sql.types.IntegerType)))
-        graft.transform.ScriptTransform(
-            docs.select(col("doc_id"), col("text")), out) { (r, em, _) =>
+        val out = StructType(Seq(
+          StructField("doc_id", LongType), StructField("n_a", IntegerType)))
+        ScriptTransform(docs.select(col("doc_id"), col("text")), out) { (r, em, _) =>
           val t = r("text").asInstanceOf[String]
           var n = 0; var i = 0
           while (i < t.length) { if (t.charAt(i) == 'a') n += 1; i += 1 }
@@ -114,12 +112,9 @@ object ScaleCheck {
       // worker per partition, batched frame protocol — must scale
       // with rows like the in-JVM script path above it
       t("xf_pyscript") {
-        val out = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.IntegerType)))
-        graft.transform.ProcessScriptTransform.python(
+        val out = StructType(Seq(
+          StructField("doc_id", LongType), StructField("n", IntegerType)))
+        ProcessScriptTransform.python(
           docs.select(col("doc_id"), col("text")), out,
           "def transform(record, emitter, context):\n" +
             "    emitter.emit({'doc_id': record['doc_id'], 'n': len(record['text'])})\n").out.count()
@@ -127,24 +122,18 @@ object ScaleCheck {
       // the schema-driven BINARY/timestamp wire codec on that path:
       // side-bytes cells and epoch datetimes per record both directions
       t("xf_pybytes") {
-        val out = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("head",
-            org.apache.spark.sql.types.BinaryType),
-          org.apache.spark.sql.types.StructField("shifted",
-            org.apache.spark.sql.types.TimestampType)))
-        graft.transform.ProcessScriptTransform.python(
-          docs.select(col("doc_id"),
-            col("text").cast(org.apache.spark.sql.types.BinaryType).as("payload"),
+        val out = StructType(Seq(StructField("doc_id", LongType),
+          StructField("head", BinaryType), StructField("shifted", TimestampType)))
+        ProcessScriptTransform.python(
+          docs.select(col("doc_id"), col("text").cast(BinaryType).as("payload"),
             timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts")),
           out,
           "import datetime\n" +
             "def transform(record, emitter, context):\n" +
             "    emitter.emit({'doc_id': record['doc_id'],\n" +
             "                  'head': record['payload'][:8],\n" +
-            "                  'shifted': record['ts'] + datetime.timedelta(hours=1)})\n",
-          parallelism = cpus).out.count()
+            "                  'shifted': record['ts'] + datetime.timedelta(hours=1)})\n")
+          .out.count()
       },
       t("dd_exact")(Dedup.exact(docs).count()),
       t("dd_simhash_sigs")(Dedup.simhash(docs).count()),

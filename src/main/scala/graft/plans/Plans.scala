@@ -4,11 +4,32 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession => ClassicSession}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.StructType
+
+/** Plans graft's logical nodes: [[DeferredDF]]'s and [[ScriptPlan]]'s. */
+private object GraftStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case DeferredDF.DeferredPlan(out, b) => DeferredDF.DeferredExec(out, b) :: Nil
+    case ScriptPlan.Script(e, r, out, c) => ScriptPlan.ScriptExec(e, r, out, planLater(c)) :: Nil
+    case _ => Nil
+  }
+
+  /** `plan` as a frame of `spark`, whose planner gets this strategy once. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame = {
+    val cs = spark.asInstanceOf[ClassicSession]
+    val em = cs.sessionState.experimentalMethods
+    em.synchronized {
+      if (!em.extraStrategies.exists(_ eq this))
+        em.extraStrategies = this +: em.extraStrategies
+    }
+    Dataset.ofRows(cs, plan)
+  }
+}
 
 /** A DataFrame whose construction is DEFERRED to first execution.
   *
@@ -58,13 +79,6 @@ object DeferredDF {
     def get: DataFrame = memo
   }
 
-  private object DeferredStrategy extends SparkStrategy {
-    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case DeferredPlan(out, b) => DeferredExec(out, b) :: Nil
-      case _ => Nil
-    }
-  }
-
   /** Plan-evidence support (`graft.Profile -p`): build and return the memoized
     * inner DataFrame of every Deferred node under `df`'s analyzed plan,
     * recursively — so before/after dumps show the REAL serving plan
@@ -78,20 +92,47 @@ object DeferredDF {
     built.flatMap(inner => inner +: innerFrames(inner))
   }
 
-  /** Idempotently registers the planning strategy on `spark` and returns
-    * the deferred frame. Zero Spark jobs run until an action does. */
+  /** The deferred frame; zero Spark jobs run until an action does. */
   def apply(spark: org.apache.spark.sql.SparkSession, schema: StructType,
-            thunk: () => org.apache.spark.sql.DataFrame): DataFrame = {
-    val cs = spark.asInstanceOf[ClassicSession]
-    val em = cs.sessionState.experimentalMethods
-    em.synchronized {
-      if (!em.extraStrategies.exists(_ eq DeferredStrategy))
-        em.extraStrategies = DeferredStrategy +: em.extraStrategies
-    }
-    val attrs: Seq[Attribute] = schema.fields.toSeq.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
-    Dataset.ofRows(cs,
-      DeferredPlan(attrs, new MemoBuilder(() =>
-        thunk().asInstanceOf[DataFrame])))
+            thunk: () => org.apache.spark.sql.DataFrame): DataFrame =
+    GraftStrategy.ofRows(spark, DeferredPlan(toAttributes(schema),
+      new MemoBuilder(() => thunk().asInstanceOf[DataFrame])))
+}
+
+/** A record-script transform as one planned operator: a logical node over
+  * the input's plan and a physical node whose `doExecute` maps each input
+  * partition through `run` (a JVM closure or a python worker; `engine` is
+  * a label for `explain`). Building the frame runs no job. `run` gets the
+  * child's rows and returns UnsafeRows of `output`; the node references
+  * every input column, so the optimizer prunes none from below it. */
+object ScriptPlan {
+
+  /** One partition's input rows to its output rows; runs on executors. */
+  type Run = Iterator[InternalRow] => Iterator[InternalRow]
+
+  private[graft] case class Script(
+      engine: String, run: Run, output: Seq[Attribute], child: LogicalPlan)
+      extends UnaryNode {
+    override def references: AttributeSet = child.outputSet
+    override protected def stringArgs: Iterator[Any] = Iterator(engine, output)
+    override protected def withNewChildInternal(c: LogicalPlan): Script =
+      copy(child = c)
   }
+
+  private[graft] case class ScriptExec(
+      engine: String, run: Run, output: Seq[Attribute], child: SparkPlan)
+      extends UnaryExecNode {
+    override def producedAttributes: AttributeSet = outputSet
+    override protected def stringArgs: Iterator[Any] = Iterator(engine, output)
+    override protected def doExecute(): RDD[InternalRow] =
+      child.execute().mapPartitionsInternal(run)
+    override protected def withNewChildInternal(c: SparkPlan): ScriptExec =
+      copy(child = c)
+  }
+
+  /** The frame of `schema` that `run` makes of `df`'s partitions. */
+  def apply(df: org.apache.spark.sql.DataFrame, engine: String,
+            schema: StructType, run: Run): DataFrame =
+    GraftStrategy.ofRows(df.sparkSession, Script(engine, run, toAttributes(schema),
+      df.asInstanceOf[Dataset[_]].logicalPlan))
 }

@@ -17,10 +17,11 @@ import graft.transform.Dsl._
   * path, with a DuckDB oracle for each.
   */
 object Transforms {
-  // Imperative (ScriptTransform) queries localCheckpoint before their
-  // presentation orderBy: a global sort's range partitioner runs a
-  // sampling pass over its child, which would execute the script
-  // mapPartitions twice (measured 5.8s -> 2.2s on xf_script at sf0.1).
+  // The imperative (script) queries return their channel unsorted. A
+  // global sort's range partitioner samples its child, so an orderBy
+  // over a script channel would run the script twice per record; the
+  // oracle compare sorts rows itself, and the script stays lazy and
+  // visible in the plan.
 
   /** Per-record field mutation — ref testSimple scales a field by 1024. */
   def xfScale(spark: SparkSession, dir: String): DataFrame =
@@ -109,7 +110,7 @@ object Transforms {
       val m = ctx.arguments("multiplier").toInt
       em.emit(Map("o_orderkey" -> r("o_orderkey"),
                   "scaled" -> r("o_totalprice").asInstanceOf[Double] * m))
-    }.out.localCheckpoint().orderBy(col("o_orderkey"))
+    }.out
   }
 
   val xfArgsSql: String =
@@ -130,8 +131,7 @@ object Transforms {
       StructField("custkey", LongType),
       StructField("arr_sum", DoubleType),
       StructField("p", DoubleType)))
-    ScriptTransform(nested, out,
-        parallelism = spark.sparkContext.defaultParallelism) { (r, em, _) =>
+    ScriptTransform(nested, out) { (r, em, _) =>
       val info = r("info").asInstanceOf[Map[String, Any]]
       val arr = r("arr").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Double])
       val m = r("m").asInstanceOf[Map[String, Any]]
@@ -140,7 +140,7 @@ object Transforms {
         "custkey" -> info("o_custkey"),
         "arr_sum" -> arr.sum,
         "p" -> m("p")))
-    }.out.localCheckpoint().orderBy(col("o_orderkey"))
+    }.out
   }
 
   val xfNestedSql: String =
@@ -166,8 +166,7 @@ object Transforms {
       StructField("l_orderkey", LongType),
       StructField("l_linenumber", IntegerType),
       SchemaCodec.enumField("status", Seq("RETURN", "PENDING", "SHIPPED"))))
-    ScriptTransform(in, out,
-        parallelism = spark.sparkContext.defaultParallelism) { (r, em, _) =>
+    ScriptTransform(in, out) { (r, em, _) =>
       val status: Any = r("rflag") match {
         case "R" => 0        // ordinal form: coerced to "RETURN"
         case "A" => "SHIPPED" // symbol form: validated pass-through
@@ -177,7 +176,7 @@ object Transforms {
         "l_orderkey" -> r("l_orderkey"),
         "l_linenumber" -> r("l_linenumber"),
         "status" -> status))
-    }.out.localCheckpoint().orderBy(col("l_orderkey"), col("l_linenumber"))
+    }.out
   }
 
   val xfEnumSql: String =
@@ -187,16 +186,15 @@ object Transforms {
       |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
 
   /** Fully-imperative script: per-record conditional filter + computed
-    * field + stage metrics, distributed via mapPartitions (the reference's
-    * Native-mode equivalent). */
+    * field + stage metrics, distributed as one planned script stage (the
+    * reference's Native-mode equivalent). */
   def xfScript(spark: SparkSession, dir: String): DataFrame = {
     val out = StructType(Seq(
       StructField("l_orderkey", LongType),
       StructField("l_linenumber", IntegerType),
       StructField("charge", DoubleType)))
     val metrics = Metrics(spark, "processed", "emitted")
-    ScriptTransform(Tables.lineitem(spark, dir), out, metrics = metrics,
-        parallelism = spark.sparkContext.defaultParallelism) {
+    ScriptTransform(Tables.lineitem(spark, dir), out, metrics = metrics) {
       (r, em, ctx) =>
         ctx.metrics.count("processed")
         if (r("l_returnflag") != "R") {
@@ -207,7 +205,7 @@ object Transforms {
             "charge" -> r("l_extendedprice").asInstanceOf[Double] *
               (1.0 - r("l_discount").asInstanceOf[Double])))
         }
-    }.out.localCheckpoint().orderBy(col("l_orderkey"), col("l_linenumber"))
+    }.out
   }
 
   val xfScriptSql: String =
@@ -240,11 +238,7 @@ object Transforms {
         |""".stripMargin
     ProcessScriptTransform.python(
         Tables.orders(spark, dir).select("o_orderkey", "o_totalprice"),
-        out, script, arguments = Map("multiplier" -> "3"),
-        // a narrow orders scan is 1-2 parquet splits → 1-2 workers;
-        // spread the interpreter cost across the cluster
-        parallelism = spark.sparkContext.defaultParallelism)
-      .out.localCheckpoint().orderBy(col("o_orderkey"))
+        out, script, arguments = Map("multiplier" -> "3")).out
   }
 
   val xfPyscriptSql: String =
@@ -269,9 +263,7 @@ object Transforms {
     ProcessScriptTransform.python(
         Tables.orders(spark, dir).select("o_orderkey", "o_totalprice"),
         out, script,
-        onError = ScriptTransform.RouteToErrors(7),
-        parallelism = spark.sparkContext.defaultParallelism)
-      .errors.localCheckpoint().orderBy(col("o_orderkey"))
+        onError = ScriptTransform.RouteToErrors(7)).errors
   }
 
   val xfPyerrorsSql: String =
@@ -293,12 +285,10 @@ object Transforms {
         |""".stripMargin
     ProcessScriptTransform.python(
         Tables.orders(spark, dir).select("o_orderkey", "o_totalprice"),
-        out, script,
-        parallelism = spark.sparkContext.defaultParallelism)
-      .alerts.localCheckpoint()
+        out, script)
+      .alerts
       .select(col("payload")("reason").as("reason"),
         col("payload")("order").cast(LongType).as("o_orderkey"))
-      .orderBy(col("o_orderkey"))
   }
 
   val xfPyalertsSql: String =
@@ -325,9 +315,7 @@ object Transforms {
         out, script,
         lookups = Map("prio_code" -> Map(
           "1-URGENT" -> "U", "2-HIGH" -> "H", "3-MEDIUM" -> "M",
-          "4-NOT SPECIFIED" -> "N", "5-LOW" -> "L")),
-        parallelism = spark.sparkContext.defaultParallelism)
-      .out.localCheckpoint().orderBy(col("o_orderkey"))
+          "4-NOT SPECIFIED" -> "N", "5-LOW" -> "L"))).out
   }
 
   val xfPylookupSql: String =
@@ -371,9 +359,8 @@ object Transforms {
         Tables.events(spark, dir)
           .select(col("event_id"), col("ts"),
             col("props").cast(BinaryType).as("payload")),
-        out, script,
-        parallelism = spark.sparkContext.defaultParallelism)
-      .out.localCheckpoint()
+        out, script)
+      .out
       // binary compares as hex in the oracle layer (repo convention, see
       // mm_frames: the hash compare can't order raw blobs portably); the
       // wire codec still moved real bytes both directions above
@@ -383,7 +370,6 @@ object Transforms {
         // pandas bridge renders DATE as midnight timestamps, so raw DATE
         // columns are unorderable across engines in the hash compare
         date_format(col("day"), "yyyy-MM-dd").as("day_str"))
-      .orderBy(col("event_id"))
   }
 
   /** DuckDB twin: UTF-8 encode to BLOB, byte slice via hex (DuckDB has
@@ -421,7 +407,6 @@ object Transforms {
     res.alerts
       .select(element_at(col("payload"), "order").cast(LongType).as("o_orderkey"),
         element_at(col("payload"), "reason").as("reason"))
-      .localCheckpoint().orderBy(col("o_orderkey"))
   }
 
   val xfAlertsSql: String =
@@ -446,7 +431,7 @@ object Transforms {
       em.emit(Map(
         "c_custkey" -> r("c_custkey"),
         "nation_name" -> ctx.lookup("nations", r("c_nationkey"))))
-    }.out.localCheckpoint().orderBy(col("c_custkey"))
+    }.out
   }
 
   val xfLookupSql: String =

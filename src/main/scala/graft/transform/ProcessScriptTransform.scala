@@ -8,7 +8,8 @@ import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator, JsonParser, JsonT
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types._
 
@@ -16,10 +17,11 @@ import org.apache.spark.sql.types._
   * mode (ref: Py4jPythonExecutor.java:1-297), which runs user *Python* in
   * an external process while the engine streams records across.
   *
-  * Re-expressed for Spark's execution model: each `mapPartitions` task
-  * spawns one worker process (python3 running [[workerSource]], stdlib
-  * only) and speaks one length-prefixed frame format over its
-  * stdin/stdout, in both directions:
+  * Re-expressed for Spark's execution model: each task of the script
+  * stage (the [[org.apache.spark.sql.graft.ScriptPlan]] node it shares
+  * with [[ScriptTransform]]) spawns one worker process (python3 running
+  * [[workerSource]], stdlib only) and speaks one length-prefixed frame
+  * format over its stdin/stdout, in both directions:
   * {{{
   * [type u8][json_len u32][UTF-8 JSON][n u32][n × len u32][side bytes]
   * }}}
@@ -233,265 +235,240 @@ object ProcessScriptTransform {
              lookups: Map[String, Map[String, Any]] = Map.empty,
              onError: ScriptTransform.ErrorPolicy = ScriptTransform.FailFast,
              pythonExec: String = "python3",
-             parallelism: Int = 0,
              env: Map[String, String] = Map.empty): TransformResult = {
     validate(script, pythonExec, env) // fail at configure time, not per task
-    // torrent-broadcast once per executor (like the Scala path's
-    // ScriptContext), not serialized into every task closure; no
-    // broadcast block at all in the common no-lookups case (a broadcast
-    // per python() call lives until the SparkContext dies)
-    val bcLookups =
-      if (lookups.isEmpty) null
-      else df.sparkSession.sparkContext.broadcast(lookups)
-    // a narrow parquet scan often yields 1-2 partitions = 1-2 workers;
-    // parallelism > 0 repartitions so the python stage uses the cluster
-    // (the shuffle of input rows is cheap next to interpreting them)
-    val in = if (parallelism > 0) df.repartition(parallelism) else df
-    val inSchema = in.schema
-    val errSchema = StructType(
-      StructField("errorCode", IntegerType) ::
-      StructField("errorMsg", StringType) :: inSchema.fields.toList)
-    val taggedSchema = StructType(Seq(
-      StructField("_tag", StringType, nullable = false),
-      StructField("_out", outSchema),
-      StructField("_err", errSchema),
-      StructField("_alert", MapType(StringType, StringType))))
-    val worker = workerSource
-    val nIn = inSchema.length
-    // wire-type descriptors for the worker: null unless the schema
-    // carries binary/datetime somewhere (then the worker walks nothing)
-    val inDesc = WireCodec.descriptor(inSchema)
-    val outDesc = WireCodec.descriptor(outSchema)
+    ScriptTransform.planned(df, outSchema, "python", lookups) {
+      (inSchema, taggedSchema, bcLookups) =>
+      // wire-type descriptors for the worker: null unless the schema
+      // carries binary/datetime somewhere (then the worker walks nothing)
+      val inDesc = WireCodec.descriptor(inSchema)
+      val outDesc = WireCodec.descriptor(outSchema)
+      // rows cross the task boundary through the Row encoder's generated
+      // deserializer and serializer
+      val inEncoder = ExpressionEncoder(inSchema).resolveAndBind()
+      val outEncoder = ExpressionEncoder(taggedSchema)
 
-    val tagged = in.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val inShape = new WireCodec.Struct(inSchema)
-        val outShape = new WireCodec.Struct(outSchema)
-        val pb = new ProcessBuilder(pythonExec, "-c", worker)
-        env.foreach { case (k, v) => pb.environment().put(k, v) }
-        val proc = pb.start()
-        // stderr (script print() and logger output, tracebacks) → executor log
-        val drain = new Thread(() => {
-          val r = new BufferedReader(new InputStreamReader(
-            proc.getErrorStream, StandardCharsets.UTF_8))
-          var l = r.readLine()
-          while (l != null) { System.err.println(s"[graft.pyscript] $l"); l = r.readLine() }
-        }, "graft-pyscript-stderr")
-        drain.setDaemon(true)
-        drain.start()
+      irs => {
+        val rows = irs.map(inEncoder.createDeserializer())
+        if (!rows.hasNext) Iterator.empty
+        else {
+          val inShape = new WireCodec.Struct(inSchema)
+          val outShape = new WireCodec.Struct(outSchema)
+          val pb = new ProcessBuilder(pythonExec, "-c", workerSource)
+          env.foreach { case (k, v) => pb.environment().put(k, v) }
+          val proc = pb.start()
+          // stderr (script print() and logger output, tracebacks) → executor log
+          val drain = new Thread(() => {
+            val r = new BufferedReader(new InputStreamReader(
+              proc.getErrorStream, StandardCharsets.UTF_8))
+            var l = r.readLine()
+            while (l != null) { System.err.println(s"[graft.pyscript] $l"); l = r.readLine() }
+          }, "graft-pyscript-stderr")
+          drain.setDaemon(true)
+          drain.start()
 
-        // Row batches the writer has sent whose records' completion
-        // ("dn"/"f") the reader has not yet seen — bounded, so a slow
-        // worker backpressures the writer instead of buffering the
-        // partition. The reader walks a cursor over them and touches a
-        // Row again only when its record fails.
-        val pending =
-          new java.util.concurrent.LinkedBlockingQueue[java.util.ArrayList[Row]](4)
-        val lastSent = new java.util.concurrent.atomic.AtomicReference[Row]()
-        val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-        val tc = TaskContext.get()
-        val writer = new Thread(() => {
-          try {
-            if (tc != null) org.apache.spark.graft.TaskContextBridge.set(tc)
-            val out = new FrameOut(proc.getOutputStream)
-            val init = new java.util.LinkedHashMap[String, Object]()
-            init.put("script", script)
-            init.put("arguments", JsonCodec.toJava(arguments))
-            init.put("lookups", JsonCodec.toJava(
-              if (bcLookups == null) Map.empty[String, Map[String, Any]]
-              else bcLookups.value))
-            if (inDesc != null) init.put("in_types", inDesc)
-            if (outDesc != null) init.put("out_types", outDesc)
-            out.json.write(mapper.writeValueAsBytes(init))
-            out.send(FInit)
-            var batch = new java.util.ArrayList[Row](BatchSize)
-            def sendBatch(): Unit = {
-              // the reader takes ownership of the list (its cursor walks
-              // it), so a fresh list replaces it; BEFORE the write, so
-              // the reader always finds the records its markers name
-              pending.put(batch)
-              val g = jsonFactory.createGenerator(out.json)
-              g.writeStartArray()
-              var i = 0
-              while (i < batch.size) {
-                WireCodec.writeStruct(g, batch.get(i), inShape, out.side)
-                i += 1
-              }
-              g.writeEndArray()
-              g.close()
-              lastSent.set(batch.get(batch.size - 1))
-              out.send(FRecords)
-              batch = new java.util.ArrayList[Row](BatchSize)
-            }
-            while (rows.hasNext) {
-              batch.add(rows.next())
-              if (batch.size >= BatchSize) sendBatch()
-            }
-            if (!batch.isEmpty) sendBatch()
-            out.send(FEnd)
-          } catch {
-            case t: Throwable =>
-              writerError.set(t)
-              proc.destroyForcibly()
-          }
-        }, "graft-pyscript-writer")
-        writer.setDaemon(true)
-        Option(tc).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          proc.destroyForcibly(); writer.interrupt()
-        })
-        writer.start()
-
-        def errRow(code: Int, msg: String, bad: Row): Row = {
-          val values = new Array[Any](nIn + 2)
-          values(0) = code
-          values(1) = msg
-          if (bad != null) {
-            var i = 0
-            while (i < nIn) { values(i + 2) = bad.get(i); i += 1 }
-          }
-          Row("err", null, new GenericRow(values), null)
-        }
-
-        // messages arrive in record order (the worker is sequential);
-        // "dn"/"f" advance the pending cursor so "f" can name the record
-        // that failed
-        new Iterator[Row] {
-          private val frames = new FrameIn(proc.getInputStream)
-          private var p: JsonParser = null // inside the current B frame's array
-          private var nextRow: Row = null
-          private var finished = false
-          private def lastRecord: String = {
-            val r = lastSent.get()
-            if (r == null) "none" else r.toString.take(256)
-          }
-          private def fail(why: String): Nothing = {
-            // a writer that failed on its own (not on the pipe a dying
-            // worker broke) is the root cause
-            val cause = writerError.get()
-            if (cause != null && !cause.isInstanceOf[java.io.IOException])
-              throw new IllegalStateException(
-                s"python worker input stream failed: $cause", cause)
-            throw new IllegalStateException(s"$why; last record sent: $lastRecord", cause)
-          }
-          private def died(): Nothing = {
-            val exit =
-              if (proc.waitFor(5, java.util.concurrent.TimeUnit.SECONDS))
-                proc.exitValue().toString
-              else "alive"
-            fail(s"python worker died (exit=$exit)")
-          }
-          private var curBatch: java.util.ArrayList[Row] = null
-          private var curIdx = 0
-          /** Advance the pending cursor n records; the last Row passed
-            * (null only if the worker names records it was never sent). */
-          private def pendingAdvance(n0: Int): Row = {
-            var last: Row = null
-            var n = n0
-            while (n > 0) {
-              if (curBatch == null || curIdx >= curBatch.size()) {
-                curBatch = pending.poll(); curIdx = 0
-                if (curBatch == null) return null
-              }
-              last = curBatch.get(curIdx); curIdx += 1; n -= 1
-            }
-            last
-          }
-          private def readFrame(): Unit = {
-            val ok =
-              try frames.next()
-              catch {
-                case _: EOFException => died()
-                case e: FrameError => fail(s"python worker protocol error: ${e.getMessage}")
-              }
-            if (!ok) died()
-            val q = jsonFactory.createParser(frames.json)
-            if (frames.tpe == FBatch) {
-              if (q.nextToken() != JsonToken.START_ARRAY)
-                fail("python worker protocol error: a B frame must hold a JSON array")
-              p = q
-            } else { // FMetrics: end of stream
-              if (q.nextToken() == JsonToken.START_OBJECT)
-                while (q.nextToken() == JsonToken.FIELD_NAME) {
-                  val k = q.currentName()
-                  q.nextToken()
-                  metrics.count(k, q.getLongValue)
+          // Row batches the writer has sent whose records' completion
+          // ("dn"/"f") the reader has not yet seen — bounded, so a slow
+          // worker backpressures the writer instead of buffering the
+          // partition. The reader walks a cursor over them and touches a
+          // Row again only when its record fails.
+          val pending =
+            new java.util.concurrent.LinkedBlockingQueue[java.util.ArrayList[Row]](4)
+          val lastSent = new java.util.concurrent.atomic.AtomicReference[Row]()
+          val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+          val tc = TaskContext.get()
+          val writer = new Thread(() => {
+            try {
+              if (tc != null) org.apache.spark.graft.TaskContextBridge.set(tc)
+              val out = new FrameOut(proc.getOutputStream)
+              val init = new java.util.LinkedHashMap[String, Object]()
+              init.put("script", script)
+              init.put("arguments", JsonCodec.toJava(arguments))
+              init.put("lookups", JsonCodec.toJava(
+                if (bcLookups == null) Map.empty[String, Map[String, Any]]
+                else bcLookups.value))
+              if (inDesc != null) init.put("in_types", inDesc)
+              if (outDesc != null) init.put("out_types", outDesc)
+              out.json.write(mapper.writeValueAsBytes(init))
+              out.send(FInit)
+              var batch = new java.util.ArrayList[Row](BatchSize)
+              def sendBatch(): Unit = {
+                // the reader takes ownership of the list (its cursor walks
+                // it), so a fresh list replaces it; BEFORE the write, so
+                // the reader always finds the records its markers name
+                pending.put(batch)
+                val g = jsonFactory.createGenerator(out.json)
+                g.writeStartArray()
+                var i = 0
+                while (i < batch.size) {
+                  WireCodec.writeStruct(g, batch.get(i), inShape, out.side)
+                  i += 1
                 }
-              q.close()
-              proc.waitFor()
-              finished = true
+                g.writeEndArray()
+                g.close()
+                lastSent.set(batch.get(batch.size - 1))
+                out.send(FRecords)
+                batch = new java.util.ArrayList[Row](BatchSize)
+              }
+              while (rows.hasNext) {
+                batch.add(rows.next())
+                if (batch.size >= BatchSize) sendBatch()
+              }
+              if (!batch.isEmpty) sendBatch()
+              out.send(FEnd)
+            } catch {
+              case t: Throwable =>
+                writerError.set(t)
+                proc.destroyForcibly()
             }
-          }
-          private def message(): Unit = {
-            val side = frames.side
-            p.nextToken()
-            val tag = p.getText
-            p.nextToken()
-            tag match {
-              case "e" =>
-                if (p.currentToken() != JsonToken.START_OBJECT)
-                  throw new IllegalArgumentException(
-                    s"emit expects a dict record, got ${WireCodec.readAny(p)}")
-                nextRow = Row("out", WireCodec.readStruct(p, outShape, side), null, null)
-              case "r" =>
-                var code: Any = 0
-                var msg = ""
-                var bad: Row = null
-                if (p.currentToken() == JsonToken.START_OBJECT)
-                  while (p.nextToken() == JsonToken.FIELD_NAME) {
-                    val k = p.currentName()
-                    p.nextToken()
-                    k match {
-                      case "errorCode" => code = WireCodec.readAny(p)
-                      case "errorMsg" => msg = String.valueOf(WireCodec.readAny(p))
-                      case "invalidRecord" if p.currentToken() == JsonToken.START_OBJECT =>
-                        bad = WireCodec.readStruct(p, inShape, side)
-                      case _ => p.skipChildren()
-                    }
+          }, "graft-pyscript-writer")
+          writer.setDaemon(true)
+          Option(tc).foreach(_.addTaskCompletionListener[Unit] { _ =>
+            proc.destroyForcibly(); writer.interrupt()
+          })
+          writer.start()
+
+          def errRow(code: Int, msg: String, bad: Row): Row =
+            ScriptTransform.errorRow(code, msg, inSchema.length)(i => if (bad == null) null else bad.get(i))
+
+          // messages arrive in record order (the worker is sequential);
+          // "dn"/"f" advance the pending cursor so "f" can name the record
+          // that failed
+          new Iterator[Row] {
+            private val frames = new FrameIn(proc.getInputStream)
+            private var p: JsonParser = null // inside the current B frame's array
+            private var nextRow: Row = null
+            private var finished = false
+            private def lastRecord: String = {
+              val r = lastSent.get()
+              if (r == null) "none" else r.toString.take(256)
+            }
+            private def fail(why: String): Nothing = {
+              // a writer that failed on its own (not on the pipe a dying
+              // worker broke) is the root cause
+              val cause = writerError.get()
+              if (cause != null && !cause.isInstanceOf[java.io.IOException])
+                throw new IllegalStateException(
+                  s"python worker input stream failed: $cause", cause)
+              throw new IllegalStateException(s"$why; last record sent: $lastRecord", cause)
+            }
+            private def died(): Nothing = {
+              val exit =
+                if (proc.waitFor(5, java.util.concurrent.TimeUnit.SECONDS))
+                  proc.exitValue().toString
+                else "alive"
+              fail(s"python worker died (exit=$exit)")
+            }
+            private var curBatch: java.util.ArrayList[Row] = null
+            private var curIdx = 0
+            /** Advance the pending cursor n records; the last Row passed
+              * (null only if the worker names records it was never sent). */
+            private def pendingAdvance(n0: Int): Row = {
+              var last: Row = null
+              var n = n0
+              while (n > 0) {
+                if (curBatch == null || curIdx >= curBatch.size()) {
+                  curBatch = pending.poll(); curIdx = 0
+                  if (curBatch == null) return null
+                }
+                last = curBatch.get(curIdx); curIdx += 1; n -= 1
+              }
+              last
+            }
+            private def readFrame(): Unit = {
+              val ok =
+                try frames.next()
+                catch {
+                  case _: EOFException => died()
+                  case e: FrameError => fail(s"python worker protocol error: ${e.getMessage}")
+                }
+              if (!ok) died()
+              val q = jsonFactory.createParser(frames.json)
+              if (frames.tpe == FBatch) {
+                if (q.nextToken() != JsonToken.START_ARRAY)
+                  fail("python worker protocol error: a B frame must hold a JSON array")
+                p = q
+              } else { // FMetrics: end of stream
+                if (q.nextToken() == JsonToken.START_OBJECT)
+                  while (q.nextToken() == JsonToken.FIELD_NAME) {
+                    val k = q.currentName()
+                    q.nextToken()
+                    metrics.count(k, q.getLongValue)
                   }
-                nextRow = errRow(code.asInstanceOf[Number].intValue(), msg, bad)
-              case "a" =>
-                nextRow = Row("alert", null, null,
-                  WireCodec.readAny(p).asInstanceOf[Map[String, Any]]
-                    .map { case (k, v) => k -> String.valueOf(v) })
-              case "dn" =>
-                pendingAdvance(p.getIntValue)
-              case "f" =>
-                // a failing record's "f" stands in for its done marker
-                val bad = pendingAdvance(1)
-                val err = p.getText
-                onError match {
-                  case ScriptTransform.FailFast =>
-                    throw new RuntimeException(s"python transform failed: $err")
-                  case ScriptTransform.RouteToErrors(code) =>
-                    nextRow = errRow(code, err, bad)
-                }
-              case other => fail(s"python worker protocol error: unknown message '$other'")
-            }
-            if (p.nextToken() != JsonToken.END_ARRAY)
-              fail(s"python worker protocol error: trailing values in a '$tag' message")
-          }
-          private def advance(): Unit = {
-            while (nextRow == null && !finished) {
-              if (p == null) readFrame()
-              else p.nextToken() match {
-                case JsonToken.START_ARRAY => message()
-                case JsonToken.END_ARRAY => p.close(); p = null
-                case t => fail(s"python worker protocol error: unexpected $t in a B frame")
+                q.close()
+                proc.waitFor()
+                finished = true
               }
             }
-          }
-          override def hasNext: Boolean = { advance(); nextRow != null }
-          override def next(): Row = {
-            advance()
-            if (nextRow == null) throw new NoSuchElementException
-            val r = nextRow; nextRow = null; r
-          }
+            private def message(): Unit = {
+              val side = frames.side
+              p.nextToken()
+              val tag = p.getText
+              p.nextToken()
+              tag match {
+                case "e" =>
+                  if (p.currentToken() != JsonToken.START_OBJECT)
+                    throw new IllegalArgumentException(
+                      s"emit expects a dict record, got ${WireCodec.readAny(p)}")
+                  nextRow = Row("out", WireCodec.readStruct(p, outShape, side), null, null)
+                case "r" =>
+                  var code: Any = 0
+                  var msg = ""
+                  var bad: Row = null
+                  if (p.currentToken() == JsonToken.START_OBJECT)
+                    while (p.nextToken() == JsonToken.FIELD_NAME) {
+                      val k = p.currentName()
+                      p.nextToken()
+                      k match {
+                        case "errorCode" => code = WireCodec.readAny(p)
+                        case "errorMsg" => msg = String.valueOf(WireCodec.readAny(p))
+                        case "invalidRecord" if p.currentToken() == JsonToken.START_OBJECT =>
+                          bad = WireCodec.readStruct(p, inShape, side)
+                        case _ => p.skipChildren()
+                      }
+                    }
+                  nextRow = errRow(code.asInstanceOf[Number].intValue(), msg, bad)
+                case "a" =>
+                  nextRow = Row("alert", null, null,
+                    WireCodec.readAny(p).asInstanceOf[Map[String, Any]]
+                      .map { case (k, v) => k -> String.valueOf(v) })
+                case "dn" =>
+                  pendingAdvance(p.getIntValue)
+                case "f" =>
+                  // a failing record's "f" stands in for its done marker
+                  val bad = pendingAdvance(1)
+                  val err = p.getText
+                  onError match {
+                    case ScriptTransform.FailFast =>
+                      throw new RuntimeException(s"python transform failed: $err")
+                    case ScriptTransform.RouteToErrors(code) =>
+                      nextRow = errRow(code, err, bad)
+                  }
+                case other => fail(s"python worker protocol error: unknown message '$other'")
+              }
+              if (p.nextToken() != JsonToken.END_ARRAY)
+                fail(s"python worker protocol error: trailing values in a '$tag' message")
+            }
+            private def advance(): Unit = {
+              while (nextRow == null && !finished) {
+                if (p == null) readFrame()
+                else p.nextToken() match {
+                  case JsonToken.START_ARRAY => message()
+                  case JsonToken.END_ARRAY => p.close(); p = null
+                  case t => fail(s"python worker protocol error: unexpected $t in a B frame")
+                }
+              }
+            }
+            override def hasNext: Boolean = { advance(); nextRow != null }
+            override def next(): Row = {
+              advance()
+              if (nextRow == null) throw new NoSuchElementException
+              val r = nextRow; nextRow = null; r
+            }
+          }.map(outEncoder.createSerializer())
         }
       }
-    }(Encoders.row(taggedSchema))
-
-    TransformResult(tagged.toDF(), outSchema, errSchema)
+    }
   }
 
   /** A frame the worker sent that the format cannot hold. */

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{GraftSession, StageLog, Tables}
 import graft.operators.{Dedup, Similarity}
 import graft.queries.Relational
+import graft.transform.{ProcessScriptTransform, ScriptTransform}
 
 /** Physical-plan assertions: the properties that make these operators hold
   * up at 100 TB — filters reaching the scan, column pruning, dimension
@@ -742,6 +743,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val nj = Dedup.ngramJaccard(docs)
       nj.queryExecution.explainString(
         org.apache.spark.sql.execution.SimpleMode)
+      // both script engines over an exchange (its stages run only under
+      // an action) and over a one-partition input (the floor's shuffle is
+      // planned from the scan, not counted by a job)
+      val out = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("lang",
+          org.apache.spark.sql.types.StringType)))
+      val script =
+        "def transform(record, emitter, context):\n    emitter.emit(record)\n"
+      val one = docs.select("lang").coalesce(1)
+      for (in <- Seq(docs.groupBy("lang").count(), one, one.groupBy("lang").count())) {
+        ScriptTransform(in, out)((r, em, _) => em.emit(r)).out
+          .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+        ProcessScriptTransform.python(in, out, script).out
+          .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+      }
       Thread.sleep(500) // let any stray job-start event land
       assert(jobs === 0,
         s"plan-only construction launched $jobs job(s)")
@@ -753,6 +769,41 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val eagerRows = graft.operators.TextAnalysis
       .lmScoreEager(docs).count()
     assert(lazyRows === eagerRows && lazyRows > 0)
+  }
+
+  test("xf_* keys: building runs no job but the source's, and the plan shows the script") {
+    // a parquet read infers its schema with one job, and xf_lookup
+    // collects the nation table into its lookups map; nothing else may
+    // run before an action
+    val stray = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val name = s.stageInfos.map(_.name).mkString(", ")
+        if (!name.startsWith("parquet at Tables.scala") &&
+            !name.startsWith("collect at Transforms.scala"))
+          stray.synchronized(stray += name)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val keys = graft.queries.Transforms.queries.keys.toSeq.sorted
+    assert(keys.size === 16)
+    try {
+      for (k <- keys) {
+        graft.queries.Transforms.queries(k)(spark, dir)
+          .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+        org.apache.spark.graft.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+        assert(stray.isEmpty, s"building $k ran job(s): $stray")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    for (k <- Seq("xf_script", "xf_pyscript")) {
+      val text = Profile.planText(spark, dir, k)
+      // the tree prints a node above its input
+      val script = text.indexOf("Script (")
+      val scan = text.indexOf("Scan parquet")
+      assert(script >= 0 && scan > script, s"$k plan lacks scan -> script:\n$text")
+      assert(!text.contains("ExistingRDD") && !text.contains("localCheckpoint"), text)
+    }
   }
 
   test("profile plan dump: a deferred query shows its inner serving plan") {

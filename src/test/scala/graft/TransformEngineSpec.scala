@@ -803,4 +803,69 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics.value("log.warn") === 4)
     assert(metrics.value("log.error") === 0)
   }
+
+  test("script floor: both engines keep an 8-partition input and spread a 1-partition one") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // each output row names the script task that made it: the JVM
+    // closure's partition, the python worker's pid
+    val out = StructType(Seq(StructField("task", LongType)))
+    val script =
+      """import os
+        |def transform(record, emitter, context):
+        |    emitter.emit({"task": os.getpid()})
+        |""".stripMargin
+    def engines(df: org.apache.spark.sql.DataFrame) = Seq(
+      "jvm" -> ScriptTransform(df, out) { (_, em, _) =>
+        em.emit(Map("task" -> org.apache.spark.TaskContext.getPartitionId().toLong))
+      }.out,
+      "python" -> ProcessScriptTransform.python(df, out, script).out)
+    val floor = spark.sparkContext.defaultParallelism
+    assert(floor < 8)
+    for ((engine, res) <- engines(spark.range(0, 800, 1, 8).toDF("id"))) {
+      val shuffles = graft.core.Util.planNodes(res.queryExecution.executedPlan)
+        .collect { case s: ShuffleExchangeLike => s }
+      assert(shuffles.isEmpty, s"$engine shuffled an 8-partition input")
+      assert(res.distinct().count() === 8, engine)
+    }
+    for ((engine, res) <- engines(spark.range(0, 100, 1, 1).toDF("id")))
+      assert(res.distinct().count() === floor, engine)
+  }
+
+  test("lookups: each engine broadcasts a non-empty map once and an empty one never") {
+    val sc = spark.sparkContext
+    // broadcast ids count up, so two probes bracket every broadcast made
+    // between them
+    def broadcasts(build: => Any): Long = {
+      val before = sc.broadcast(0)
+      build
+      val after = sc.broadcast(0)
+      before.destroy(); after.destroy()
+      after.id - before.id - 1
+    }
+    val df = Seq(1L, 2L).toDF("id")
+    val out = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    val script =
+      """def transform(record, emitter, context):
+        |    emitter.emit({"id": record["id"], "name": context.lookup("names", record["id"])})
+        |""".stripMargin
+    def jvm(lookups: Map[String, Map[String, Any]]) =
+      ScriptTransform(df, out, lookups = lookups) { (r, em, ctx) =>
+        em.emit(Map("id" -> r("id"), "name" -> ctx.lookup("names", r("id"))))
+      }.out
+    def py(lookups: Map[String, Map[String, Any]]) =
+      ProcessScriptTransform.python(df, out, script, lookups = lookups).out
+    val names = Map("names" -> Map[String, Any]("1" -> "one"))
+    for ((engine, build) <- Seq[(String, Map[String, Map[String, Any]] => org.apache.spark.sql.DataFrame)](
+        "jvm" -> jvm, "python" -> py)) {
+      var none: org.apache.spark.sql.DataFrame = null
+      assert(broadcasts { none = build(Map.empty) } === 0, engine)
+      var some: org.apache.spark.sql.DataFrame = null
+      assert(broadcasts { some = build(names) } === 1, engine)
+      // a missing lookups map reads as null, as a missing key does
+      assert(none.collect().map(r => (r.getLong(0), r.getString(1))).sorted ===
+        Array((1L, null), (2L, null)), engine)
+      assert(some.collect().map(r => (r.getLong(0), r.getString(1))).sorted ===
+        Array((1L, "one"), (2L, null)), engine)
+    }
+  }
 }
