@@ -819,6 +819,20 @@ object Dedup {
       |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.4
       |ORDER BY vec_a, vec_b""".stripMargin
 
+  /** (doc_id, n, s): one row per distinct 60-bit hashed word-3-gram s of
+    * a document that has n of them; a document of < 3 words (a NULL
+    * kernel array) has none. The kernel runs once per document: rows are
+    * dropped by a filter on the generator's output, because a filter on
+    * the array (or the size(array) > 0 that Spark infers for an inner
+    * explode) is pushed below the projection, where it evaluates the
+    * kernel a second time. */
+  private def shingleRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), array_distinct(org.apache.spark.sql.graft.VectorExprs
+        .shingle3Md5Long(col("text"), 1, 15)).as("hs"))
+      .select(col("doc_id"), size(col("hs")).cast(LongType).as("n"),
+        explode_outer(col("hs")).as("s"))
+      .filter(col("s").isNotNull)
+
   /** Word-3-gram Jaccard pair similarity, exact: every pair of documents
     * whose distinct hashed 3-gram sets A, B have
     * J = |A ∩ B| / |A ∪ B| >= minJaccard (t), as (doc_a < doc_b, shared,
@@ -859,15 +873,8 @@ object Dedup {
     // join on a 60-bit hash of the shingle, not the string: 8-byte keys
     // cross the exchanges. Both engines use the same md5-derived hash, so
     // results are identical by construction (within-doc 60-bit
-    // collisions: ~1e-15/doc). Docs with <3 words produce a NULL shingle
-    // array (kernel contract) and drop here.
-    val tall = kernelFloor(docs).select(col("doc_id"),
-        array_distinct(org.apache.spark.sql.graft.VectorExprs
-          .shingle3Md5Long(col("text"), 1, 15)).as("hs"))
-      .filter(col("hs").isNotNull)
-      .select(col("doc_id"), size(col("hs")).cast(LongType).as("n"),
-        explode(col("hs")).as("s"))
-    val multi = tall
+    // collisions: ~1e-15/doc).
+    val multi = shingleRows(kernelFloor(docs))
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("df") >= 2)
     // the fewest o with ok(o), where ok holds from about x on: ceil(x) is
@@ -929,39 +936,19 @@ object Dedup {
     * its distinct shingle set BROADCASTS: the sweep is one scan of
     * corpus shingles + a broadcast hash join — no shuffle of text, no
     * corpus x benchmark pairs, cost linear in corpus shingles at 100 TB.
-    * Returns (doc_id, shared, n_shingles, frac).
-    *
-    * Inputs must be deterministic DataFrames (the repo-wide recompute
-    * convention): the shingle table is recomputed for its two consumers,
-    * so a nondeterministic source (e.g. an unseeded sample()) could feed
-    * them inconsistent snapshots. */
+    * Returns (doc_id, shared, n_shingles, frac). */
   def contamination(docs: DataFrame, bench: DataFrame,
                     minFrac: Double = 0.2): DataFrame = {
     // 60-bit hashed shingles, same trade as ngramJaccard: the corpus-wide
     // distinct and the join run on longs, not ~20-byte strings (measured
-    // 149 s → string distinct dominated at 2M docs / ~100M shingles);
-    // cross-engine by construction, collisions ~1e-15/doc ignored
-    // within-doc dedup is ROW-LOCAL: array_distinct of the per-row
-    // kernel replaces the corpus-wide distinct() EXCHANGE the previous
-    // shape paid, and the per-doc set size becomes size(array) — a pure
-    // projection instead of a second corpus-keyed aggregate.
-    // recompute-by-design for BOTH consumers (sizes projection +
-    // benchmark join), per the tallShingles scaladoc rationale: a
-    // localCheckpoint materializes ~100M deserialized rows per 2M docs —
-    // a memory cliff that measured no faster than the cheap scan passes
-    // it saves, and at cluster scale risks eviction where recompute
-    // cannot
-    def hashedSets(df: DataFrame) = df.select(col("doc_id"),
-        array_distinct(org.apache.spark.sql.graft.VectorExprs
-          .shingle3Md5Long(col("text"), 1, 15)).as("_hs"))
-      .filter(col("_hs").isNotNull)
-    val d = hashedSets(docs).select(col("doc_id"), explode(col("_hs")).as("s"))
-    val sizes = hashedSets(docs).select(col("doc_id"),
-      size(col("_hs")).cast(LongType).as("n_shingles"))
-    val b = hashedSets(bench).select(explode(col("_hs")).as("s")).distinct()
-    d.join(broadcast(b), Seq("s"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("shared"))
-      .join(sizes, Seq("doc_id"))
+    // 149 s → string distinct dominated at 2M docs / ~100M shingles).
+    // Within-doc dedup is row-local (array_distinct), and each shingle
+    // row carries its document's set size, so one scan of the corpus
+    // feeds both the match count and the size
+    val b = shingleRows(bench).select(col("s")).distinct()
+    shingleRows(docs).join(broadcast(b), Seq("s"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("shared"), max(col("n")).as("n_shingles"))
       .select(col("doc_id"), col("shared"), col("n_shingles"),
         (col("shared").cast(DoubleType) /
           col("n_shingles").cast(DoubleType)).as("frac"))

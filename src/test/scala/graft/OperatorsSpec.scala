@@ -97,6 +97,31 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs === Set((5000L, 5001L), (5002L, 5003L)))
   }
 
+  test("ngramJaccard and contamination run the shingle kernel once per input") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import spark.implicits._
+    // the plan nodes that evaluate the kernel, a self-join's two copies of
+    // one subtree counted once: a filter over the kernel's column that the
+    // optimizer pushes below its projection would add a Filter here
+    def kernelNodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case p if p.expressions.exists(_.exists(_.prettyName == "graft_shingle3_md5_long")) =>
+          p.canonicalized
+      }.distinct
+    val docs = Tables.documents(spark, dir)
+    val pairs = kernelNodes(Dedup.ngramJaccard(docs))
+    assert(pairs.size === 1 && pairs.forall(_.isInstanceOf[Project]), pairs)
+    // the corpus and the benchmark
+    val swept = kernelNodes(Dedup.contamination(docs, docs.filter($"doc_id" % 2 === 0)))
+    assert(swept.size === 2 && swept.forall(_.isInstanceOf[Project]), swept)
+    val tiny = Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "a b")).toDF("doc_id", "text")
+    assert(Dedup.ngramJaccard(tiny, 0.0).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq === Seq((1L, 2L)))
+    assert(Dedup.contamination(tiny, tiny.filter($"doc_id" === 2L), 0.0).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq ===
+      Seq((1L, 1L, 2L), (2L, 2L, 2L)))
+  }
+
   test("ngramJaccard equals brute force across thresholds, pairs at exactly t included") {
     import spark.implicits._
     val ts = Seq(0.1, 0.3, 0.5, 0.55, 2.0 / 3, 0.7, 0.9, 1.0)
