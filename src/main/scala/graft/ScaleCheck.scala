@@ -96,8 +96,8 @@ object ScaleCheck {
       t("mm_meta")(graft.operators.Multimodal.extractMeta(
         graft.operators.Multimodal.synthReal(docs)).count()),
       // the imperative reference-parity path at corpus scale: per-record
-      // Scala closure + row↔map codec over mapPartitions — must stay
-      // linear like the declarative projections
+      // Scala closure + the compiled record codec in the script node —
+      // must stay linear like the declarative projections
       t("xf_script") {
         val out = StructType(Seq(
           StructField("doc_id", LongType), StructField("n_a", IntegerType)))

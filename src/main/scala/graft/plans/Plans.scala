@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Stati
 import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.StructType
 
 /** Plans graft's logical nodes: [[DeferredDF]]'s and [[ScriptPlan]]'s. */
@@ -124,8 +125,28 @@ object ScriptPlan {
       extends UnaryExecNode {
     override def producedAttributes: AttributeSet = outputSet
     override protected def stringArgs: Iterator[Any] = Iterator(engine, output)
-    override protected def doExecute(): RDD[InternalRow] =
-      child.execute().mapPartitionsInternal(run)
+    override lazy val metrics: Map[String, SQLMetric] = Map(
+      "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
+      "numOutRows" -> SQLMetrics.createMetric(sparkContext, "number of out rows"),
+      "numErrorRows" -> SQLMetrics.createMetric(sparkContext, "number of error rows"),
+      "numAlertRows" -> SQLMetrics.createMetric(sparkContext, "number of alert rows"))
+    /** Counts the rows in and, by the first letter of the channel tag
+      * that leads each output row ("out", "err", "alert"), the rows out. */
+    override protected def doExecute(): RDD[InternalRow] = {
+      val (in, out, err, alert) = (longMetric("numInputRows"), longMetric("numOutRows"),
+        longMetric("numErrorRows"), longMetric("numAlertRows"))
+      val r = run
+      child.execute().mapPartitionsInternal { rows =>
+        r(rows.map { row => in += 1; row }).map { row =>
+          row.getUTF8String(0).getByte(0) match {
+            case 'o' => out += 1
+            case 'e' => err += 1
+            case _ => alert += 1
+          }
+          row
+        }
+      }
+    }
     override protected def withNewChildInternal(c: SparkPlan): ScriptExec =
       copy(child = c)
   }

@@ -1,17 +1,23 @@
 package graft.transform
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRow, SpecializedGetters}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Row ↔ Map codec for the imperative script path.
+/** Record codec of the imperative script paths.
   *
   * The reference crosses the engine/script boundary with a typed codec
   * covering NULL, BOOLEAN, INT, LONG, FLOAT, DOUBLE, BYTES, STRING, ARRAY,
   * MAP, RECORD (ref: PythonObjectsEncoder.java). Graft's equivalent maps
-  * Spark's external row types to plain Scala collections so user closures
-  * see `Map[String, Any]` records, and encodes emitted maps back to Rows
-  * under a declared output schema (with forgiving numeric coercion, since
-  * script code is dynamically typed).
+  * Spark's row values to plain Scala collections so user closures see
+  * `Map[String, Any]` records, and encodes emitted maps back under a
+  * declared output schema (with forgiving numeric coercion, since script
+  * code is dynamically typed). The JVM engine runs it on InternalRows
+  * through a [[StructCodec]] compiled once per task; the python wire
+  * uses the external-Row helpers ([[encode]], [[toUnion]], [[fromUnion]]).
   */
 object SchemaCodec {
 
@@ -98,17 +104,19 @@ object SchemaCodec {
   def toUnion(value: Any, ut: StructType): Row = {
     val values = new Array[Any](ut.length)
     if (value != null) {
-      var i = 0
-      var hit = -1
-      while (hit < 0 && i < ut.length) {
-        if (branchMatches(value, ut(i).dataType)) hit = i
-        i += 1
-      }
-      if (hit < 0) throw new IllegalArgumentException(
-        s"value of ${value.getClass.getName} matches no union branch in ${ut.simpleString}")
+      val hit = unionBranch(value, ut)
       values(hit) = encode(value, ut(hit).dataType)
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericRow(values)
+    new GenericRow(values)
+  }
+
+  /** The first branch of `ut` that non-null `value` matches. */
+  private def unionBranch(value: Any, ut: StructType): Int = {
+    var i = 0
+    while (i < ut.length && !branchMatches(value, ut(i).dataType)) i += 1
+    if (i == ut.length) throw new IllegalArgumentException(
+      s"value of ${value.getClass.getName} matches no union branch in ${ut.simpleString}")
+    i
   }
 
   private def branchMatches(v: Any, dt: DataType): Boolean = (v, dt) match {
@@ -139,62 +147,6 @@ object SchemaCodec {
     case (v, _) => v
   }
 
-  /** Lazy Map view over a Row: field values decode on access instead of
-    * materializing all of them per record — a script that touches 5 of
-    * 16 columns pays for 5. Mutation-style operations (`+`, `-`)
-    * materialize first, so the full immutable-Map contract holds.
-    * Build one [[RowMapper]] per schema (it precomputes the name→index
-    * table) and reuse it for every row. */
-  final class RowMapper(schema: StructType) extends Serializable {
-    private val index: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    private val fields = schema.fields
-
-    private[SchemaCodec] def fieldValue(row: Row, i: Int): Any = {
-      val f = fields(i)
-      if (isUnionField(f))
-        fromUnion(row.get(i).asInstanceOf[Row], f.dataType.asInstanceOf[StructType])
-      else if (isEnumField(f)) checkEnum(row.get(i), enumSymbols(f), "decode")
-      else decode(row.get(i), f.dataType)
-    }
-
-    def apply(row: Row): Map[String, Any] = new RowBackedMap(row)
-
-    private final class RowBackedMap(row: Row)
-        extends scala.collection.immutable.AbstractMap[String, Any] {
-      override def get(key: String): Option[Any] =
-        index.get(key).map(fieldValue(row, _))
-      override def iterator: Iterator[(String, Any)] =
-        fields.indices.iterator.map(i => fields(i).name -> fieldValue(row, i))
-      override def size: Int = fields.length
-      override def contains(key: String): Boolean = index.contains(key)
-      override def removed(key: String): Map[String, Any] =
-        iterator.toMap.removed(key)
-      override def updated[V1 >: Any](key: String, value: V1): Map[String, V1] =
-        iterator.toMap.updated(key, value)
-      override def getOrElse[V1 >: Any](key: String, default: => V1): V1 =
-        index.get(key) match {
-          case Some(i) => fieldValue(row, i)
-          case None => default
-        }
-    }
-  }
-
-  def rowToMap(row: Row, schema: StructType): Map[String, Any] = {
-    val b = Map.newBuilder[String, Any]
-    var i = 0
-    while (i < schema.length) {
-      val f = schema(i)
-      val v =
-        if (isUnionField(f))
-          fromUnion(row.get(i).asInstanceOf[Row], f.dataType.asInstanceOf[StructType])
-        else if (isEnumField(f)) checkEnum(row.get(i), enumSymbols(f), "decode")
-        else decode(row.get(i), f.dataType)
-      b += f.name -> v
-      i += 1
-    }
-    b.result()
-  }
-
   /** Scala value → external row value under the declared type, coercing
     * numerics the way a dynamically-typed script expects. */
   def encode(value: Any, dt: DataType): Any = (value, dt) match {
@@ -217,20 +169,253 @@ object SchemaCodec {
     case (v, _) => v
   }
 
-  def mapToRow(m: scala.collection.Map[String, Any], schema: StructType): Row = {
-    // hot path (once per emitted record): index loop, no per-row Seq allocs
-    val fields = schema.fields
-    val values = new Array[Any](fields.length)
-    var i = 0
-    while (i < fields.length) {
-      val f = fields(i)
-      val raw = m.getOrElse(f.name, null)
-      values(i) =
-        if (isUnionField(f)) toUnion(raw, f.dataType.asInstanceOf[StructType])
-        else if (isEnumField(f)) checkEnum(raw, enumSymbols(f), "encode")
-        else encode(raw, f.dataType)
-      i += 1
+  // ---- the compiled codec: catalyst values <-> script values ------------
+
+  /** The script value of the non-null catalyst value at ordinal `i` of a
+    * row or an array. */
+  private trait Reader { def read(g: SpecializedGetters, i: Int): Any }
+
+  /** A script value as the catalyst value of the writer's type. */
+  private type Writer = Any => Any
+
+  /** A value the output type cannot hold, found when an emitted record is
+    * written. It fails the task under either error policy: it is a
+    * mismatch between the script and its declared schema, not bad input. */
+  final class UnconvertibleValue(value: Any, dt: DataType, cause: Throwable)
+      extends RuntimeException(
+        s"a ${value.getClass.getName} cannot be written as ${dt.simpleString}: $cause", cause)
+
+  /** A struct schema compiled once into one reader and one writer per
+    * field. Reading gives the values a script sees: boxed primitives,
+    * String, Array[Byte], java.math.BigDecimal, java.sql.Date and
+    * Timestamp, an immutable ArraySeq per array and an immutable Map per
+    * map or struct; a union field reads as its non-null branch and an
+    * enum field is checked against its symbols. Writing coerces numerics
+    * the way a dynamically-typed script expects (see [[encode]]); every
+    * other value converts as Spark's CatalystTypeConverters converts it.
+    * Converters read session confs (datetime API, ANSI), so compile a
+    * codec where its rows are read: inside the task. */
+  final class StructCodec(schema: StructType) {
+    private val fields = schema.fields
+    val length: Int = fields.length
+    private val index = new java.util.HashMap[String, Integer](length * 2)
+    fields.indices.foreach(i => index.put(fields(i).name, i))
+    private val readers = fields.map(fieldReader)
+    private val writers = fields.map(fieldWriter(_, checkEnums = true))
+    // the error channel keeps an invalid record's enum text as given
+    private lazy val looseWriters = fields.map(fieldWriter(_, checkEnums = false))
+
+    def name(i: Int): String = fields(i).name
+    /** The ordinal of field `name`, or -1. */
+    def indexOf(name: String): Int = { val i = index.get(name); if (i == null) -1 else i }
+
+    /** Field `i` of `row` as the script sees it. */
+    def read(row: InternalRow, i: Int): Any =
+      if (row.isNullAt(i)) null else readers(i).read(row, i)
+
+    /** Every field of `row`, materialized. */
+    def toMap(row: InternalRow): Map[String, Any] = {
+      val b = Map.newBuilder[String, Any]
+      var i = 0
+      while (i < length) { b += fields(i).name -> read(row, i); i += 1 }
+      b.result()
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericRow(values)
+
+    /** `m` as a row of this schema; a field `m` lacks is null (an
+      * all-null branch struct for a union), a key the schema lacks is
+      * ignored. */
+    def write(m: scala.collection.Map[String, Any]): InternalRow = {
+      val values = new Array[Any](length)
+      var i = 0
+      while (i < length) { values(i) = writers(i)(m.getOrElse(fields(i).name, null)); i += 1 }
+      new GenericInternalRow(values)
+    }
+
+    /** `v` as field `i`'s catalyst value, its enum symbols unchecked. */
+    def writeLoose(i: Int, v: Any): Any = looseWriters(i)(v)
+
+    /** A view of one row at a time as the script's record; see
+      * [[RecordView]]. */
+    def view(): RecordView = new RecordView(this)
   }
+
+  /** The record a script sees: a `Map[String, Any]` over the current
+    * InternalRow, each field read on access (a script that reads 5 of 16
+    * columns pays for 5). One view serves a whole task: it is valid only
+    * during the transform call of its row, like the reference's record.
+    * What it returns, and what `updated`, `removed` and `iterator.toMap`
+    * build, owns its values and stays valid after the call. */
+  final class RecordView private[SchemaCodec] (codec: StructCodec)
+      extends scala.collection.immutable.AbstractMap[String, Any] {
+    private[transform] var row: InternalRow = _
+    override def apply(key: String): Any = {
+      val i = codec.indexOf(key)
+      if (i < 0) default(key) else codec.read(row, i)
+    }
+    override def get(key: String): Option[Any] = {
+      val i = codec.indexOf(key)
+      if (i < 0) None else Some(codec.read(row, i))
+    }
+    override def getOrElse[V1 >: Any](key: String, default: => V1): V1 = {
+      val i = codec.indexOf(key)
+      if (i < 0) default else codec.read(row, i)
+    }
+    override def contains(key: String): Boolean = codec.indexOf(key) >= 0
+    override def size: Int = codec.length
+    override def iterator: Iterator[(String, Any)] = {
+      val r = row
+      Iterator.tabulate(codec.length)(i => codec.name(i) -> codec.read(r, i))
+    }
+    override def removed(key: String): Map[String, Any] = codec.toMap(row).removed(key)
+    override def updated[V1 >: Any](key: String, value: V1): Map[String, V1] =
+      codec.toMap(row).updated(key, value)
+  }
+
+  private def fieldReader(f: StructField): Reader =
+    if (isUnionField(f)) {
+      val members = new StructCodec(f.dataType.asInstanceOf[StructType])
+      (g, i) => {
+        val u = g.getStruct(i, members.length)
+        var j = 0
+        var v: Any = null
+        while (v == null && j < members.length) { v = members.read(u, j); j += 1 }
+        v
+      }
+    } else if (isEnumField(f)) {
+      val symbols = enumSymbols(f)
+      (g, i) => checkEnum(g.getUTF8String(i).toString, symbols, "decode")
+    } else reader(f.dataType)
+
+  private def reader(dt: DataType): Reader = dt match {
+    case BooleanType => (g, i) => g.getBoolean(i)
+    case ByteType => (g, i) => g.getByte(i)
+    case ShortType => (g, i) => g.getShort(i)
+    case IntegerType => (g, i) => g.getInt(i)
+    case LongType => (g, i) => g.getLong(i)
+    case FloatType => (g, i) => g.getFloat(i)
+    case DoubleType => (g, i) => g.getDouble(i)
+    case StringType => (g, i) => g.getUTF8String(i).toString
+    case BinaryType => (g, i) => g.getBinary(i)
+    case d: DecimalType => (g, i) => g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
+    case st: StructType =>
+      val c = new StructCodec(st)
+      (g, i) => c.toMap(g.getStruct(i, c.length))
+    case ArrayType(et, _) =>
+      val e = reader(et)
+      (g, i) => {
+        val a = g.getArray(i)
+        val out = new Array[Any](a.numElements())
+        var j = 0
+        while (j < out.length) { if (!a.isNullAt(j)) out(j) = e.read(a, j); j += 1 }
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+      }
+    case MapType(kt, vt, _) =>
+      val (k, v) = (reader(kt), reader(vt))
+      (g, i) => {
+        val m = g.getMap(i)
+        val (ks, vs) = (m.keyArray(), m.valueArray())
+        val b = Map.newBuilder[Any, Any]
+        var j = 0
+        while (j < m.numElements()) {
+          b += k.read(ks, j) -> (if (vs.isNullAt(j)) null else v.read(vs, j))
+          j += 1
+        }
+        b.result()
+      }
+    case _ => // datetime and the rest: Spark's own external value
+      val conv = CatalystTypeConverters.createToScalaConverter(dt)
+      (g, i) => conv(g.get(i, dt))
+  }
+
+  private def fieldWriter(f: StructField, checkEnums: Boolean): Writer =
+    if (isUnionField(f)) {
+      val ut = f.dataType.asInstanceOf[StructType]
+      val members = new StructCodec(ut)
+      v => {
+        val values = new Array[Any](ut.length)
+        if (v != null) {
+          val hit = unionBranch(v, ut)
+          values(hit) = members.writeLoose(hit, v)
+        }
+        new GenericInternalRow(values)
+      }
+    } else if (isEnumField(f) && checkEnums) {
+      val symbols = enumSymbols(f)
+      v => {
+        val s = checkEnum(v, symbols, "encode")
+        if (s == null) null else UTF8String.fromString(s.asInstanceOf[String])
+      }
+    } else writer(f.dataType)
+
+  /** The writer of `dt`: the common values of each type convert inline,
+    * any other one through [[encode]] and Spark's converter, as before. */
+  private[transform] def writer(dt: DataType): Writer = {
+    val other = converted(dt)
+    val w: Writer = dt match {
+      case LongType => { case n: Number => n.longValue(); case v => other(v) }
+      case IntegerType => { case n: Number => n.intValue(); case v => other(v) }
+      case DoubleType => { case n: Number => n.doubleValue(); case v => other(v) }
+      case FloatType => { case n: Number => n.floatValue(); case v => other(v) }
+      case ShortType => { case n: Number => n.shortValue(); case v => other(v) }
+      case ByteType => { case n: Number => n.byteValue(); case v => other(v) }
+      case BooleanType => { case b: java.lang.Boolean => b; case v => other(v) }
+      case StringType => v => UTF8String.fromString(v.toString)
+      case BinaryType => { case b: Array[Byte] => b; case v => other(v) }
+      case st: StructType =>
+        val c = new StructCodec(st)
+        ({ case m: scala.collection.Map[_, _] =>
+             c.write(m.asInstanceOf[scala.collection.Map[String, Any]])
+           case v => other(v) })
+      case ArrayType(et, _) =>
+        val e = writer(et)
+        ({ case s: scala.collection.Seq[_] =>
+             val out = new Array[Any](s.length)
+             var j = 0
+             s.foreach { x => if (x != null) out(j) = e(x); j += 1 }
+             new GenericArrayData(out)
+           case v => other(v) })
+      case MapType(kt, vt, _) =>
+        val (k, x) = (writer(kt), writer(vt))
+        // an immutable Map only, as Spark's converter: keys that coerce
+        // to one value merge, as they did through encode
+        ({ case m: Map[_, _] =>
+             ArrayBasedMapData(m.map { case (a, b) =>
+               (if (a == null) null else k(a)) -> (if (b == null) null else x(b)) },
+               identity, identity)
+           case v => other(v) })
+      case _ => other
+    }
+    v => if (v == null) null else w(v)
+  }
+
+  /** `v` under `dt` through [[encode]] and the converter Spark applies to
+    * a `dt` field of an external Row: the old per-record path, kept for
+    * the values the inline writers leave to it. For a primitive type that
+    * converter casts (and unwraps an Option), where Spark's top-level one
+    * passes the value through, so it is reached through a one-field row. */
+  private def converted(dt: DataType): Writer = {
+    val conv: Any => Any = dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
+           DoubleType =>
+        val field = CatalystTypeConverters.createToCatalystConverter(
+          StructType(Seq(StructField("v", dt))))
+        v => field(new GenericRow(Array(v))).asInstanceOf[InternalRow].get(0, dt)
+      case _ => CatalystTypeConverters.createToCatalystConverter(dt)
+    }
+    v => {
+      val e = encode(v, dt)
+      try conv(e)
+      catch { case t: Exception => throw new UnconvertibleValue(v, dt, t) }
+    }
+  }
+
+  /** External row → plain Scala values through the compiled codec. */
+  def rowToMap(row: Row, schema: StructType): Map[String, Any] =
+    new StructCodec(schema).toMap(
+      CatalystTypeConverters.createToCatalystConverter(schema)(row).asInstanceOf[InternalRow])
+
+  /** Script map → external row through the compiled codec. */
+  def mapToRow(m: scala.collection.Map[String, Any], schema: StructType): Row =
+    CatalystTypeConverters.createToScalaConverter(schema)(new StructCodec(schema).write(m))
+      .asInstanceOf[Row]
 }

@@ -1,15 +1,16 @@
 package graft.transform
 
-import scala.collection.mutable.ListBuffer
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{GenericRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRow, UnsafeProjection}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ScriptPlan
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
 
 /** Per-stage named counters, the equivalent of the reference's
@@ -112,8 +113,12 @@ final case class TransformResult(tagged: DataFrame, outSchema: StructType,
   * operator: the user closure runs once per record on executors, no
   * driver round-trip, linear scale-out. Prefer the declarative
   * [[Dsl]] path (whole-stage codegen) when the transform is expressible as
-  * column expressions; this path costs one serialization boundary. It
-  * and [[ProcessScriptTransform.python]] share [[planned]].
+  * column expressions; this path costs one serialization boundary: a
+  * codec compiled once per task from the input and output schemas
+  * ([[SchemaCodec.StructCodec]]) reads the record's fields from the
+  * child's InternalRow as the script asks for them and writes emitted
+  * maps straight into catalyst values. It and
+  * [[ProcessScriptTransform.python]] share [[planned]].
   */
 object ScriptTransform {
 
@@ -135,66 +140,74 @@ object ScriptTransform {
            (fn: (Map[String, Any], Emitter, ScriptContext) => Unit): TransformResult =
     planned(df, outSchema, "jvm", lookups) { (inSchema, taggedSchema, bcLookups) =>
       val ctx = new ScriptContext(arguments, metrics, bcLookups)
-      val inFields = inSchema.fields
-      // lazy per-row view: decoding happens only for the fields the user
-      // closure actually reads (measured ~25% on wide-input transforms)
-      val rowMapper = new SchemaCodec.RowMapper(inSchema)
-
-      // one record's worth of script execution
-      def runRecord(row: Row, buf: ListBuffer[Row]): Unit = {
-        val record = rowMapper(row)
+      // The task reads the child's InternalRows and writes the tagged
+      // rows' catalyst values through a codec compiled once per task from
+      // the two schemas (SchemaCodec.StructCodec): the record is a view
+      // that reads a field only when the script asks for it, an emitted
+      // map is written straight into the tagged row, and the one
+      // UnsafeProjection writes that. The view is valid for the duration
+      // of the transform call, same as the reference contract: the
+      // child's (reused) row advances when the call returns.
+      irs => {
+        val in = new SchemaCodec.StructCodec(inSchema)
+        val out = new SchemaCodec.StructCodec(outSchema)
+        val alert = SchemaCodec.writer(MapType(StringType, StringType))
+        val toUnsafe = UnsafeProjection.create(taggedSchema)
+        val record = in.view()
+        // the current record's tagged rows; one buffer per task
+        val buf = new ArrayBuffer[InternalRow]
+        def tagged(tag: UTF8String, o: Any, e: Any, a: Any): Unit =
+          buf += new GenericInternalRow(Array[Any](tag, o, e, a))
         val emitter = new Emitter {
-          def emit(r: Map[String, Any]): Unit =
-            buf += Row("out", SchemaCodec.mapToRow(r, outSchema), null, null)
-          def emitError(code: Int, msg: String, bad: Map[String, Any]): Unit =
-            buf += errorRow(code, msg, inFields.length)(i => SchemaCodec.encode(
-              bad.getOrElse(inFields(i).name, null), inFields(i).dataType))
+          def emit(r: Map[String, Any]): Unit = tagged(TagOut, out.write(r), null, null)
+          def emitError(code: Int, msg: String, bad: Map[String, Any]): Unit = {
+            val values = new Array[Any](in.length + 2)
+            values(0) = code
+            values(1) = if (msg == null) null else UTF8String.fromString(msg)
+            var i = 0
+            while (i < in.length) {
+              values(i + 2) = in.writeLoose(i, bad.getOrElse(in.name(i), null))
+              i += 1
+            }
+            tagged(TagErr, null, new GenericInternalRow(values), null)
+          }
           def emitAlert(payload: Map[String, String]): Unit =
-            buf += Row("alert", null, null, payload)
+            tagged(TagAlert, null, null, alert(payload))
         }
-        try fn(record, emitter, ctx)
-        catch {
-          case e: Exception => onError match {
-            case FailFast => throw e
-            case RouteToErrors(code) =>
-              emitter.emitError(code, s"${e.getClass.getSimpleName}: ${e.getMessage}", record)
+        def runRecord(): Unit =
+          try fn(record, emitter, ctx)
+          catch {
+            case e: SchemaCodec.UnconvertibleValue => throw e
+            case e: Exception => onError match {
+              case FailFast => throw e
+              case RouteToErrors(code) =>
+                emitter.emitError(code, s"${e.getClass.getSimpleName}: ${e.getMessage}", record)
+            }
+          }
+        new Iterator[InternalRow] {
+          private var pos = 0
+          override def hasNext: Boolean = {
+            while (pos == buf.length && irs.hasNext) {
+              buf.clear()
+              pos = 0
+              record.row = irs.next()
+              runRecord()
+            }
+            pos < buf.length
+          }
+          // the projection reuses one UnsafeRow
+          override def next(): InternalRow = {
+            if (!hasNext) throw new NoSuchElementException
+            pos += 1
+            toUnsafe(buf(pos - 1))
           }
         }
       }
-
-      // The task reads the input's InternalRows directly through a lazy
-      // Row view (per-field CatalystTypeConverters on ACCESS — the same
-      // external values a Row encoder produces, converter-for-converter),
-      // so an opaque closure reading 5 of 16 lineitem columns pays 5
-      // conversions per row, not 16; emitted tagged rows convert once to
-      // catalyst on the way out. A Dataset mapPartitions with a Row
-      // encoder measured 3-8% slower. The record view is valid for the
-      // duration of the transform call, same as the reference contract —
-      // the underlying (reused) UnsafeRow advances when the call returns.
-      val inDts = inFields.map(_.dataType)
-      irs => {
-        val convs = inDts.map(CatalystTypeConverters.createToScalaConverter)
-        val toCat = CatalystTypeConverters.createToCatalystConverter(taggedSchema)
-        val toUnsafe = UnsafeProjection.create(taggedSchema)
-        // one reusable lazy view per task — the script contract scopes a
-        // record to its transform call
-        var ir: InternalRow = null
-        val view: Row = new Row {
-          override def length: Int = inDts.length
-          override def get(i: Int): Any =
-            if (ir.isNullAt(i)) null else convs(i)(ir.get(i, inDts(i)))
-          override def isNullAt(i: Int): Boolean = ir.isNullAt(i)
-          override def copy(): Row = Row.fromSeq((0 until length).map(get))
-        }
-        irs.flatMap { ir0 =>
-          ir = ir0
-          val buf = new ListBuffer[Row]
-          runRecord(view, buf)
-          // lazy: the projection reuses one UnsafeRow
-          buf.iterator.map(r => toUnsafe(toCat(r).asInstanceOf[InternalRow]))
-        }
-      }
     }
+
+  private val TagOut = UTF8String.fromString("out")
+  private val TagErr = UTF8String.fromString("err")
+  private val TagAlert = UTF8String.fromString("alert")
 
   /** The error-channel row for a record: code, message, then input field
     * `i` (as an external value) for each of the input's `n` fields. */

@@ -868,4 +868,160 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         Array((1L, "one"), (2L, null)), engine)
     }
   }
+
+  /** Every value family a JVM script record holds, on three rows: two
+    * full ones and one whose every nullable cell is null (an absent union
+    * is its all-null branch struct, which is what writing one gives). */
+  private def codecFrame(): org.apache.spark.sql.DataFrame = {
+    import java.sql.{Date, Timestamp}
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("nul", StringType),
+      StructField("bool", BooleanType),
+      StructField("i8", ByteType), StructField("i16", ShortType),
+      StructField("i32", IntegerType), StructField("i64", LongType),
+      StructField("f32", FloatType), StructField("f64", DoubleType),
+      StructField("dec", DecimalType(10, 2)),
+      StructField("str", StringType), StructField("bin", BinaryType),
+      StructField("day", DateType), StructField("ts", TimestampType),
+      StructField("arr", ArrayType(IntegerType)),
+      StructField("m", MapType(StringType, LongType)),
+      StructField("st", StructType(Seq(
+        StructField("a", LongType),
+        StructField("tags", ArrayType(StringType)),
+        StructField("inner", StructType(Seq(StructField("x", DoubleType))))))),
+      SchemaCodec.unionField("u", Seq(LongType, StringType)),
+      SchemaCodec.enumField("e", Seq("LOW", "HIGH"))))
+    val rows = Seq(
+      Row(1L, null, true, 1.toByte, 2.toShort, 3, 4L, 1.5f, 2.25,
+        new java.math.BigDecimal("12345.67"), "h\u00e9llo", Array[Byte](1, 2),
+        Date.valueOf("2026-01-02"), Timestamp.valueOf("2026-01-02 03:04:05.000001"),
+        Seq(1, null, 3), Map("k" -> 3L, "n" -> null), Row(7L, Seq("a", "b"), Row(0.5)),
+        Row(5L, null), "HIGH"),
+      Row(2L, null, false, (-1).toByte, (-2).toShort, -3, Long.MinValue, -0.5f, -1e300,
+        new java.math.BigDecimal("-0.01"), "", Array.empty[Byte],
+        Date.valueOf("1969-12-31"), Timestamp.valueOf("1969-12-31 23:59:59.5"),
+        Seq.empty[Int], Map.empty[String, Long], Row(null, Seq.empty[String], null),
+        Row(null, "two"), "LOW"),
+      Row(3L, null, null, null, null, null, null, null, null, null, null, null, null, null,
+        null, null, null, Row(null, null), null))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
+  /** A row's values with binary cells compared by content. */
+  private def cells(r: Row): Seq[Any] = r.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  }
+
+  test("JVM script codec: an echo of every value family returns the input rows") {
+    val in = codecFrame()
+    val res = ScriptTransform(in, in.schema) { (r, em, _) => em.emit(r) }
+    assert(res.out.orderBy("id").collect().map(cells).toSeq ===
+      in.orderBy("id").collect().map(cells).toSeq)
+  }
+
+  test("JVM script codec: the script sees the same Scala types") {
+    val in = codecFrame()
+    val out = StructType(Seq(StructField("field", StringType), StructField("cls", StringType)))
+    val res = ScriptTransform(in.filter(col("id") === 1L), out) { (r, em, _) =>
+      def cls(v: Any): String = if (v == null) "null" else v.getClass.getName
+      r.foreach { case (k, v) => em.emit(Map("field" -> k, "cls" -> cls(v))) }
+      val st = r("st").asInstanceOf[Map[String, Any]]
+      em.emit(Map("field" -> "st.tags", "cls" -> cls(st("tags"))))
+      em.emit(Map("field" -> "st.inner", "cls" -> cls(st("inner"))))
+      em.emit(Map("field" -> "arr(0)", "cls" -> cls(r("arr").asInstanceOf[Seq[Any]].head)))
+    }
+    val got = res.out.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val seq = "scala.collection.immutable.ArraySeq$ofRef"
+    assert(got === Map(
+      "id" -> "java.lang.Long", "nul" -> "null", "bool" -> "java.lang.Boolean",
+      "i8" -> "java.lang.Byte", "i16" -> "java.lang.Short", "i32" -> "java.lang.Integer",
+      "i64" -> "java.lang.Long", "f32" -> "java.lang.Float", "f64" -> "java.lang.Double",
+      "dec" -> "java.math.BigDecimal", "str" -> "java.lang.String", "bin" -> "[B",
+      "day" -> "java.sql.Date", "ts" -> "java.sql.Timestamp", "arr" -> seq,
+      "m" -> "scala.collection.immutable.Map$Map2",
+      "st" -> "scala.collection.immutable.Map$Map3", "u" -> "java.lang.Long",
+      "e" -> "java.lang.String", "st.tags" -> seq,
+      "st.inner" -> "scala.collection.immutable.Map$Map1", "arr(0)" -> "java.lang.Integer"))
+  }
+
+  test("JVM script codec: RouteToErrors carries the record itself as the invalid record") {
+    val in = codecFrame()
+    val res = ScriptTransform(in, StructType(Seq(StructField("id", LongType))),
+        onError = ScriptTransform.RouteToErrors(42)) { (_, _, _) =>
+      throw new IllegalStateException("no")
+    }
+    assert(res.errors.orderBy("id").collect().map(cells).toSeq ===
+      in.orderBy("id").collect().map(r => Seq(42, "IllegalStateException: no") ++ cells(r)).toSeq)
+  }
+
+  test("JVM script codec: iterator.toMap and updated keep their values after the call") {
+    val in = codecFrame()
+    // each call emits the copies the previous call of its task took, so
+    // every copy is written after the row under it has moved on
+    // one task holds every row: eight partitions clear the script floor
+    val res = ScriptTransform(in.repartition(8, lit(1)), in.schema) {
+      var kept = Seq.empty[Map[String, Any]]
+      (r, em, _) =>
+        kept.foreach(em.emit)
+        kept = Seq(r.iterator.toMap, r.updated("extra", 1), r.removed("nul"))
+    }
+    val byId = in.collect().map(r => r.getLong(0) -> cells(r)).toMap
+    val got = res.out.collect().map(cells)
+    assert(got.length === 6)
+    got.foreach(r => assert(r === byId(r.head.asInstanceOf[Long])))
+  }
+
+  test("JVM script codec: a value its output type cannot hold fails the task under either policy") {
+    val df = Seq(1L, 2L).toDF("id")
+    val out = StructType(Seq(StructField("n", LongType)))
+    for (policy <- Seq(ScriptTransform.FailFast, ScriptTransform.RouteToErrors(1))) {
+      val res = ScriptTransform(df, out, onError = policy) { (_, em, _) =>
+        em.emit(Map("n" -> "seven"))
+      }
+      intercept[org.apache.spark.SparkException](res.out.collect())
+    }
+  }
+
+  test("script node metrics: rows in and rows out per channel, on both engines") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val df = (1L to 40L).toDF("n").repartition(3)
+    val out = StructType(Seq(StructField("n", LongType)))
+    val jvm = ScriptTransform(df, out) { (r, em, _) =>
+      val n = r("n").asInstanceOf[Long]
+      if (n % 5 == 0) em.emitError(5, "fifth", r)
+      else if (n % 7 == 0) em.emitAlert(Map("n" -> n.toString))
+      else (0L until n % 3).foreach(_ => em.emit(r))
+    }
+    val py = ProcessScriptTransform.python(df, out,
+      """def transform(record, emitter, context):
+        |    n = record["n"]
+        |    if n % 5 == 0:
+        |        emitter.emitError({"errorCode": 5, "errorMsg": "fifth", "invalidRecord": record})
+        |    elif n % 7 == 0:
+        |        emitter.emitAlert({"n": str(n)})
+        |    else:
+        |        for _ in range(n % 3):
+        |            emitter.emit(record)
+        |""".stripMargin)
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((engine, res) <- Seq("jvm" -> jvm, "python" -> py)) {
+      res.cached()
+      val counts = Seq(res.out.count(), res.errors.count(), res.alerts.count())
+      assert(counts === Seq(27L, 8L, 4L), engine)
+      val cachedPlan = helper.collect(res.tagged.queryExecution.executedPlan) {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan
+      }.head
+      val node: SparkPlan = helper.collect(cachedPlan) {
+        case p if p.metrics.contains("numInputRows") => p
+      }.head
+      def m(k: String) = node.metrics(k).value
+      assert(Seq(m("numInputRows"), m("numOutRows"), m("numErrorRows"), m("numAlertRows")) ===
+        40L +: counts, engine)
+      res.tagged.unpersist()
+    }
+  }
 }
