@@ -348,7 +348,7 @@ object SchemaCodec {
     } else writer(f.dataType)
 
   /** The writer of `dt`: the common values of each type convert inline,
-    * any other one through [[encode]] and Spark's converter, as before. */
+    * any other one through [[converted]]. */
   private[transform] def writer(dt: DataType): Writer = {
     val other = converted(dt)
     val w: Writer = dt match {
@@ -371,17 +371,15 @@ object SchemaCodec {
         ({ case s: scala.collection.Seq[_] =>
              val out = new Array[Any](s.length)
              var j = 0
-             s.foreach { x => if (x != null) out(j) = e(x); j += 1 }
+             s.foreach { x => out(j) = e(x); j += 1 }
              new GenericArrayData(out)
            case v => other(v) })
       case MapType(kt, vt, _) =>
         val (k, x) = (writer(kt), writer(vt))
         // an immutable Map only, as Spark's converter: keys that coerce
-        // to one value merge, as they did through encode
+        // to one value merge, as they do through encode
         ({ case m: Map[_, _] =>
-             ArrayBasedMapData(m.map { case (a, b) =>
-               (if (a == null) null else k(a)) -> (if (b == null) null else x(b)) },
-               identity, identity)
+             ArrayBasedMapData(m.map { case (a, b) => k(a) -> x(b) }, identity, identity)
            case v => other(v) })
       case _ => other
     }
@@ -389,10 +387,11 @@ object SchemaCodec {
   }
 
   /** `v` under `dt` through [[encode]] and the converter Spark applies to
-    * a `dt` field of an external Row: the old per-record path, kept for
-    * the values the inline writers leave to it. For a primitive type that
-    * converter casts (and unwraps an Option), where Spark's top-level one
-    * passes the value through, so it is reached through a one-field row. */
+    * a `dt` field of an external Row, for the values the inline writers
+    * leave to it (an Option, a java.time value, an Array for an array
+    * type). For a primitive type that converter casts (and unwraps an
+    * Option), where Spark's top-level one passes the value through, so it
+    * is reached through a one-field row. */
   private def converted(dt: DataType): Writer = {
     val conv: Any => Any = dt match {
       case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |

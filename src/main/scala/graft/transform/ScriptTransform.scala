@@ -184,23 +184,12 @@ object ScriptTransform {
                 emitter.emitError(code, s"${e.getClass.getSimpleName}: ${e.getMessage}", record)
             }
           }
-        new Iterator[InternalRow] {
-          private var pos = 0
-          override def hasNext: Boolean = {
-            while (pos == buf.length && irs.hasNext) {
-              buf.clear()
-              pos = 0
-              record.row = irs.next()
-              runRecord()
-            }
-            pos < buf.length
-          }
-          // the projection reuses one UnsafeRow
-          override def next(): InternalRow = {
-            if (!hasNext) throw new NoSuchElementException
-            pos += 1
-            toUnsafe(buf(pos - 1))
-          }
+        irs.flatMap { ir =>
+          buf.clear()
+          record.row = ir
+          runRecord()
+          // lazy: the projection reuses one UnsafeRow
+          buf.iterator.map(toUnsafe)
         }
       }
     }
